@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * Resumable TWICE over: `--artifact-dir` makes the expensive stages
-  * restartable (`_COMMITTED`-marked pair/label parquet — a run that dies
-  * in clustering resumes from pairs, see [[DedupOps.dedupCorpus]]), and
+  * restartable (`_COMMITTED`-marked `pairs` = clustering edges, then
+  * `labels` — a run that dies in clustering resumes from pairs, see
+  * [[DedupOps.dedupCorpus]]), and
   * the final survivor write itself is commit-marked, so a re-launch after
   * success is a no-op that just reports. `--checkpoint-dir` selects
   * reliable (HDFS/object-store) checkpoints for the label-propagation

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -284,6 +285,8 @@ object DedupOps {
     * The cost of this shape is signature work per ROW (not per rep) in
     * pass 1 and a second corpus scan in pass 3 — map-side compute traded
     * for exchange bytes, the right trade at 100 TB.
+    * Only this public pair list expands the verified REPRESENTATIVE pairs
+    * to id pairs (quadratic in group size); [[dedupCorpus]] does not.
     *
     * The returned (small, pairs-only) frame is persisted and materialized;
     * call `result.unpersist()` when done with it.
@@ -292,6 +295,35 @@ object DedupOps {
                       threshold: Double = 0.8, k: Int = 3,
                       numHashes: Int = 64, bands: Int = 16,
                       maxBucket: Int = Int.MaxValue): DataFrame = {
+    val (repPairs, byRep, release) =
+      minhashRepPairs(df, idCol, textCol, threshold, k, numHashes, bands, maxBucket)
+    // within-group pairs are exact duplicates: jaccard 1 whenever the
+    // shingle set is non-empty. Pre-filtering byRep to duplicate groups
+    // makes the self-join quadratic only in the DUPLICATE members, never
+    // the corpus-sized (id → rep) map.
+    val within = withinGroupPairs(dupMembers(byRep), carry = Seq("nsh"))
+      .select(col("id_a"), col("id_b"), col("nsh").as("inter"), col("nsh").as("union"),
+        lit(1.0).as("jaccard"))
+    val expanded = expandCross(repPairs, byRep, Seq("inter", "union", "jaccard"))
+      .unionByName(within)
+
+    // Materialize into a pairs-only cache, then release the intermediates.
+    // The returned (small) frame owns its own cache; callers release it
+    // with result.unpersist() when done.
+    val result = expanded.persist(StorageLevel.MEMORY_AND_DISK)
+    result.count()
+    release()
+    result
+  }
+
+  /** Passes 1-3 of [[minhashNearDups]]: the verified representative pairs
+    * `(id_a < id_b, inter, union, jaccard)` (lazy), the persisted
+    * `(id, rep, gsz, nsh)` map, and a hook that frees the caches and logs
+    * the bucket guard's skips once a consumer of the pairs has run.
+    */
+  private def minhashRepPairs(df: DataFrame, idCol: String, textCol: String,
+                              threshold: Double, k: Int, numHashes: Int, bands: Int,
+                              maxBucket: Int): (DataFrame, DataFrame, () => Unit) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = df.sparkSession
     val skipped = spark.sparkContext
@@ -300,10 +332,10 @@ object DedupOps {
     val repAgg = minhashRepAgg(df, idCol, textCol, k, numHashes, bands)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // (id → rep) is consumed four times by the pair expansion — cache the
+    // (id → rep) is consumed several times by the consumers — cache the
     // tiny id-pair map instead of recomputing its corpus-scan lineage. The
     // groups side re-derives only the fingerprint (cheap md5 scan). gsz and
-    // nsh ride along so the within-group stage below needs NO further join
+    // nsh ride along so the within-group consumers need NO further join
     // against repAgg and can pre-filter to duplicate groups only.
     val groups = df.select(col(idCol).as("id"), TextOps.fingerprint(col(textCol)).as("fp"))
     val byRep = groups
@@ -342,35 +374,40 @@ object DedupOps {
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "inter", "union", "jaccard")
 
-    // within-group pairs are exact duplicates: jaccard 1 whenever the
-    // shingle set is non-empty. Pre-filtering byRep to duplicate groups
-    // (gsz > 1, nsh > 0) makes the self-join quadratic only in the
-    // DUPLICATE members, never the corpus-sized (id → rep) map — at scale
-    // the unfiltered self-join would shuffle the whole map twice; it also
-    // removes the old join back against repAgg for nsh.
-    val dupMembers = byRep.filter(col("gsz") > 1 && col("nsh") > 0)
-    val within = withinGroupPairs(dupMembers, carry = Seq("nsh"))
-      .select(col("id_a"), col("id_b"), col("nsh").as("inter"), col("nsh").as("union"),
-        lit(1.0).as("jaccard"))
-    val expanded = expandCross(repPairs, byRep, Seq("inter", "union", "jaccard"))
-      .unionByName(within)
-
-    // Materialize into a pairs-only cache, then release the intermediates.
-    // The returned (small) frame owns its own cache; callers release it
-    // with result.unpersist() when done.
-    val result = expanded.persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    repAgg.unpersist(blocking = false)
-    byRep.unpersist(blocking = false)
-    candidates.unpersist(blocking = false)
-    sets.unpersist(blocking = false)
-    val nSkipped = skippedPairCount(skipped)
-    if (nSkipped > 0)
-      org.slf4j.LoggerFactory.getLogger("graft.dedup").warn(
-        s"minhashNearDups: bucket guard (maxBucket=$maxBucket) skipped up to " +
-          s"$nSkipped candidate pairs (pairs may survive via other buckets)")
-    result
+    (repPairs, byRep, () => {
+      repAgg.unpersist(blocking = false)
+      byRep.unpersist(blocking = false)
+      candidates.unpersist(blocking = false)
+      sets.unpersist(blocking = false)
+      val nSkipped = skippedPairCount(skipped)
+      if (nSkipped > 0)
+        org.slf4j.LoggerFactory.getLogger("graft.dedup").warn(
+          s"minhashNearDups: bucket guard (maxBucket=$maxBucket) skipped up to " +
+            s"$nSkipped candidate pairs (pairs may survive via other buckets)")
+    })
   }
+
+  /** The clustering edge list of [[dedupCorpus]]: the verified rep pairs
+    * plus one star edge `(rep, id)` per other member of an exact-duplicate
+    * group — g − 1 edges per group, not [[minhashNearDups]]'s g(g − 1)/2,
+    * with the same components (a star through the min-id rep reaches the
+    * same min id as the clique). Persisted; the hook releases everything.
+    */
+  private[graft] def minhashClusterEdges(df: DataFrame, idCol: String, textCol: String,
+                                         threshold: Double, k: Int, numHashes: Int,
+                                         bands: Int, maxBucket: Int): (DataFrame, () => Unit) = {
+    val (repPairs, byRep, release) =
+      minhashRepPairs(df, idCol, textCol, threshold, k, numHashes, bands, maxBucket)
+    val star = dupMembers(byRep).filter(col("id") =!= col("rep"))
+      .select(col("rep").as("id_a"), col("id").as("id_b"))
+    val edges = repPairs.select("id_a", "id_b").unionByName(star)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    (edges, () => { release(); edges.unpersist(blocking = false) })
+  }
+
+  /** Exact-duplicate members; empty shingle sets stay unclustered. */
+  private def dupMembers(byRep: DataFrame): DataFrame =
+    byRep.filter(col("gsz") > 1 && col("nsh") > 0)
 
   /** Map-side pass 1 + per-fingerprint collapse for [[minhashNearDups]]:
     * (fp, rep, band hashes, distinct-shingle count) per distinct document.
@@ -600,22 +637,21 @@ object DedupOps {
   }
 
   /** End-to-end dedup "keeper" composition — the form a pretraining
-    * pipeline actually consumes: near-dup pairs → connected components →
-    * per-cluster min-id keeper → the filtered survivor corpus (all of
-    * `df`'s columns, minus every non-keeper cluster member).
+    * pipeline actually consumes: near-dup edges → connected components →
+    * per-cluster keeper → the filtered survivor corpus (all of `df`'s
+    * columns, minus every non-keeper cluster member).
     *
-    * Scale shape: the pair and clustering stages are the shuffle-minimal
-    * [[minhashNearDups]] / [[connectedComponents]] plans; the final filter
+    * Scale shape: clustering runs on the factorized edge list of
+    * [[minhashClusterEdges]] (linear in exact-group size; the same
+    * components as [[minhashNearDups]]'s expanded pairs). The final filter
     * is an anti-join of the corpus against the LOSER id set (cluster
-    * members that are not their cluster's min id) — losers are a small
-    * fraction of the corpus by construction (only near-duplicate docs),
-    * and the loser frame is two longs per row, so AQE turns the anti-join
-    * into a broadcast for any realistic dup rate; the corpus itself
-    * streams map-side and its text never crosses an exchange.
+    * members that are not their cluster's keeper) — a small, ids-only
+    * frame by construction, so it is broadcast for any realistic dup rate;
+    * the corpus itself streams map-side and its text never crosses an
+    * exchange.
     *
-    * Clustering runs `strict = true`: silently dropping *keepers* because
-    * label propagation had not converged would corrupt the corpus, so an
-    * unconverged graph fails fast instead.
+    * Clustering is strict: an unconverged labeling could drop *keepers*,
+    * so it fails fast instead.
     *
     * `df` is consumed several times (signature pass, fingerprint-group
     * join, candidate-text re-read, final anti-join): when its lineage is
@@ -635,12 +671,16 @@ object DedupOps {
     * then DELETED here — callers get a clean survivor frame and no leaked
     * per-invocation cc-<uuid> directory.
     *
-    * With `artifactDir` set the run is RESTARTABLE: the pair list and the
-    * cluster labels are persisted as `_COMMITTED`-marked parquet stages
-    * under it, and a re-run resumes from the last committed stage (a died
-    * clustering pass resumes from pairs; a died anti-join from labels)
-    * instead of re-running the corpus signature pass. The caller owns the
-    * directory's lifecycle — delete it to force a fresh run.
+    * Every run takes the stage sequence `pairs` (the clustering edge list)
+    * → `labels` (`(id, cluster)`), kept in memory by default. With
+    * `artifactDir` set the run is RESTARTABLE: each stage is written as
+    * `_COMMITTED`-marked parquet under it and read back, and a re-run
+    * resumes from the last committed stage (a died clustering pass from
+    * pairs, a died anti-join from labels) instead of re-running the corpus
+    * signature pass. A `pairs` stage of fully expanded id pairs (as older
+    * versions wrote) has the same components, so it resumes to the same
+    * survivors. The caller owns the directory — delete it to force a
+    * fresh run.
     */
   def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
                   threshold: Double = 0.8, k: Int = 3,
@@ -649,179 +689,129 @@ object DedupOps {
                   checkpointDir: Option[String] = None,
                   keepBy: Option[Column] = None,
                   artifactDir: Option[String] = None): DataFrame = {
+    import org.apache.hadoop.fs.Path
     val spark = df.sparkSession
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    // star edges match the expanded pairs only if jaccard 0 never verifies
+    require(threshold > 0, s"dedupCorpus needs threshold > 0, got $threshold")
     // resolve the keeper-policy expression BEFORE any heavy work: a typo'd
     // column (DedupMain --keep-by col:<typo>) must fail here, not after
     // hours of signature + clustering jobs (analysis only — no job runs)
     keepBy.foreach(c => df.select(c).queryExecution.analyzed)
-    def requireConverged(cc: CcResult): Unit =
-      if (!cc.converged) {
-        // strict: silently dropping keepers because label propagation had
-        // not converged would corrupt the corpus — fail fast, but clean up
-        // first (the status call SUCCEEDED, so its own finally kept the
-        // final round's reliable files; nothing will consume them now)
-        cc.checkpointPath.foreach { p =>
-          try {
-            import org.apache.hadoop.fs.Path
-            val hp = new Path(p)
-            hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-          } catch { case scala.util.control.NonFatal(_) => () }
-        }
-        throw new IllegalArgumentException(
-          s"dedupCorpus: connected components did not converge in maxIter=$maxIter " +
-            "rounds — raise maxIter (an unconverged labeling could drop keepers)")
+    val artifacts = artifactDir.map { dir =>
+      val fs = new Path(dir).getFileSystem(hadoopConf)
+      // Parameter sidecar: committed stages embody the parameters they
+      // were produced with — resuming them under DIFFERENT dedup
+      // parameters would silently return stale results. The first run
+      // records the parameters; every later run must match or fail fast.
+      // keepBy is deliberately NOT recorded: it only affects the post-label
+      // keeper derivation, so the same stages serve any policy.
+      val params = s"""{"idCol":"$idCol","textCol":"$textCol","threshold":$threshold,""" +
+        s""""k":$k,"numHashes":$numHashes,"bands":$bands,"maxBucket":$maxBucket}"""
+      val paramsPath = new Path(s"$dir/params.json")
+      if (fs.exists(paramsPath)) {
+        val in = fs.open(paramsPath)
+        val prior = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+        require(prior == params,
+          s"dedupCorpus: artifactDir $dir was produced with different parameters " +
+            s"($prior vs $params) — resuming would return stale results; delete the " +
+            "directory to re-run under the new parameters")
+      } else if (Seq("pairs", "labels").exists(st => fs.exists(new Path(s"$dir/$st/$CommitMarker")))) {
+        sys.error(s"dedupCorpus: artifactDir $dir has committed stages but no " +
+          "params.json — cannot prove parameter compatibility; delete the directory")
+      } else {
+        val out = fs.create(paramsPath, true)
+        out.write(params.getBytes("UTF-8"))
+        out.close()
       }
-    def freshLabels(): CcResult = {
-      val pairs = minhashNearDups(df, idCol, textCol, threshold, k, numHashes, bands, maxBucket)
-      // the pairs cache is released on BOTH paths (a non-convergence throw
-      // must not strand the persisted pair frame for the session)
-      try {
-        val cc = connectedComponentsStatus(pairs.select("id_a", "id_b"), maxIter, checkpointDir)
-        requireConverged(cc)
-        cc
-      } finally pairs.unpersist(blocking = false)
+      (dir, fs)
     }
-    // `artifactDir` makes the run RESTARTABLE (ExtractJob's bucket-commit
-    // idiom): the pair list and the cluster labels are written as parquet
-    // stages, each marked `_COMMITTED` only after its producing job
-    // finished. A 100 TB dedup that dies during clustering resumes from
-    // the committed pairs instead of re-running the signature pass; one
-    // that dies after labeling resumes from the labels. An unmarked stage
-    // dir is a partial write — overwritten, never trusted.
-    val cc: CcResult = artifactDir match {
-      case None => freshLabels()
-      case Some(dir) =>
-        import org.apache.hadoop.fs.Path
-        val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def committed(stage: String) = fs.exists(new Path(s"$dir/$stage/$CommitMarker"))
-        def mark(stage: String) = fs.create(new Path(s"$dir/$stage/$CommitMarker"), true).close()
-        // Parameter sidecar: committed stages embody the parameters they
-        // were produced with — resuming them under DIFFERENT dedup
-        // parameters would silently return stale results (the worst
-        // failure mode a resume path can have). The first run records the
-        // parameters; every later run must match or fail fast. keepBy is
-        // deliberately NOT recorded: it only affects the post-label keeper
-        // derivation, so the same stages legitimately serve any policy.
-        val params = s"""{"idCol":"$idCol","textCol":"$textCol","threshold":$threshold,""" +
-          s""""k":$k,"numHashes":$numHashes,"bands":$bands,"maxBucket":$maxBucket}"""
-        val paramsPath = new Path(s"$dir/params.json")
-        if (fs.exists(paramsPath)) {
-          val in = fs.open(paramsPath)
-          val prior = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          require(prior == params,
-            s"dedupCorpus: artifactDir $dir was produced with different parameters " +
-              s"($prior vs $params) — resuming would return stale results; delete the " +
-              "directory to re-run under the new parameters")
-        } else if (committed("pairs") || committed("labels")) {
-          sys.error(s"dedupCorpus: artifactDir $dir has committed stages but no " +
-            "params.json — cannot prove parameter compatibility; delete the directory")
-        } else {
-          val out = fs.create(paramsPath, true)
-          out.write(params.getBytes("UTF-8"))
-          out.close()
+    // One stage of the sequence: the computed frame itself, or with
+    // artifactDir its committed parquet (ExtractJob's bucket-commit idiom:
+    // the marker is written only after the producing job finished; an
+    // unmarked stage dir is a partial write — overwritten, never trusted).
+    def stage(name: String)(compute: => DataFrame): DataFrame = artifacts match {
+      case None => compute
+      case Some((dir, fs)) =>
+        val marker = new Path(s"$dir/$name/$CommitMarker")
+        if (!fs.exists(marker)) {
+          compute.write.mode("overwrite").parquet(s"$dir/$name")
+          fs.create(marker, true).close()
         }
-        if (!committed("labels")) {
-          if (!committed("pairs")) {
-            val pairs = minhashNearDups(df, idCol, textCol, threshold, k,
-              numHashes, bands, maxBucket)
-            pairs.select("id_a", "id_b").write.mode("overwrite").parquet(s"$dir/pairs")
-            mark("pairs")
-            pairs.unpersist(blocking = false)
-          }
-          // underscore-prefixed files (the marker) are invisible to the scan
-          val cc0 = connectedComponentsStatus(
-            spark.read.parquet(s"$dir/pairs"), maxIter, checkpointDir)
-          requireConverged(cc0) // deletes the stranded cc files on throw
-          cc0.labels.write.mode("overwrite").parquet(s"$dir/labels")
-          mark("labels")
-          // the labels are durable parquet now — the round checkpoint (if
-          // reliable) has nothing left to back
-          cc0.checkpointPath.foreach { p =>
-            try fs.delete(new Path(p), true)
-            catch { case scala.util.control.NonFatal(_) => () }
-          }
+        spark.read.parquet(s"$dir/$name") // the _-prefixed marker is not scanned
+    }
+    var releaseEdges: () => Unit = () => ()
+    var ccPath: Option[String] = None
+    val losers = try {
+      val labels = stage("labels") {
+        val edges = stage("pairs") {
+          val (e, release) = minhashClusterEdges(df, idCol, textCol, threshold, k,
+            numHashes, bands, maxBucket)
+          releaseEdges = release
+          e
         }
-        CcResult(spark.read.parquet(s"$dir/labels"), converged = true, iterations = 0)
-    }
-    val losersLazy = keepBy match {
-      case None =>
-        // min-id policy: the cluster label IS the min reachable id
-        cc.labels.filter(col("cluster") =!= col("id"))
-          .select(col("id").as("__loser_id"))
-      case Some(keyCol) =>
-        val members = cc.labels
-          .join(df.select(col(idCol).as("id"), keyCol.as("__kv")), "id")
-        val idIsNum = df.schema(idCol).dataType
-          .isInstanceOf[org.apache.spark.sql.types.NumericType]
-        val keepers =
-          if (idIsNum)
-            // single-aggregate argmax (one exchange, no join back):
-            // lexicographic max of (key, -id) picks the max key with ties
-            // broken by MIN id. A cluster whose key is null for EVERY
-            // member falls back to the min-id policy (a null struct field
-            // sorts before non-null, equal nulls fall through to the id
-            // leg) and a mixed cluster ignores its null members — exactly
-            // the previous two-aggregate policy. (-id is exact for any
-            // realistic id; only Long.MinValue itself would overflow.)
-            members.groupBy("cluster")
-              .agg(max(struct(col("__kv"),
-                (-col("id").cast("long")).as("nid"))).as("__best"))
-              .select(col("cluster"), (-col("__best.nid")).as("__keeper"))
-          else {
-            // generic-id fallback: two-level agg, no window — per-cluster
-            // max key, then the min id among members attaining it.
-            // Null-safe equality (<=>) on the max: an all-null-key cluster
-            // would otherwise produce no keeper at all (null === null is
-            // null) and silently keep every duplicate; with <=> it falls
-            // back to the min-id policy. Mixed clusters are unaffected:
-            // max() skips nulls, and null <=> non-null is false.
-            val best = members.groupBy("cluster").agg(max(col("__kv")).as("__mx"))
-            members.join(best, "cluster")
-              .filter(col("__kv") <=> col("__mx"))
-              .groupBy("cluster").agg(min(col("id")).as("__keeper"))
-          }
-        cc.labels.join(keepers, "cluster")
-          .filter(col("id") =!= col("__keeper"))
-          .select(col("id").as("__loser_id"))
-    }
-    // The loser set is materialized ONCE. That (a) detaches it from the
-    // reliable cc checkpoint files so they can be deleted, and (b) prices
-    // the side for an EXPLICIT guarded broadcast: under the limit the
-    // survivor anti-join needs no corpus exchange at all — relying on
-    // AQE's runtime SMJ->BHJ conversion alone still writes the corpus-side
-    // shuffle files first (both leaf stages materialize before the join
-    // re-plans), which at 100 TB is the whole cost. Above the limit (a
-    // pathological majority-duplicate corpus) the join runs un-hinted and
-    // completes as a shuffle join.
-    //
-    // Durability matches the caller's intent — keyed off the
-    // `checkpointDir` PARAMETER (the caller's executor-loss-recovery
-    // opt-in), not off whether this particular invocation happened to take
-    // the reliable-cc path (with artifactDir set the labels come from
-    // parquet and cc.checkpointPath is None, but the caller's durability
-    // intent still stands). Without checkpointDir the losers are an eager
-    // localCheckpoint (executor blocks, GC-freed — block loss fails the
-    // job, single-box semantics). With it, the losers go to durable
-    // parquet under `$checkpointDir/losers-<uuid>` BEFORE any cc round
-    // files are deleted, so an executor lost during the (potentially
-    // hours-long) survivor anti-join cannot kill the lineage. The
-    // (ids-only, bounded) losers dir lives under the caller-owned
-    // checkpoint directory and follows its retention policy.
-    val losers = checkpointDir match {
-      case None => losersLazy.localCheckpoint(eager = true)
-      case Some(cd) =>
-        val durable = s"$cd/losers-${java.util.UUID.randomUUID()}"
-        losersLazy.write.mode("overwrite").parquet(durable)
-        org.slf4j.LoggerFactory.getLogger("graft.dedup")
-          .info(s"dedupCorpus: loser id set persisted at $durable (caller-owned retention)")
-        spark.read.parquet(durable)
-    }
-    cc.checkpointPath.foreach { p =>
-      try {
-        import org.apache.hadoop.fs.Path
-        val hp = new Path(p)
-        hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-      } catch { case scala.util.control.NonFatal(_) => () } // best-effort
+        val cc = connectedComponentsStatus(edges, maxIter, checkpointDir)
+        ccPath = cc.checkpointPath
+        if (!cc.converged)
+          throw new IllegalArgumentException(
+            s"dedupCorpus: connected components did not converge in maxIter=$maxIter " +
+              "rounds — raise maxIter (an unconverged labeling could drop keepers)")
+        cc.labels
+      }
+      val losersLazy = keepBy match {
+        case None =>
+          // min-id policy: the cluster label IS the min reachable id
+          labels.filter(col("cluster") =!= col("id")).select(col("id").as("__loser_id"))
+        case Some(keyCol) =>
+          // per-cluster max key, then the min id among members attaining
+          // it. Null-safe equality (<=>) on the max: an all-null-key cluster
+          // would otherwise produce no keeper at all (null === null is null)
+          // and silently keep every duplicate; with <=> it falls back to the
+          // min-id policy. Mixed clusters are unaffected: max() skips nulls,
+          // and null <=> non-null is false.
+          val members = labels.join(df.select(col(idCol).as("id"), keyCol.as("__kv")), "id")
+          val best = members.groupBy("cluster").agg(max(col("__kv")).as("__mx"))
+          val keepers = members.join(best, "cluster")
+            .filter(col("__kv") <=> col("__mx"))
+            .groupBy("cluster").agg(min(col("id")).as("__keeper"))
+          labels.join(keepers, "cluster").filter(col("id") =!= col("__keeper"))
+            .select(col("id").as("__loser_id"))
+      }
+      // The loser set is materialized ONCE. That (a) detaches it from the
+      // labels, so the edges and the cc checkpoint files can be released,
+      // and (b) prices the side for an EXPLICIT guarded broadcast: under the
+      // limit the survivor anti-join needs no corpus exchange at all —
+      // relying on AQE's runtime SMJ->BHJ conversion alone still writes the
+      // corpus-side shuffle files first, which at 100 TB is the whole cost.
+      // Above the limit (a pathological majority-duplicate corpus) the join
+      // runs un-hinted and completes as a shuffle join.
+      //
+      // Durability follows the caller's `checkpointDir` opt-in. Without it
+      // the losers are an eager localCheckpoint (executor blocks, GC-freed
+      // — single-box semantics). With it they go to durable parquet under
+      // the caller-owned `$checkpointDir/losers-<uuid>` BEFORE any cc round
+      // files are deleted, so an executor lost during the (potentially
+      // hours-long) survivor anti-join cannot kill the lineage.
+      checkpointDir match {
+        case None => losersLazy.localCheckpoint(eager = true)
+        case Some(cd) =>
+          val durable = s"$cd/losers-${java.util.UUID.randomUUID()}"
+          losersLazy.write.mode("overwrite").parquet(durable)
+          org.slf4j.LoggerFactory.getLogger("graft.dedup")
+            .info(s"dedupCorpus: loser id set persisted at $durable (caller-owned retention)")
+          spark.read.parquet(durable)
+      }
+    } finally {
+      // the losers are materialized (or the run failed): nothing reads the
+      // edges, the front half's caches or the final round's reliable cc
+      // files any more (Spark never deletes checkpoints itself)
+      releaseEdges()
+      ccPath.foreach { p =>
+        try {
+          val hp = new Path(p)
+          hp.getFileSystem(hadoopConf).delete(hp, true)
+        } catch { case scala.util.control.NonFatal(_) => () } // best-effort
+      }
     }
     val nLosers = losers.count()
     org.slf4j.LoggerFactory.getLogger("graft.dedup")
@@ -1218,13 +1208,9 @@ object DedupOps {
     // candidate, and the operator would return an EMPTY pair set — a
     // silent wrong answer (ADVICE r5)
     Seq(idCol, sigCol).foreach { c =>
-      require(Seq("byte", "short", "int", "bigint")
-          .contains(sigs.schema(c).dataType.simpleString),
-        s"hammingNearDups needs integral '$c'; got " +
-          sigs.schema(c).dataType.simpleString)
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(sigs.schema(c).dataType),
+        s"hammingNearDups needs integral '$c'; got " + sigs.schema(c).dataType.simpleString)
     }
-    val width = 64 / nBands
-    val mask = if (width == 64) -1L else (1L << width) - 1
     val spark = sigs.sparkSession
     val skipped = spark.sparkContext
       .collectionAccumulator[(Int, Long, Long)]("graft.dedup.hamming.skippedBuckets")

@@ -345,4 +345,16 @@ class MediaCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException](
       DedupOps.hammingNearDups(sigs, "id", "sig", nBands = 7))
   }
+
+  test("hammingNearDups: tinyint and smallint columns are integral, strings are not") {
+    // Spark names these types tinyint/smallint, not byte/short
+    val sigs = spark.createDataFrame(Seq((1.toByte, 7.toShort), (2.toByte, 6.toShort),
+        (3.toByte, -1.toShort)))
+      .toDF("id", "sig")
+    val pairs = DedupOps.hammingNearDups(sigs, "id", "sig")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(pairs == Set((1L, 2L, 1)), pairs.toString)
+    intercept[IllegalArgumentException](
+      DedupOps.hammingNearDups(sigs.selectExpr("cast(id as string) as id", "sig"), "id", "sig"))
+  }
 }

@@ -37,6 +37,64 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.createDataFrame(rows ++ planted).toDF("doc_id", "text")
   }
 
+  /** Seeded corpus of exact-duplicate groups chained by near-duplicates
+    * (A×5 ~ B×4 ~ C×3 ~ D, each step four words apart; A and C, B and D
+    * are below 0.7), an unlinked exact group E×3, four copies of a doc
+    * shorter than k = 3 words (empty shingle set) plus one more short doc,
+    * and 30 singletons; ids are a shuffled range.
+    */
+  private def chainedGroupsCorpus(seed: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    def words(n: Int) = Vector.fill(n)(s"w${rnd.nextInt(100000)}")
+    def replace(doc: Vector[String], from: Int, n: Int) = doc.patch(from, words(n), n)
+    val a = words(40)
+    val b = replace(a, 36, 4)
+    val c = replace(b, 0, 4)
+    val d = replace(c, 18, 3)
+    val e = words(40)
+    val texts = Seq.fill(5)(a) ++ Seq.fill(4)(b) ++ Seq.fill(3)(c) ++ Seq(d) ++ Seq.fill(3)(e) ++
+      Seq.fill(4)(Vector("tiny", "doc")) ++ Seq(Vector("tiny")) ++ Seq.fill(30)(words(40))
+    val ids = rnd.shuffle((0 until texts.size).map(_.toLong))
+    spark.createDataFrame(ids.zip(texts.map(_.mkString(" ")))).toDF("doc_id", "text")
+  }
+
+  private def labelSet(cc: DataFrame): Set[(Long, Long)] =
+    cc.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("dedupCorpus edge list: components equal those of the expanded minhash pairs") {
+    def edgeList(docs: DataFrame, threshold: Double) = {
+      val (edges, release) = DedupOps.minhashClusterEdges(docs, "doc_id", "text",
+        threshold, k = 3, numHashes = 64, bands = 16, maxBucket = Int.MaxValue)
+      try edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet finally release()
+    }
+    Seq(1, 2, 3).foreach { seed =>
+      val docs = chainedGroupsCorpus(seed)
+      val pairs = DedupOps.minhashNearDups(docs, "doc_id", "text", threshold = 0.7)
+      val expected = labelSet(DedupOps.connectedComponents(pairs.select("id_a", "id_b")))
+      pairs.unpersist()
+      val edges = spark.createDataFrame(edgeList(docs, 0.7).toSeq).toDF("id_a", "id_b")
+      val got = labelSet(DedupOps.connectedComponents(edges))
+      assert(got == expected, s"seed $seed: missing=${expected -- got} extra=${got -- expected}")
+      // the corpus has the planted shape: the A-B-C-D chain is one cluster,
+      // E another, and the short docs cluster with nothing
+      assert(expected.groupBy(_._2).values.map(_.size).toSeq.sorted == Seq(3, 13),
+        s"seed $seed: ${expected.groupBy(_._2)}")
+    }
+
+    // one exact group of g members: g - 1 star edges, not g(g - 1)/2 pairs
+    val g = 30
+    val rnd = new scala.util.Random(7)
+    def text() = Vector.fill(20)(s"w${rnd.nextInt(100000)}").mkString(" ")
+    val footer = text()
+    val docs = spark.createDataFrame((0 until g).map(i => (i.toLong * 3, footer)) ++
+        (0 until 10).map(i => (1000L + i, text())))
+      .toDF("doc_id", "text")
+    assert(edgeList(docs, 0.8) == (1 until g).map(i => (0L, i.toLong * 3)).toSet)
+    val pairs = DedupOps.minhashNearDups(docs, "doc_id", "text", threshold = 0.8)
+    assert(pairs.count() == g * (g - 1) / 2)
+    pairs.unpersist()
+  }
+
   test("asofJoin: inclusive at equal ts, null before first checkpoint, whole-row fill") {
     import java.sql.Timestamp
     def ts(s: Long) = new Timestamp(1700000000000L + s * 1000)
@@ -177,11 +235,11 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dedupCorpus keepBy: generic string-id path applies the identical policy") {
-    // string ids take the two-aggregate fallback (the numeric single-agg
-    // argmax can't negate the id); same clusters as the numeric tests:
-    // {a1,a2} both null -> min-id keeper a1; {b1,b2} mixed -> non-null
-    // score wins (b2); {c1} untouched; {d5,d9} tie on score -> min id d5
-    val df = spark.createDataFrame(Seq(
+    // every id type takes the same two-aggregate policy; same clusters as
+    // the numeric tests: {a1,a2} both null -> min-id keeper a1; {b1,b2}
+    // mixed -> non-null score wins (b2); {c1} untouched; {d5,d9} tie on
+    // score -> min id d5
+    val byString = spark.createDataFrame(Seq(
       ("a1", "aa bb cc dd ee", null.asInstanceOf[java.lang.Long]),
       ("a2", "aa bb cc dd ee", null.asInstanceOf[java.lang.Long]),
       ("b1", "ff gg hh ii jj", null.asInstanceOf[java.lang.Long]),
@@ -190,10 +248,17 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("d5", "kk ll mm nn oo", java.lang.Long.valueOf(3L)),
       ("d9", "kk ll mm nn oo", java.lang.Long.valueOf(3L))))
       .toDF("doc_id", "text", "score")
-    val survivors = DedupOps.dedupCorpus(df, "doc_id", "text", threshold = 0.8,
+    def survivors(df: DataFrame) = DedupOps.dedupCorpus(df, "doc_id", "text", threshold = 0.8,
         keepBy = Some(col("score")))
-      .select("doc_id").collect().map(_.getString(0)).toSet
-    assert(survivors == Set("a1", "b2", "c1", "d5"), survivors.toString)
+      .select(col("doc_id").cast("string")).collect().map(_.getString(0)).toSet
+    assert(survivors(byString) == Set("a1", "b2", "c1", "d5"))
+    // fractional ids (a1 -> 1.5, b2 -> 12.5, ...): a keeper derived through
+    // a long cast would match no member and drop whole clusters
+    val fractional = expr("(ascii(doc_id) - 97) * 10 + cast(substr(doc_id, 2) as int) + 0.5")
+    Seq("double", "decimal(10,1)").foreach { t =>
+      assert(survivors(byString.withColumn("doc_id", fractional.cast(t))) ==
+        Set("1.5", "12.5", "21.5", "35.5"), t)
+    }
   }
 
   test("dedupCorpus artifactDir: stages commit, resume consumes them, partials are repaired") {
@@ -246,6 +311,24 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         artifactDir = Some(dir), keepBy = Some(length(col("text"))))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(byLen == (30L until 120L).toSet ++ (0 until 30).map(i => 1000L + i))
+
+    // a committed pairs stage in the older format — every expanded id pair,
+    // within exact groups too — has the same components: its resume returns
+    // the fresh run's survivors
+    val grouped = chainedGroupsCorpus(4)
+    val oldDir = Files.createTempDirectory("graft_dc_art_old").toString
+    def groupedSurvivors(art: Option[String]) = DedupOps.dedupCorpus(grouped, "doc_id", "text",
+        threshold = 0.7, artifactDir = art)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val fresh = groupedSurvivors(None)
+    assert(groupedSurvivors(Some(oldDir)) == fresh)
+    rmTree(s"$oldDir/labels")
+    val expanded = DedupOps.minhashNearDups(grouped, "doc_id", "text", threshold = 0.7)
+    assert(expanded.count() > spark.read.parquet(s"$oldDir/pairs").count())
+    expanded.select("id_a", "id_b").write.mode("overwrite").parquet(s"$oldDir/pairs")
+    expanded.unpersist()
+    new java.io.File(s"$oldDir/pairs/_COMMITTED").createNewFile()
+    assert(groupedSurvivors(Some(oldDir)) == fresh, "expanded-pairs stage must resume identically")
   }
 
   test("dedupCorpus keepBy: longest member survives per cluster, min id on ties") {
@@ -276,6 +359,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(survivors == (0L until 120L).toSet,
       s"unexpected survivor set: missing=${(0L until 120L).toSet -- survivors} " +
         s"extra=${survivors -- (0L until 120L).toSet}")
+    // at threshold 0 every candidate verifies, empty shingle sets included
+    intercept[IllegalArgumentException](DedupOps.dedupCorpus(docsDf, "doc_id", "text", threshold = 0))
   }
 
   test("contamination: guard falls back to a shuffle join with identical results") {
