@@ -391,7 +391,8 @@ object DedupOps {
     * plus one star edge `(rep, id)` per other member of an exact-duplicate
     * group — g − 1 edges per group, not [[minhashNearDups]]'s g(g − 1)/2,
     * with the same components (a star through the min-id rep reaches the
-    * same min id as the clique). Persisted; the hook releases everything.
+    * same min id as the clique). Lazy over the front half's caches: the
+    * hook releases them once the edges are materialized.
     */
   private[graft] def minhashClusterEdges(df: DataFrame, idCol: String, textCol: String,
                                          threshold: Double, k: Int, numHashes: Int,
@@ -400,9 +401,7 @@ object DedupOps {
       minhashRepPairs(df, idCol, textCol, threshold, k, numHashes, bands, maxBucket)
     val star = dupMembers(byRep).filter(col("id") =!= col("rep"))
       .select(col("rep").as("id_a"), col("id").as("id_b"))
-    val edges = repPairs.select("id_a", "id_b").unionByName(star)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (edges, () => { release(); edges.unpersist(blocking = false) })
+    (repPairs.select("id_a", "id_b").unionByName(star), release)
   }
 
   /** Exact-duplicate members; empty shingle sets stay unclustered. */
@@ -488,10 +487,9 @@ object DedupOps {
     // off, and maxIter full label copies at 10^12-vertex scale is real
     // storage): each invocation writes under its own cc-<uuid> subdir, and
     // a superseded round's rdd dir is deleted once the next round is
-    // materialized AND the change-count that reads it has run. The FINAL
-    // round's files back the returned frame — its cc-<uuid> path is
-    // returned in CcResult.checkpointPath for the caller to delete when
-    // done with the labels.
+    // materialized and counted. The FINAL round's files back the returned
+    // frame — its cc-<uuid> path is returned in CcResult.checkpointPath for
+    // the caller to delete when done with the labels.
     //
     // CAVEAT (inherent to Spark's API): the checkpoint directory is a
     // GLOBAL SparkContext setting. It is saved and restored around this
@@ -535,6 +533,8 @@ object DedupOps {
               }.toSet
             }
             var deletable = Set.empty[String]
+            // eager: a lazy reliable checkpoint computes its rows twice, once
+            // for the change count and once more for the write
             val trunc: DataFrame => DataFrame = df => {
               val before = rddDirs()
               val out = df.checkpoint(eager = true)
@@ -547,11 +547,12 @@ object DedupOps {
           // it, up to maxIter full per-vertex label frames stay pinned in
           // executor storage until RDD GC (the BpeOps freeLocalCheckpoint
           // lesson). A superseded round is freed only after the next round
-          // is materialized AND the change-count that reads it has run.
+          // is materialized. The checkpoint is lazy: the round's change
+          // count is the job that stores it (see materializeCount).
           var prevLocal: Option[DataFrame] = None
           var supersededLocal: Option[DataFrame] = None
           val trunc: DataFrame => DataFrame = df => {
-            val out = df.localCheckpoint(eager = true)
+            val out = df.localCheckpoint(eager = false)
             supersededLocal = prevLocal
             prevLocal = Some(out)
             out
@@ -574,8 +575,8 @@ object DedupOps {
         .persist(StorageLevel.MEMORY_AND_DISK)
       edgesHandle = Some(edges) // released in finally: failure paths too
 
-      // Each round's result is checkpointed (eager): without lineage
-      // TRUNCATION the logical plan triples per iteration and Catalyst
+      // Each round's result is checkpointed: without lineage TRUNCATION
+      // the logical plan triples per iteration and Catalyst
       // analysis/optimization time grows exponentially — the classic
       // iterative-DataFrame trap (measured 41 s for a 500-vertex graph with
       // persist() alone; ~2 s with checkpointing).
@@ -586,16 +587,17 @@ object DedupOps {
       // distinct-vertices checkpoint PLUS the first join round — one
       // exchange instead of four, two fewer actions. Each round also
       // carries its own `chg` flag (did this vertex's label shrink?), so
-      // the convergence count is a filter over the just-checkpointed frame
-      // instead of a join back against the previous round (two more
-      // exchanges saved per round). Label states per round are IDENTICAL
-      // to the unfused loop; `iterations` counts the fused round as 1.
+      // the convergence count needs no join back against the previous
+      // round (two more exchanges saved per round), and no job of its own:
+      // it is the result of the job that materializes the round's
+      // checkpoint. Label states per round are IDENTICAL to the unfused
+      // loop; `iterations` counts the fused round as 1.
       var labels = truncate(edges.groupBy("src").agg(min(col("dst")).as("nmin"))
         .select(col("src").as("id"),
           least(col("src"), col("nmin")).as("label"),
           (col("nmin") < col("src")).as("chg")))
 
-      var changed = labels.filter(col("chg")).count()
+      var changed = materializeCount(labels, Some("chg"))
       var iter = 1
       while (changed > 0 && iter < maxIter) {
         val neighborMin = edges
@@ -607,7 +609,7 @@ object DedupOps {
           .select(col("id"),
             least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
             (coalesce(col("nmin"), col("label")) < col("label")).as("chg")))
-        changed = updated.filter(col("chg")).count()
+        changed = materializeCount(updated, Some("chg"))
         labels = updated
         cleanupSuperseded() // previous round's reliable checkpoint, if any
         iter += 1
@@ -634,6 +636,25 @@ object DedupOps {
         } catch { case scala.util.control.NonFatal(_) => () } // best-effort
       }
     }
+  }
+
+  /** Runs ONE job over the rows of `cp` — a checkpointed frame — and
+    * returns how many there are, or with `flag` how many have that boolean
+    * column true. A lazy `localCheckpoint` is stored by this very job, so
+    * the count costs no action of its own. The count is the job's result,
+    * taken per partition from the attempt that succeeded, over the rows the
+    * checkpoint holds; it stays exact when a task is retried. (An
+    * Observation on the checkpointed plan does not: a retry that finds the
+    * failed attempt's stored block never re-evaluates the plan.)
+    */
+  private def materializeCount(cp: DataFrame, flag: Option[String] = None): Long = {
+    val i = flag.fold(-1)(cp.schema.fieldIndex)
+    val rows = cp.queryExecution.toRdd
+    rows.sparkContext.runJob(rows, (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+      var n = 0L
+      it.foreach(r => if (i < 0 || (!r.isNullAt(i) && r.getBoolean(i))) n += 1)
+      n
+    }).sum
   }
 
   /** End-to-end dedup "keeper" composition — the form a pretraining
@@ -666,10 +687,14 @@ object DedupOps {
     * (cluster, id, key) rows — no window, so a degenerate 10^9-member
     * cluster partial-aggregates map-side instead of landing on one reducer.
     *
-    * With `checkpointDir` set, the final round's reliable-checkpoint files
+    * The edge list reaches connected components as a checkpointed leaf,
+    * not as the front half's plan (which every CC round would re-analyse):
+    * an eager `localCheckpoint`, or with `checkpointDir` set a reliable
+    * checkpoint under a per-invocation `edges-<uuid>` dir. With
+    * `checkpointDir` set, that dir and the final round's `cc-<uuid>` files
     * (which back the labels frame) are consumed into the loser id set and
     * then DELETED here — callers get a clean survivor frame and no leaked
-    * per-invocation cc-<uuid> directory.
+    * per-invocation directory.
     *
     * Every run takes the stage sequence `pairs` (the clustering edge list)
     * → `labels` (`(id, cluster)`), kept in memory by default. With
@@ -740,18 +765,41 @@ object DedupOps {
         }
         spark.read.parquet(s"$dir/$name") // the _-prefixed marker is not scanned
     }
-    var releaseEdges: () => Unit = () => ()
-    var ccPath: Option[String] = None
-    val losers = try {
+    var handedOff: Option[DataFrame] = None // in-memory edge checkpoint
+    var scratchDirs = List.empty[String] // per-invocation reliable-checkpoint dirs
+    val (losers, nLosers) = try {
       val labels = stage("labels") {
-        val edges = stage("pairs") {
-          val (e, release) = minhashClusterEdges(df, idCol, textCol, threshold, k,
-            numHashes, bands, maxBucket)
-          releaseEdges = release
-          e
-        }
+        var release: () => Unit = () => ()
+        val edges = try {
+          val e = stage("pairs") {
+            val (e, r) = minhashClusterEdges(df, idCol, textCol, threshold, k,
+              numHashes, bands, maxBucket)
+            release = r
+            e
+          }
+          // CC gets the edges as a leaf, truncated the way it truncates its
+          // rounds, not as the front half's plan, which every round would
+          // re-analyse. A committed stage's parquet already is a leaf.
+          if (artifacts.nonEmpty) e
+          else {
+            val leaf = checkpointDir match {
+              case None => e.localCheckpoint(eager = true)
+              case Some(cd) =>
+                // the checkpoint dir is SparkContext-global: restore the
+                // session's own (see the caveat in connectedComponentsStatus)
+                val dir = s"$cd/edges-${java.util.UUID.randomUUID()}"
+                scratchDirs ::= dir
+                val prev = spark.sparkContext.getCheckpointDir
+                spark.sparkContext.setCheckpointDir(dir)
+                try e.checkpoint(eager = true)
+                finally prev.foreach(spark.sparkContext.setCheckpointDir)
+            }
+            handedOff = Some(leaf)
+            leaf
+          }
+        } finally release() // the edges are materialized: the front half's caches are done
         val cc = connectedComponentsStatus(edges, maxIter, checkpointDir)
-        ccPath = cc.checkpointPath
+        scratchDirs ++= cc.checkpointPath
         if (!cc.converged)
           throw new IllegalArgumentException(
             s"dedupCorpus: connected components did not converge in maxIter=$maxIter " +
@@ -777,43 +825,46 @@ object DedupOps {
           labels.join(keepers, "cluster").filter(col("id") =!= col("__keeper"))
             .select(col("id").as("__loser_id"))
       }
-      // The loser set is materialized ONCE. That (a) detaches it from the
-      // labels, so the edges and the cc checkpoint files can be released,
-      // and (b) prices the side for an EXPLICIT guarded broadcast: under the
-      // limit the survivor anti-join needs no corpus exchange at all —
-      // relying on AQE's runtime SMJ->BHJ conversion alone still writes the
-      // corpus-side shuffle files first, which at 100 TB is the whole cost.
+      // The loser set is materialized ONCE, by the job that also counts it.
+      // That (a) detaches it from the labels, so the edges and the cc
+      // checkpoint files can be released, and (b) prices the side for an
+      // EXPLICIT guarded broadcast: under the limit the survivor anti-join
+      // needs no corpus exchange at all — relying on AQE's runtime
+      // SMJ->BHJ conversion alone still writes the corpus-side shuffle
+      // files first, which at 100 TB is the whole cost.
       // Above the limit (a pathological majority-duplicate corpus) the join
       // runs un-hinted and completes as a shuffle join.
       //
       // Durability follows the caller's `checkpointDir` opt-in. Without it
-      // the losers are an eager localCheckpoint (executor blocks, GC-freed
-      // — single-box semantics). With it they go to durable parquet under
+      // the losers are a localCheckpoint (executor blocks, GC-freed —
+      // single-box semantics). With it they go to durable parquet under
       // the caller-owned `$checkpointDir/losers-<uuid>` BEFORE any cc round
       // files are deleted, so an executor lost during the (potentially
       // hours-long) survivor anti-join cannot kill the lineage.
       checkpointDir match {
-        case None => losersLazy.localCheckpoint(eager = true)
+        case None =>
+          val l = losersLazy.localCheckpoint(eager = false)
+          (l, materializeCount(l))
         case Some(cd) =>
           val durable = s"$cd/losers-${java.util.UUID.randomUUID()}"
           losersLazy.write.mode("overwrite").parquet(durable)
           org.slf4j.LoggerFactory.getLogger("graft.dedup")
             .info(s"dedupCorpus: loser id set persisted at $durable (caller-owned retention)")
-          spark.read.parquet(durable)
+          val l = spark.read.parquet(durable)
+          (l, l.count())
       }
     } finally {
       // the losers are materialized (or the run failed): nothing reads the
-      // edges, the front half's caches or the final round's reliable cc
-      // files any more (Spark never deletes checkpoints itself)
-      releaseEdges()
-      ccPath.foreach { p =>
+      // handed-off edges or the reliable edge and cc checkpoint files any
+      // more (Spark never deletes checkpoints itself)
+      handedOff.foreach(CacheUtil.freeLocalCheckpoint)
+      scratchDirs.foreach { p =>
         try {
           val hp = new Path(p)
           hp.getFileSystem(hadoopConf).delete(hp, true)
         } catch { case scala.util.control.NonFatal(_) => () } // best-effort
       }
     }
-    val nLosers = losers.count()
     org.slf4j.LoggerFactory.getLogger("graft.dedup")
       .info(s"dedupCorpus: dropping $nLosers near-duplicate documents")
     // type-aware broadcast limit (same idiom as the contamination guard):

@@ -129,17 +129,6 @@ object TextOps {
 
   def langIdNgram(c: Column): Column = langIdNgramUdf(c)
 
-  /** Quality heuristics as exact integer signals. */
-  def qualitySignals(c: Column): Seq[(String, Column)] = Seq(
-    "n_chars" -> length(c),
-    "n_tokens" -> tokenCount(c),
-    "n_distinct_tokens" -> distinctTokenCount(c),
-    "n_punct" -> punctCount(c),
-    "n_digits" -> digitCount(c),
-    "n_upper" -> upperCount(c),
-    "n_stopwords" -> stopwordCount(c)
-  )
-
   /** Composite quality score in [0,1] (float; oracled separately from the
     * integer signals). Penalizes very short docs, low stopword density, and
     * low type/token ratio — the usual cheap pretraining-corpus filters.

@@ -232,6 +232,49 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"survivor filtering must not shuffle the corpus:\n${df.queryExecution.executedPlan}")
   }
 
+  test("dedupCorpus hands CC a checkpointed leaf: its rounds never reach the corpus") {
+    import graft.ops.DedupOps
+    import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    // a parquet corpus with planted near-duplicates (a one-word suffix)
+    val rnd = new scala.util.Random(3)
+    val bases = Vector.fill(60)(Vector.fill(30)(s"w${rnd.nextInt(2000)}").mkString(" "))
+    val dir = java.nio.file.Files.createTempDirectory("graft_lineage").toString
+    spark.createDataFrame(bases.indices.map(i => (i.toLong, bases(i))) ++
+        (0 until 20).map(i => (100L + i, bases(i) + " tail")))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName -> qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def isMarker(qe: QueryExecution) = qe.analyzed.output.exists(_.name == "__marker")
+    spark.listenerManager.register(listener)
+    try {
+      val survivors = DedupOps.dedupCorpus(spark.read.parquet(dir), "doc_id", "text")
+      assert(survivors.count() == 60)
+      // listener events arrive asynchronously but in order: once the marker
+      // query's has arrived, so have those of every earlier query
+      spark.range(1).toDF("__marker").collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(e => isMarker(e._2)) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    // the edge hand-off, every CC round and the loser set, in run order
+    val checkpoints = seen.asScala.toSeq.takeWhile(e => !isMarker(e._2))
+      .collect { case (f, qe) if f == "localCheckpoint" => qe.analyzed.collectLeaves() }
+    assert(checkpoints.head.exists(!_.isInstanceOf[LogicalRDD]), "the hand-off reads the corpus")
+    // no parquet scan, no front-half cache: every leaf behind CC's rounds
+    // and the loser set is a checkpoint
+    checkpoints.tail.zipWithIndex.foreach { case (leaves, i) =>
+      assert(leaves.forall(_.isInstanceOf[LogicalRDD]),
+        s"checkpoint ${i + 1} reaches past the hand-off: ${leaves.map(_.nodeName).mkString(", ")}")
+    }
+    assert(checkpoints.size >= 4, s"${checkpoints.size} checkpoints: hand-off, 2+ rounds, losers")
+  }
+
   test("composed pretrain e2e final plan: no text column crosses an exchange") {
     import org.apache.spark.sql.types.StringType
     // the three heaviest stages (dedup signatures, CC, contamination) run
