@@ -88,6 +88,24 @@ object Bench {
         f"WARN bench regression gate: $q took $t%.2f s > $factor%.1fx recorded ${recorded(q)}%.2f s — re-bench or fix before shipping"
     }
 
+  /** Runs and times each query once. A query that throws reads -1.0 s and
+    * yields a WARN line; the number of those lines is the
+    * `bench_failures` key, so a failing query cannot go unnoticed.
+    */
+  def timeQueries(queries: Seq[(String, () => Unit)]): (Seq[(String, Double)], Seq[String]) = {
+    val failures = Seq.newBuilder[String]
+    val times = queries.map { case (name, run) =>
+      val t0 = System.nanoTime()
+      try { run(); name -> (System.nanoTime() - t0) / 1e9 }
+      catch {
+        case e: Throwable =>
+          failures += s"WARN bench query failed: $name: ${e.getClass.getSimpleName}: ${e.getMessage}"
+          name -> -1.0
+      }
+    }
+    (times, failures.result())
+  }
+
   private def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
@@ -243,14 +261,12 @@ object Bench {
     val effMidHigh = (highTput / midTput) / (cpus.toDouble / (scaleN * 4))
 
     // ---- per-query wall clock on the sf tables ----
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok = try { fn(sHigh, sfDir).write.format("noop").mode("overwrite").save(); true }
-               catch { case _: Throwable => false }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-    }
+    val (results, failures) = timeQueries(SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (() => fn(sHigh, sfDir).write.format("noop").mode("overwrite").save())
+    })
     sHigh.stop()
 
+    failures.foreach(System.err.println)
     val warnings = regressionWarnings(results)
     warnings.foreach(System.err.println)
 
@@ -274,7 +290,8 @@ object Bench {
       s""""turns_per_sec_16c_pinned":${if (p16Tput.isNaN) "null" else f(p16Tput)}""",
       s""""pinned_16c_spread":${if (p16Spread.isNaN) "null" else f(p16Spread)}""",
       s""""bench_turns":$benchTurns""",
-      s""""bench_regressions":${warnings.size}"""
+      s""""bench_regressions":${warnings.size}""",
+      s""""bench_failures":${failures.size}"""
     )).mkString("{", ",", "}")
 
     println(s"""{"metric":"turns/sec parse+transform (local[$cpus])","value":${f(highTput)},"unit":"turns/sec","queries":$qs,"sf":"$sfDir"}""")

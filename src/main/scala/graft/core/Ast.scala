@@ -104,8 +104,20 @@ final class TagNode(d: Doc, var parent: TagNode, b: Int) extends Node {
   var bodyBegin: Int = -1
   var bodyEnd: Int = -1
   var attribute: String = _
-  val attributes: mutable.LinkedHashMap[String, String] = mutable.LinkedHashMap.empty
-  val children: mutable.ArrayBuffer[Node] = mutable.ArrayBuffer.empty
+  // most tags have no complex attributes and one or two children
+  private[this] var _attributes: mutable.LinkedHashMap[String, String] = _
+  val children: mutable.ArrayBuffer[Node] = new mutable.ArrayBuffer[Node](4)
+
+  /** Complex attributes in insertion order. The map is allocated on first
+    * use, so read through [[hasAttributes]] to keep attribute-free tags
+    * allocation-free.
+    */
+  def attributes: mutable.LinkedHashMap[String, String] = {
+    if (_attributes == null) _attributes = mutable.LinkedHashMap.empty
+    _attributes
+  }
+
+  def hasAttributes: Boolean = _attributes != null && _attributes.nonEmpty
 
   def addChild(n: Node): Unit = children += n
 
@@ -124,6 +136,23 @@ final class TagNode(d: Doc, var parent: TagNode, b: Int) extends Node {
   private[this] var _name: String = _
   private[this] var _nameKey: Int = Int.MinValue
 
+  /** This tag's entry in the parse policy `config` (looked up by lowercased
+    * name), or null. Cached per (nameEnd, config instance) like [[name]]:
+    * the parsers consult the policy several times per tag.
+    */
+  def policy(config: Map[String, TagAttributes]): TagAttributes = {
+    if (_policyKey != nameEnd || (_policyConfig ne config)) {
+      val n = name
+      _policy = if (n == null) null else config.getOrElse(TagAttributes.lookupKey(n), null)
+      _policyKey = nameEnd
+      _policyConfig = config
+    }
+    _policy
+  }
+  private[this] var _policy: TagAttributes = _
+  private[this] var _policyKey: Int = Int.MinValue
+  private[this] var _policyConfig: Map[String, TagAttributes] = _
+
   def hasBody: Boolean = bodyEnd != -1 && bodyBegin != bodyEnd
 
   def hasClosingTag: Boolean = if (hasBody) bodyEnd != end else bodyBegin != end
@@ -141,7 +170,8 @@ final class TagNode(d: Doc, var parent: TagNode, b: Int) extends Node {
       begin == t.begin && end == t.end && nameEnd == t.nameEnd &&
         bodyBegin == t.bodyBegin && bodyEnd == t.bodyEnd &&
         attribute == t.attribute &&
-        attributes.toList == t.attributes.toList &&
+        hasAttributes == t.hasAttributes &&
+        (!hasAttributes || attributes.toList == t.attributes.toList) &&
         children == t.children &&
         (if (parent != null)
            t.parent != null && parent.begin == t.parent.begin && parent.end == t.parent.end

@@ -9,9 +9,11 @@ import scala.annotation.switch
   *
   * State transitions are a literal port of the reference's enum FSM
   * (reference: service/BBCodeParser.java:279-535) re-expressed as an
-  * `Int`-state jump table (`@switch`) so the per-char inner loop avoids
-  * megamorphic virtual dispatch; the transition function is
-  * character-for-character identical.
+  * `Int`-state jump table (`@switch`), which avoids megamorphic virtual
+  * dispatch. The transition function is unchanged. What differs is how it
+  * is driven: once a character has kept the state it found, the rest of
+  * that run of side-effect-free characters is skipped in one tight loop
+  * ([[skipRun]]) instead of one dispatch per character.
   */
 object BBCodeParser extends FsmBase {
   // FSM states (reference: BBCodeParser.java State enum)
@@ -99,6 +101,35 @@ object BBCodeParser extends FsmBase {
     case Text =>
       if (c == '[') TagBegin else if (c == '\\') Escape else Text
     case Complete => Complete
+  }
+
+  /** The index of the first char at or after `from` that could leave
+    * `state`: a char of the state's stop set, or `len`. Every char before
+    * it keeps the state and has no side effect in [[run]], because the
+    * iteration that kept the state already did that state's one-time work
+    * (the Text case creates its `TextNode` there). States not listed here
+    * are not skipped.
+    */
+  private def skipRun(state: Int, src: Array[Char], from: Int, len: Int): Int = {
+    var i = from
+    (state: @switch) match {
+      case Text =>
+        while (i < len && { val c = src(i); c != '[' && c != '\\' }) i += 1
+      case TagName =>
+        while (i < len && { val c = src(i); c != '=' && c != ' ' && c != ']' && c != '[' }) i += 1
+      case SimpleSingleQuotedValue | ComplexSingleQuotedValue =>
+        while (i < len && src(i) != '\'') i += 1
+      case SimpleDoubleQuotedValue | ComplexDoubleQuotedValue =>
+        while (i < len && src(i) != '"') i += 1
+      case SimpleUnQuotedValue | ClosingTagName =>
+        while (i < len && src(i) != ']') i += 1
+      case ComplexAttributeName =>
+        while (i < len && { val c = src(i); c != '=' && c != ' ' && c != ']' }) i += 1
+      case ComplexUnQuotedValue =>
+        while (i < len && { val c = src(i); c != ' ' && c != ']' }) i += 1
+      case _ =>
+    }
+    i
   }
 
   def parse(source: String, tagAttributes: Map[String, TagAttributes]): Doc =
@@ -255,6 +286,7 @@ object BBCodeParser extends FsmBase {
           handleDocumentCleanup(doc, attributes, index, nodes, textNode)
           index += 1
       }
+      if (state == previous && index < len) index = skipRun(state, source, index, len)
     }
   }
 

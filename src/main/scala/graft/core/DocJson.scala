@@ -35,8 +35,9 @@ object DocJson {
     case t: TextNode =>
       s"""{"t":"text","begin":${t.begin},"end":${t.end},"body":${q(t.body)}}"""
     case t: TagNode =>
-      val attrs = t.attributes.iterator
-        .map { case (k, v) => s"[${q(k)},${q(v)}]" }.mkString("[", ",", "]")
+      val attrs =
+        if (!t.hasAttributes) "[]"
+        else t.attributes.iterator.map { case (k, v) => s"[${q(k)},${q(v)}]" }.mkString("[", ",", "]")
       val kids = t.children.iterator.map(node).mkString("[", ",", "]")
       s"""{"t":"tag","begin":${t.begin},"end":${t.end},"nameEnd":${t.nameEnd},""" +
         s""""bodyBegin":${t.bodyBegin},"bodyEnd":${t.bodyEnd},"name":${q(t.name)},""" +

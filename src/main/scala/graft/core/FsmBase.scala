@@ -18,36 +18,20 @@ import java.util.ArrayDeque
 abstract class FsmBase {
   type Attrs = Map[String, TagAttributes]
 
-  /** Config entry for a tag (lookup by lowercased name) or null. Uses the
-    * allocation-free [[TagAttributes.lookupKey]] fast path — these lookups
-    * run several times per tag and dominated allocation profiles.
-    */
-  protected final def attrsFor(tag: TagNode, attributes: Attrs): TagAttributes = {
-    val n = tag.name
-    if (n == null) null
-    else attributes.getOrElse(TagAttributes.lookupKey(n), null)
-  }
-
   protected def doesNotRequireClosingTag(tag: TagNode, attributes: Attrs): Boolean = {
-    val a = attrsFor(tag, attributes)
+    val a = tag.policy(attributes)
     a != null && a.doesNotRequireClosingTag
   }
 
   protected def hasPreFormattedBody(tag: TagNode, attributes: Attrs): Boolean = {
-    val a = attrsFor(tag, attributes)
+    val a = tag.policy(attributes)
     a != null && a.hasPreFormattedBody
   }
 
   protected def isStandalone(tag: TagNode, attributes: Attrs): Boolean = {
-    val a = attrsFor(tag, attributes)
+    val a = tag.policy(attributes)
     a != null && a.standalone
   }
-
-  /** Null-safe case-insensitive equals; two nulls are NOT equal
-    * (AbstractParser.java:122-133).
-    */
-  protected def eq(s1: String, s2: String): Boolean =
-    s1 != null && s2 != null && s1.equalsIgnoreCase(s2)
 
   /** Add `node` to the top-of-stack tag (adjusting the parent's body/end
     * indexes) or to the document when the stack is empty; record tag offsets
@@ -84,20 +68,43 @@ abstract class FsmBase {
     }
   }
 
-  /** The closing tag name for `tag` if determinable: the slice between
-    * `[/` (or `</`) and the final `]`/`>` (AbstractParser.java:93-98).
+  /** Whether the closing tag that ends at `index` names `tag`: its name,
+    * the slice between `[/` (or `</`) and the final `]`/`>`, equals the
+    * tag's name ignoring case; a tag or closing tag with no name matches
+    * nothing (AbstractParser.java:93-98, 122-133).
+    *
+    * Compares on the source `char[]` without allocating. A mismatch between
+    * two ASCII chars is final: `equalsIgnoreCase` compares position by
+    * position and ASCII folds only to ASCII. A mismatch involving any
+    * other char falls back to `equalsIgnoreCase` on the two slices, so the
+    * result is exactly that of the string comparison.
     */
-  protected def closingName(doc: Doc, index: Int, tag: TagNode): String =
-    if (tag.bodyEnd != -1 && index > tag.bodyEnd + 2) doc.getString(tag.bodyEnd + 2, index - 1)
-    else null
+  protected final def closes(doc: Doc, index: Int, tag: TagNode): Boolean = {
+    val nameBegin = tag.begin + 1
+    val closeBegin = tag.bodyEnd + 2
+    val n = tag.nameEnd - nameBegin
+    if (tag.bodyEnd == -1 || index <= closeBegin || n <= 0 || index - 1 - closeBegin != n) return false
+    val src = doc.source
+    var i = 0
+    while (i < n) {
+      val a = src(nameBegin + i)
+      val b = src(closeBegin + i)
+      if (a != b) {
+        if (a >= 128 || b >= 128)
+          return doc.getString(nameBegin, tag.nameEnd).equalsIgnoreCase(doc.getString(closeBegin, index - 1))
+        if ((if (a >= 'A' && a <= 'Z') a + 32 else a) != (if (b >= 'A' && b <= 'Z') b + 32 else b)) return false
+      }
+      i += 1
+    }
+    true
+  }
 
   /** Handle a fully-lexed closing tag name; returns the new parsingEnabled
     * flag (AbstractParser.java:135-152).
     */
   protected def handleClosingTagName(doc: Doc, attributes: Attrs, index: Int,
                                      nodes: ArrayDeque[TagNode], parsingEnabled: Boolean): Boolean = {
-    val cn = closingName(doc, index, nodes.peek())
-    if (eq(cn, nodes.peek().name)) {
+    if (closes(doc, index, nodes.peek())) {
       nodes.peek().end = index
       if (parsingEnabled) {
         handleCompletedTagNode(doc, attributes, index, nodes)
@@ -119,8 +126,7 @@ abstract class FsmBase {
                                        nodes: ArrayDeque[TagNode]): Unit = {
     if (nodes.isEmpty) return
     val current = nodes.peek()
-    val closingTagName = closingName(doc, index, current)
-    if (doesNotRequireClosingTag(current, attributes) || eq(current.name, closingTagName)) {
+    if (doesNotRequireClosingTag(current, attributes) || closes(doc, index, current)) {
       val tagNode = nodes.pop()
       tagNode.end = index
       addNode(doc, attributes, tagNode, nodes)
@@ -288,11 +294,8 @@ abstract class FsmBase {
     }
     if (doesNotRequireClosingTag(nodes.peek(), attributes)) {
       handleExpectedUnclosedTags(doc, attributes, nodes)
-    } else {
-      val cn = closingName(doc, index, nodes.peek())
-      if (!eq(nodes.peek().name, cn)) {
-        handleUnexpectedState(doc, attributes, index, nodes)
-      }
+    } else if (!closes(doc, index, nodes.peek())) {
+      handleUnexpectedState(doc, attributes, index, nodes)
     }
   }
 }

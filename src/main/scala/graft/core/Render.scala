@@ -95,7 +95,8 @@ object Render {
     }
     def recurse(node: Node): Unit = node match {
       case textNode: TextNode =>
-        Transform.escapeAppend(build, textNode, textNode.body, offsets, attributes)
+        Transform.escapeAppend(build, textNode, doc.source, textNode.begin, textNode.end,
+          offsets, attributes)
       case tagNode: TagNode =>
         val renderer = jRenderers.get(TagAttributes.lookupKey(tagNode.name))
         if (renderer != null) {
@@ -105,7 +106,7 @@ object Render {
           build.setLength(mark)
           build.append(renderer(tagNode, body))
         } else {
-          build.append(tagNode.rawString)
+          build.append(doc.source, tagNode.begin, tagNode.length)
         }
     }
 
@@ -168,7 +169,7 @@ object BBCodeToHtml {
     * (reference: templates/bbCode/_macros.ftl).
     */
   private def attrs(tag: TagNode): String =
-    if (tag.attributes.isEmpty) ""
+    if (!tag.hasAttributes) ""
     else tag.attributes.iterator.map { case (k, v) => s""" $k="$v"""" }.mkString
 
   private def simple(open: String, close: String): TagRenderer =

@@ -27,73 +27,72 @@ object Transform {
   def htmlEscape(offsets: Offsets, attributes: Map[String, TagAttributes]): TransformFunction =
     (node: TextNode, original: String) => {
       val build = new java.lang.StringBuilder(original.length + 16)
-      escapeAppend(build, node, original, offsets, attributes)
+      escapeAppend(build, node, original.toCharArray, 0, original.length, offsets, attributes)
       build.toString
     }
 
-  /** Escape `original` directly into `build` — the allocation-free form of
-    * [[htmlEscape]] used by the hot pipeline path (identical output; no
-    * intermediate char[]/String per text node).
+  /** Escape `src[from, until)`, the text of `node`, straight into `build`:
+    * the one escape loop, shared by [[htmlEscape]] and the fused
+    * `Render.renderEscaped` path, which passes the node's slice of the
+    * source so no per-node string is made. Offsets are recorded at
+    * `node.begin + (i - from)` for the char at `i`.
     */
-  def escapeAppend(build: java.lang.StringBuilder, node: TextNode, original: String,
-                   offsets: Offsets, attributes: Map[String, TagAttributes]): Unit = {
-    val len = original.length
+  def escapeAppend(build: java.lang.StringBuilder, node: TextNode, src: Array[Char],
+                   from: Int, until: Int, offsets: Offsets,
+                   attributes: Map[String, TagAttributes]): Unit = {
+    val shift = node.begin - from
     // Newline suppression depends only on the node's parent — resolve it
     // once per node, lazily on the first newline (0 = unknown, 1 = keep
     // newline, 2 = transform).
     var suppressState = 0
     def suppressNewlines: Boolean = {
       if (suppressState == 0) {
-        val parentName =
-          if (node.parent != null && node.parent.name != null)
-            TagAttributes.lookupKey(node.parent.name)
-          else null
-        val s = parentName != null && attributes != null &&
-          attributes.get(parentName).exists(!_.transformNewLines)
-        suppressState = if (s) 1 else 2
+        val policy =
+          if (node.parent != null && attributes != null) node.parent.policy(attributes) else null
+        suppressState = if (policy != null && !policy.transformNewLines) 1 else 2
       }
       suppressState == 1
     }
-    var i = 0
-    while (i < len) {
+    var i = from
+    while (i < until) {
       // clean-run fast path: bulk-append the maximal escapable-free slice
       // (most text contains no escapables; per-char append dominated the
       // escape cost in pipeline profiles)
       var j = i
       var c0 = 0: Char
-      while (j < len && {
-        c0 = original.charAt(j)
+      while (j < until && {
+        c0 = src(j)
         c0 != '&' && c0 != '<' && c0 != '>' && c0 != '"' && c0 != '\n' && c0 != '\r'
       }) j += 1
       if (j > i) {
-        build.append(original, i, j)
+        build.append(src, i, j - i)
         i = j
       }
-      if (i >= len) return
-      (original.charAt(i): @annotation.switch) match {
+      if (i >= until) return
+      (src(i): @annotation.switch) match {
         case '&' =>
           build.append("&amp;")
-          if (offsets != null) offsets.add(node.begin + i, 4)
+          if (offsets != null) offsets.add(shift + i, 4)
         case '<' =>
           build.append("&lt;")
-          if (offsets != null) offsets.add(node.begin + i, 3)
+          if (offsets != null) offsets.add(shift + i, 3)
         case '>' =>
           build.append("&gt;")
-          if (offsets != null) offsets.add(node.begin + i, 3)
+          if (offsets != null) offsets.add(shift + i, 3)
         case '"' =>
           build.append("&quot;")
-          if (offsets != null) offsets.add(node.begin + i, 5)
+          if (offsets != null) offsets.add(shift + i, 5)
         case c @ ('\n' | '\r') =>
           if (suppressNewlines) {
             build.append(c)
           } else {
-            if (i + 1 < len &&
-                ((c == '\n' && original.charAt(i + 1) == '\r') ||
-                 (c == '\r' && original.charAt(i + 1) == '\n'))) {
-              if (offsets != null) offsets.add(node.begin + i, 2)
+            if (i + 1 < until &&
+                ((c == '\n' && src(i + 1) == '\r') ||
+                 (c == '\r' && src(i + 1) == '\n'))) {
+              if (offsets != null) offsets.add(shift + i, 2)
               i += 1
             } else if (offsets != null) {
-              offsets.add(node.begin + i, 3)
+              offsets.add(shift + i, 3)
             }
             build.append("<br>")
           }
@@ -125,6 +124,8 @@ object Transform {
       while (i < cs.length) { recurse(cs(i)); i += 1 }
     }
     def recurse(node: Node): Unit = node match {
+      case textNode: TextNode if fn == null && consumer == null =>
+        build.append(doc.source, textNode.begin, textNode.length)
       case textNode: TextNode =>
         var text = textNode.body
         if (fn != null) text = fn(textNode, text)
@@ -132,7 +133,7 @@ object Transform {
         build.append(text)
       case tagNode: TagNode =>
         if (predicate(tagNode)) recurseAll(tagNode.children)
-        else build.append(tagNode.rawString)
+        else build.append(doc.source, tagNode.begin, tagNode.length)
     }
 
     recurseAll(doc.children)

@@ -24,6 +24,15 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.regressionWarnings(Seq("q_a" -> -1.0), recorded).isEmpty)
   }
 
+  test("a throwing query is counted in bench_failures with a WARN line") {
+    val (times, failures) = Bench.timeQueries(Seq(
+      "q_ok" -> (() => ()),
+      "q_planted" -> (() => throw new IllegalStateException("planted"))))
+    assert(failures.size == 1, failures) // the bench_failures key
+    assert(failures.head.startsWith("WARN") && failures.head.contains("q_planted"), failures)
+    assert(times.toMap.apply("q_planted") == -1.0 && times.toMap.apply("q_ok") >= 0.0)
+  }
+
   test("every SparkEntry query has a recorded bench baseline") {
     val missing = SparkEntry.queries.keySet -- Bench.recordedQuerySeconds.keySet
     assert(missing.isEmpty,

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests: the parsers must never throw on arbitrary input, node
@@ -57,6 +58,25 @@ class ParserPropertySpec extends AnyFunSuite {
 
   test("never throws + sound spans on fragment compositions") {
     check(Prop.forAll(tagged)(s => totalPipeline(s)))
+  }
+
+  test("[a]x[/b] closes iff a.equalsIgnoreCase(b), non-ASCII names included") {
+    // ſ and K (Kelvin) fold to ASCII letters, İ and ı fold across dotted and
+    // dotless i, ß upper-cases to two chars, and U+10400/U+10428 are a
+    // Deseret case pair outside the BMP
+    val unit = Gen.frequency(
+      6 -> Gen.oneOf(('a' to 'z') ++ ('A' to 'Z')).map(_.toString),
+      4 -> Gen.oneOf("ſ", "K", "İ", "ı", "ß", "𐐀", "𐐨", "s", "S", "k", "K", "i", "I"))
+    val name = Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, unit)).map(_.mkString)
+    val pair = for {
+      a <- name
+      b <- Gen.oneOf(Gen.const(a.toUpperCase(java.util.Locale.ROOT)),
+        Gen.const(a.toLowerCase(java.util.Locale.ROOT)), name)
+    } yield (a, b)
+    check(Prop.forAll(pair) { case (a, b) =>
+      val closes = BBCodeParser.parse(s"[$a]x[/$b]", Map.empty).tagCount == 1
+      (closes == a.equalsIgnoreCase(b)) :| s"a=$a b=$b closes=$closes"
+    })
   }
 
   test("strip of markup-free text is identity") {
