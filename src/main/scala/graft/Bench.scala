@@ -106,7 +106,7 @@ object Bench {
     (times, failures.result())
   }
 
-  private def session(cores: Int): SparkSession = {
+  private[graft] def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-$cores")
@@ -123,8 +123,8 @@ object Bench {
     * (JIT + heap shaping), then best of two timed runs. Returns
     * (seconds, turns/s).
     */
-  private def timeExtract(spark: SparkSession, n: Long, parts: Int,
-                          warm: Boolean = true): (Double, Double) = {
+  private[graft] def timeExtract(spark: SparkSession, n: Long, parts: Int,
+                                 warm: Boolean = true): (Double, Double) = {
     def once(): Double = {
       val t0 = System.nanoTime()
       ExtractJob.extract(TranscriptGen.turns(spark, n, seed = 42, partitions = parts))

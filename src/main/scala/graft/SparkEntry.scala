@@ -1011,7 +1011,7 @@ object SparkEntry {
 
     "q_filter_dates" -> ((s, dir) => {
       s.read.parquet(s"$dir/lineitem.parquet")
-        .filter(col("l_shipdate") >= lit("1994-01-01") && col("l_shipdate") < lit("1995-01-01"))
+        .filter(col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1997-01-01"))
         .groupBy(month(col("l_shipdate")).cast("long").as("ship_month"))
         .agg(count(lit(1)).as("cnt"), sum(col("l_quantity")).as("sum_qty"))
         .orderBy("ship_month")
@@ -1028,7 +1028,8 @@ object SparkEntry {
     "q_anti_join" -> ((s, dir) => {
       val customer = s.read.parquet(s"$dir/customer.parquet")
       val orders = s.read.parquet(s"$dir/orders.parquet")
-      customer.join(orders, col("c_custkey") === col("o_custkey"), "left_anti")
+      val urgent = orders.filter(col("o_orderpriority") === "1-URGENT")
+      customer.join(urgent, col("c_custkey") === col("o_custkey"), "left_anti")
         .select("c_custkey", "c_mktsegment")
         .orderBy("c_custkey")
     }),
@@ -2223,7 +2224,7 @@ object SparkEntry {
     "q_filter_dates" ->
       """SELECT cast(month(l_shipdate) AS bigint) AS ship_month, count(*) AS cnt, sum(l_quantity) AS sum_qty
         |FROM lineitem
-        |WHERE l_shipdate >= '1994-01-01' AND l_shipdate < '1995-01-01'
+        |WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
         |GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "q_having_custs" ->
@@ -2232,7 +2233,8 @@ object SparkEntry {
 
     "q_anti_join" ->
       """SELECT c_custkey, c_mktsegment FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |WHERE NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
         |ORDER BY c_custkey""".stripMargin,
 
     "q_scalar_funcs" ->

@@ -1,9 +1,7 @@
 package graft
 
 import graft.ops.{CurateOps, TextOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The spark-submit curation launcher: stage composition (cap → mix →
@@ -11,22 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * commit-marked with a relaunch no-op, and bad flags fail before any
   * heavy work.
   */
-class CurateMainSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-curatemain-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class CurateMainSpec extends AnyFunSuite with SparkSuite {
   /** Skewed corpus: group g3 holds most docs; texts of varying length. */
   private def writeCorpus(n: Int = 200): String = {
     val rows = (0 until n).map { i =>

@@ -1,28 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The spark-submit dedup launcher: survivor write with commit marker,
   * completed-run no-op on relaunch, keeper-policy flags, artifact-stage
   * resume wiring.
   */
-class DedupMainSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-dedupmain-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class DedupMainSpec extends AnyFunSuite with SparkSuite {
   private def writeCorpus(): String = {
     val rnd = new scala.util.Random(42)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta",

@@ -1,28 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The spark-submit shard-writer launcher: deterministic shuffled shards
   * with commit marker, completed-run no-op, nested sampling, flag
   * validation.
   */
-class ShardMainSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-shardmain-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ShardMainSpec extends AnyFunSuite with SparkSuite {
   private def writeCorpus(n: Int = 150): String = {
     val rows = (0 until n).map(i => (i.toLong, s"document body number $i"))
     val dir = java.nio.file.Files.createTempDirectory("graft_sm_in").toString

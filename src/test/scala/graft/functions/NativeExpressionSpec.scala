@@ -1,30 +1,17 @@
 package graft.functions
 
+import graft.SparkSuite
 import graft.core._
 import graft.pipeline.Udfs
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Native Catalyst expression path must agree exactly with the UDF path and
   * the pure core, survive codegen, and register via SparkSessionExtensions.
   */
-class NativeExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-expr-test")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class NativeExpressionSpec extends AnyFunSuite with SparkSuite {
+  override protected def cores: Int = 2
+  override protected def conf = Map("spark.sql.extensions" -> classOf[GraftExtensions].getName)
 
   private val samples = Seq(
     "[b]hello[/b] world",
@@ -37,10 +24,12 @@ class NativeExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
   )
 
   test("native expressions equal UDF path and pure core (via extensions)") {
-    val s = spark; import s.implicits._
+    // a new session resolves the names through the extensions alone: the
+    // suite session's GraftFunctions.register temp functions stay behind
+    val s = spark.newSession(); import s.implicits._
     val df = samples.toDF("t")
     df.createOrReplaceTempView("samples")
-    val rows = spark.sql(
+    val rows = s.sql(
       """SELECT t, bbcode_strip_native(t) AS ns, bbcode_to_html_native(t) AS nh,
         |       html_strip_native(t) AS nhs, bbcode_tag_count_native(t) AS nc
         |FROM samples""".stripMargin).collect()

@@ -1,30 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** topk_by_score must equal a row_number window top-k exactly (incl. exact
   * score ties), survive serialize/merge across partitions, and plan as a
   * partial ObjectHashAggregate (no global per-group sort).
   */
-class TopKAggregateSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-topk-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class TopKAggregateSpec extends AnyFunSuite with SparkSuite {
+  override protected def conf = Map("spark.sql.extensions" -> classOf[GraftExtensions].getName)
 
   private def scored = {
     val rows = for (q <- 0L until 6L; n <- 0L until 200L)

@@ -1,29 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bloom-pruned decontamination: exactness (bloom errors never change the
   * answer), no false negatives, build determinism across partitionings,
   * and that the probe actually prunes.
   */
-class BloomSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-bloom-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class BloomSpec extends AnyFunSuite with SparkSuite {
   // Corpus with planted contamination: bench docs (ids 0,5,10,...) and
   // train docs; train ids 1 and 6 embed a full bench 5-gram, everything
   // else is distinct vocabulary.

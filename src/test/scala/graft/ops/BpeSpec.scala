@@ -1,28 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** BPE training against a hand-computed merge sequence (the Sennrich
   * corpus {low×5, lower×2, newest×6, widest×3}), with the distributed and
   * driver-local paths asserted identical.
   */
-class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-bpe-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class BpeSpec extends AnyFunSuite with SparkSuite {
   private def corpus = {
     val words = Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest")

@@ -1,29 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Quality-classifier training: bit-exact determinism across partition
   * layouts and vs the sequential reference, learnability on a separable
   * corpus, and fail-fast guards.
   */
-class ClassifySpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-classify-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ClassifySpec extends AnyFunSuite with SparkSuite {
   // Separable corpus: positive docs draw from a "clean" vocabulary,
   // negative docs from a "junk" vocabulary, with shared stopwords mixed in
   // so the bias alone cannot solve it.

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Corpus-curation operators: the two-phase budget selection must equal
@@ -12,22 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reference, temperature mixing must follow its documented rate formula,
   * and every result must be independent of the input partition layout.
   */
-class CurateSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-curate-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class CurateSpec extends AnyFunSuite with SparkSuite {
   /** 400 docs over 4 skewed groups (g3 holds ~70%), deterministic texts
     * of varying token counts; badly partitioned on purpose.
     */

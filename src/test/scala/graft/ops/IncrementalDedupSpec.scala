@@ -1,12 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Incremental (batch-vs-index) near-dup: results must equal the full-run
@@ -15,22 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * contract — the index's band rows never shuffle and no text column
   * crosses an exchange — must hold in the executed plan.
   */
-class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-incdedup-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class IncrementalDedupSpec extends AnyFunSuite with SparkSuite {
   /** Word soup from a per-doc seeded RNG: deterministic, and pairwise
     * organic shingle jaccard ≈ 0 (a stride-based construction instead
     * shares long token runs between docs — shifted progressions).

@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** LM scoring + semantic-dedup correctness: bigram/unigram models against
@@ -10,21 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * documents, DSIR likelihood ratios, and SemDeDup's within-cluster
   * first-id-wins survivor set (including singleton and NULL clusters).
   */
-class LmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-lm-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class LmOpsSpec extends AnyFunSuite with SparkSuite {
   test("bigramLm: counts and vocab match hand tally") {
     val ref = spark.createDataFrame(Seq((1L, "a b a"), (2L, "b a")))
       .toDF("id", "text")

@@ -3,28 +3,15 @@ package graft.ops
 import java.awt.image.BufferedImage
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The real (javax.imageio) media decode path: actual PNG/JPEG bytes are
   * decoded, scaled, re-encoded — and undecodable payloads fall back to the
   * deterministic stub, so a mixed corpus flows end-to-end.
   */
-class MediaCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-media-codec-test")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MediaCodecSpec extends AnyFunSuite with SparkSuite {
+  override protected def cores: Int = 2
 
   /** A real encoded image: a gradient so resampling has structure. */
   private def realImageBytes(w: Int, h: Int, format: String): Array[Byte] = {

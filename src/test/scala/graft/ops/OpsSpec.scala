@@ -1,29 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Correctness of the training-data ops: LSH recall vs brute force, cosine
   * vs manual math, simhash locality, shingles/minhash behavior, media
   * plumbing determinism.
   */
-class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ops-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class OpsSpec extends AnyFunSuite with SparkSuite {
   private def docsDf: DataFrame = {
     val rnd = new scala.util.Random(42)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta",

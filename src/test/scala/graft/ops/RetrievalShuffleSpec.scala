@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Correctness of the round-5 additions: TF-IDF ranking, inverted-index
@@ -10,21 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * two-phase global shuffle, corpus-wide line dedup, contamination ratio,
   * and corpus BPE encoding.
   */
-class RetrievalShuffleSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-retrieval-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class RetrievalShuffleSpec extends AnyFunSuite with SparkSuite {
   private def df(rows: Seq[(Long, String)]): DataFrame =
     spark.createDataFrame(rows).toDF("doc_id", "text")
 

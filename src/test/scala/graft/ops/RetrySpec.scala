@@ -3,11 +3,13 @@ package graft.ops
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.SparkSuite
+import graft.pipeline.{ExtractJob, TranscriptGen}
 import org.apache.spark.TaskContext
 import org.apache.spark.api.plugin.{DriverPlugin, ExecutorPlugin, SparkPlugin}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, to_json}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fails the first attempt of partition 0 in every stage of the armed kind:
@@ -62,26 +64,20 @@ class InjectedFailurePlugin extends SparkPlugin {
   }
 }
 
-/** The multi-action dedup operators give a clean run's results when a task
-  * fails once and is retried (`local[4,3]`: up to three attempts a task),
-  * in a shuffle-map stage or in a checkpoint's result stage.
+/** The multi-action dedup operators and the resumable extract give a clean
+  * run's results when a task fails once and is retried (`local[4,3]`: up
+  * to three attempts a task), in a shuffle-map stage or in a result stage
+  * (a checkpoint's or a write's).
   */
-class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
+class RetrySpec extends AnyFunSuite with SparkSuite {
+  override protected def master: String = "local[4,3]"
+  override protected def conf = Map("spark.plugins" -> classOf[InjectedFailurePlugin].getName)
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4,3]")
-      .appName("graft-retry-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.plugins", classOf[InjectedFailurePlugin].getName)
-      .getOrCreate()
+    super.beforeAll()
     spark.sparkContext.setLogLevel("OFF") // the injected failures log as task errors
     spark.sparkContext.addSparkListener(InjectedFailures.listener)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private val kinds = Seq("map", "result")
 
@@ -134,6 +130,28 @@ class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fired > 0, s"$kind, artifactDir $artifacts: nothing injected")
       assert(got == clean, s"$kind, artifactDir $artifacts: " +
         s"missing=${clean -- got} extra=${got -- clean}")
+    }
+  }
+
+  test("ExtractJob.runResumable: committed rows and buckets survive a retried task") {
+    // the turns arrive through a shuffle, so a "map" kind has a stage to fail
+    val turns = TranscriptGen.turns(spark, 2000, seed = 42, partitions = 4)
+      .repartition(4, col("conv_id"))
+    def run() = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_retry_resume").toString
+      val buckets = ExtractJob.runResumable(spark, turns, dir, buckets = 8)
+      // offsets is an array column: compare it by value
+      val rows = spark.read.parquet(dir).withColumn("offsets", to_json(col("offsets"))).collect()
+      (rows.toSet, rows.length, buckets)
+    }
+    val clean = run()
+    assert(clean._2 == 2000 && clean._1.size == 2000 && clean._3 == (0 until 8).toSet, clean._3)
+    for (kind <- kinds) {
+      val ((rows, n, buckets), fired) = InjectedFailures.during(kind)(run())
+      assert(fired > 0, s"$kind: nothing injected")
+      assert(buckets == clean._3, s"$kind: buckets $buckets")
+      assert(n == 2000 && rows == clean._1, s"$kind: $n rows, " +
+        s"missing=${(clean._1 -- rows).size} extra=${(rows -- clean._1).size}")
     }
   }
 }

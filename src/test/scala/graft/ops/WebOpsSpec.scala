@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** URL/domain blocklist filtering: host extraction and suffix chains must
@@ -11,21 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * blocked domain must be blocked while sibling domains survive, and the
   * broadcast path's hot stage must stay exchange-free.
   */
-class WebOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-web-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class WebOpsSpec extends AnyFunSuite with SparkSuite {
   private def urls(): DataFrame = {
     val s = spark
     import s.implicits._

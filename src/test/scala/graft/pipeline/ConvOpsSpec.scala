@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Conversation-level quality operators: the skew-safe successor-join
@@ -13,21 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the stats plan must contain NO window operator (the scale
   * property the successor join exists for).
   */
-class ConvOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-conv-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ConvOpsSpec extends AnyFunSuite with SparkSuite {
   /** Deterministic corpus: 30 conversations with role cycles of different
     * periods (so some alternate cleanly and some repeat), a planted
     * 2,000-turn monster conversation, empty turns, and one conversation

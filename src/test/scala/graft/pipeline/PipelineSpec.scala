@@ -2,10 +2,9 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import graft.SparkSuite
 import graft.core.TagAttributes
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Inverse of TranscriptGen's (global id → conv, turn) mapping, for tests. */
@@ -24,22 +23,7 @@ object TranscriptGenTestHelper {
   * per-turn results exactly, under any partitioning, with working
   * bucket-level resume.
   */
-class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-pipeline-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class PipelineSpec extends AnyFunSuite with SparkSuite {
   test("distributed extract equals pure-core extract per turn (stable ordering)") {
     val n = 4000
     val out = ExtractJob.extract(TranscriptGen.turns(spark, n, seed = 42, partitions = 16))

@@ -1,35 +1,20 @@
 package graft.pipeline
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions — the properties that matter at 100 TB must be
   * visible in the plan, not assumed: no shuffle in the extraction hot path,
   * broadcast joins for small dimensions, column pruning reaching the scan.
   */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
+class PlanSpec extends AnyFunSuite with SparkSuite {
+  override protected def conf = Map("spark.sql.warehouse.dir" ->
+    java.nio.file.Files.createTempDirectory("graft_wh").toString)
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plan-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def collectPlan(p: SparkPlan): Seq[SparkPlan] = {
     val self = p match {

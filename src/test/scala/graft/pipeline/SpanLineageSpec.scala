@@ -1,9 +1,8 @@
 package graft.pipeline
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.SparkSuite
 import graft.core.TagAttributes
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.io.Source
@@ -13,21 +12,8 @@ import scala.io.Source
   * emitted (input span → output span) rows must tile the strip output
   * exactly and each output slice must equal its input slice.
   */
-class SpanLineageSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
+class SpanLineageSpec extends AnyFunSuite with SparkSuite {
   private val mapper = new ObjectMapper()
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-span-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def config(name: String): Map[String, TagAttributes] = name match {
     case "canonical" => TagAttributes.bbcodeCanonical

@@ -2,30 +2,15 @@ package graft.sources
 
 import java.nio.file.Files
 
+import graft.SparkSuite
 import graft.pipeline.TranscriptGen
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source/sink round-trip + the scan-side properties that matter at scale:
   * partition pruning on the date layout and column pruning through the
   * typed boundary.
   */
-class TranscriptSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-source-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class TranscriptSourceSpec extends AnyFunSuite with SparkSuite {
   test("partitioned write + filtered read: round trip, pruning reaches the scan") {
     val dir = Files.createTempDirectory("graft_src").toString
     val turns = TranscriptGen.turns(spark, 3000, seed = 42, partitions = 8)

@@ -2,33 +2,20 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.SparkSuite
 import graft.core.TagAttributes
 import graft.pipeline.{ExtractJob, TranscriptGen, Turn}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.streaming.OutputMode
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming path equality: the stream must produce exactly the batch
   * results per turn; stateful conversation tracking must accumulate across
   * micro-batches.
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-  @transient private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-streaming-test")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingSpec extends AnyFunSuite with SparkSuite {
+  override protected def cores: Int = 2
 
   private def turnsData(from: Long, until: Long): Seq[Turn] =
     (from until until).map(g => TranscriptGen.turnAt(g, 42))
