@@ -21,9 +21,9 @@ import scala.jdk.CollectionConverters._
   *    (default 1; a second run is JIT-warm).
   *  - `plans [outDir suffix] q…`: the formatted explain output of each
   *    query, on stdout or in `<outDir>/<q>_<suffix>.txt`.
-  *  - `profile [n] [cores]`: samples every executor-task thread's stack
-  *    while `n` generated turns are extracted, then prints the hottest
-  *    frames (top frame plus its caller).
+  *  - `profile [n] [cores]`: samples the stack of every RUNNABLE
+  *    executor-task thread while `n` generated turns are extracted, then
+  *    prints the hottest frames (top frame plus its caller).
   *  - `scale [n] [levels]`: for each comma-separated core level, extraction
   *    of `n` generated turns through Spark and through the Spark-free
   *    `extractTurn` loop on as many raw threads, and their ratio.
@@ -110,7 +110,9 @@ object Probe {
     val sampler = new Thread(() => {
       while (true) {
         if (sampling) Thread.getAllStackTraces.forEach { (t, frames) =>
-          if (t.getName.startsWith("Executor task launch") && frames.nonEmpty) {
+          // parked threads of the task-launch pool are idle, not work
+          if (t.getName.startsWith("Executor task launch") && frames.nonEmpty &&
+              t.getState == Thread.State.RUNNABLE) {
             val top = frames.take(2).map(f => s"${f.getClassName}.${f.getMethodName}").mkString(" <- ")
             counts.computeIfAbsent(top, _ => new AtomicLong()).incrementAndGet()
           }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,13 +16,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark) // natives available regardless of query order
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failed = writeQueries(spark, sfDir, outDir, SparkEntry.queries.toSeq)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -39,5 +33,24 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    println(s"[verify] ${failed.size} failed" +
+      (if (failed.isEmpty) "" else failed.mkString(": ", ", ", "")))
   }
+
+  /** Write each query's result to `<outDir>/<name>` as one parquet file;
+    * a query that throws is reported on stderr and skipped. Returns the
+    * names of the failed queries, in run order.
+    */
+  private[graft] def writeQueries(spark: SparkSession, sfDir: String, outDir: String,
+                                  queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : Seq[String] =
+    queries.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
 }

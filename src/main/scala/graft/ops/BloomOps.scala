@@ -66,23 +66,9 @@ object BloomOps {
       bits.map(java.lang.Long.bitCount(_).toLong).sum.toDouble / numBits
   }
 
-  /** Standard sizing: m = ceil(-n·ln p / ln²2) bits rounded UP to a
-    * multiple of 64 (the word granularity [[buildBloom]] requires — the
-    * extra bits only lower the FP rate), j = round(m/n·ln 2) hashes — the
-    * FP-optimal pair for `expectedKeys` at `fpRate`.
-    */
-  def sizeFor(expectedKeys: Long, fpRate: Double): (Long, Int) = {
-    require(expectedKeys > 0, s"expectedKeys must be positive: $expectedKeys")
-    require(fpRate > 0 && fpRate < 1, s"fpRate must be in (0,1): $fpRate")
-    val ln2 = math.log(2)
-    val raw = math.ceil(-expectedKeys * math.log(fpRate) / (ln2 * ln2)).toLong.max(64L)
-    val m = ((raw + 63) / 64) * 64
-    (m, hashesFor(m, expectedKeys))
-  }
-
   /** FP-optimal probe count for a bitset of `numBits` over `expectedKeys`:
     * round(m/n·ln 2), clamped to [1, 32]. The single source of the j
-    * formula for [[sizeFor]] and [[contaminationBloom]].
+    * formula for [[contaminationBloom]].
     */
   def hashesFor(numBits: Long, expectedKeys: Long): Int = {
     require(expectedKeys > 0, s"expectedKeys must be positive: $expectedKeys")
@@ -172,7 +158,7 @@ object BloomOps {
     val benchRows = benchSet.count()
     if (benchRows == 0) {
       // Empty benchmark: nothing can be contaminated; skip the build
-      // (sizeFor requires n > 0) and free the cache eagerly.
+      // (hashesFor requires n > 0) and free the cache eagerly.
       benchSet.unpersist()
       return train.select(col(idCol).as("id"), lit(0L).as("n_hits")).limit(0)
     }

@@ -193,30 +193,15 @@ object DedupOps {
       .distinct()
   }
 
-  /** LSH candidate pairs: band the signature into `bands` groups of
-    * `numHashes/bands` rows, bucket-join on (band, band-hash), emit unique
-    * id pairs. Only ids and 8-byte band hashes shuffle.
-    *
-    * Note: this utility recomputes the signature lineage per plan subtree
-    * (identical subtrees dedupe via exchange reuse); for guarded or
-    * repeated use, prefer [[minhashNearDups]], which persists the
-    * signature stage.
+  /** Exact n-gram Jaccard of candidate pairs `(id_a, id_b)` against the
+    * `(id, sh)` distinct-shingle sets of their documents: joins each side's
+    * set back, computes |∩| / |∪| with native array ops and keeps pairs with
+    * `jaccard >= threshold` as `(id_a, id_b, inter, union, jaccard)`. The
+    * one verify step of [[minhashNearDups]], [[dedupCorpus]] and
+    * [[incrementalNearDups]].
     */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-                        maxBucket: Int = Int.MaxValue): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val sig = df.select(col(idCol).as("id"), minhashSignature(col(textCol), k, numHashes).as("sig"))
-    bucketJoin(bandExplode(sig, bands, numHashes / bands), maxBucket, None)
-  }
-
-  /** Exact n-gram Jaccard for given candidate pairs (columns id_a, id_b):
-    * joins shingle sets back and computes |∩| / |∪| with native array ops.
-    */
-  def jaccardVerify(candidates: DataFrame, df: DataFrame, idCol: String, textCol: String,
-                    k: Int = 3): DataFrame = {
-    val sets = df.select(col(idCol).as("id"),
-      array_distinct(TextOps.shingles(col(textCol), k)).as("sh"))
+  private def verifyPairs(candidates: DataFrame, sets: DataFrame,
+                          threshold: Double): DataFrame =
     candidates
       .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
       .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -224,8 +209,8 @@ object DedupOps {
       .withColumn("union", size(array_union(col("sh_a"), col("sh_b"))))
       .withColumn("jaccard",
         when(col("union") === 0, lit(0.0)).otherwise(col("inter").cast("double") / col("union")))
+      .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "inter", "union", "jaccard")
-  }
 
   /** Expand representative-level pairs to full id pairs across fingerprint
     * groups, carrying the rep pair's metric columns (identical normalized
@@ -364,15 +349,7 @@ object DedupOps {
     val sets = df.join(broadcast(candIds), col(idCol) === col("__cid"), "left_semi")
       .select(col(idCol).as("id"), array_distinct(TextOps.shingles(col(textCol), k)).as("sh"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val repPairs = candidates
-      .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("union", size(array_union(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        when(col("union") === 0, lit(0.0)).otherwise(col("inter").cast("double") / col("union")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "inter", "union", "jaccard")
+    val repPairs = verifyPairs(candidates, sets, threshold)
 
     (repPairs, byRep, () => {
       repAgg.unpersist(blocking = false)
@@ -934,9 +911,8 @@ object DedupOps {
     * lost executor recomputes the blocks instead of failing the job; the
     * cache is released by Spark's ContextCleaner when the frame is GC'd).
     * Shared by the broadcast-guarded decontamination operators here AND
-    * [[graft.ops.BloomOps.contaminationBloom]] /
-    * [[graft.streaming.StreamingExtract.decontaminateStreamBloom]], so
-    * the bench-side semantics cannot drift between the families. Applies
+    * [[graft.ops.BloomOps.contaminationBloom]], so the bench-side
+    * semantics cannot drift between the families. Applies
     * NO broadcast hint — that guard belongs to [[benchShingleSide]].
     */
   private[graft] def benchShingleSet(bench: DataFrame, textCol: String,
@@ -1588,8 +1564,9 @@ object DedupOps {
       // makes a corpusText that already includes the batch rows safe
       // (without it each batch-involving pair would verify twice)
       .dropDuplicates(idCol)
-    jaccardVerify(cands, texts, idCol, textCol, k)
-      .filter(col("jaccard") >= threshold)
+    val sets = texts.select(col(idCol).as("id"),
+      array_distinct(TextOps.shingles(col(textCol), k)).as("sh"))
+    verifyPairs(cands, sets, threshold)
   }
 
   /** The candidate (id_a, id_b) stage of [[incrementalNearDups]],
@@ -1631,29 +1608,6 @@ object DedupOps {
         greatest(col("o.id"), col("n.id")).as("id_b"))
     val batchPairs = bucketJoin(newBanded, maxBucket, None)
     crossPairs.union(batchPairs).distinct()
-  }
-
-  /** Compact a multi-batch MinHash index into a fresh single-batch index at
-    * `destDir` — after months of daily appends the `banded/` listing is
-    * thousands of directories of small files, and every query pays the
-    * footer-read fan-out. Compaction writes a NEW index (params copied,
-    * all committed rows under one `batch=<label>`) rather than rewriting
-    * `srcDir` in place: object stores have no atomic directory swap, so
-    * the only crash-safe contract is write-new-then-repoint — a death
-    * mid-compact leaves `srcDir` fully serviceable and `destDir` simply
-    * uncommitted. Torn batches in `srcDir` are (correctly) not carried.
-    */
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                          srcDir: String, destDir: String,
-                          label: String = "compacted"): Unit = {
-    val (k, numHashes, bands) = readMinhashIndexParams(spark, srcDir)
-    val (fs, root) = idxFs(spark, destDir)
-    if (fs.exists(root)) fs.delete(root, true)
-    val marker = freshMarker(fs, root, label, destDir)
-    writeIndexParams(spark, destDir, k, numHashes, bands)
-    committedBanded(spark, srcDir)
-      .write.mode("overwrite").parquet(s"$destDir/$IdxBanded/batch=$label")
-    fs.create(marker, true).close()
   }
 
   // ---- incremental EXACT dedup: fingerprint index ------------------------

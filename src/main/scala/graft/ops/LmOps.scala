@@ -42,7 +42,7 @@ object LmOps {
     */
   def bigramLm(ref: DataFrame, textCol: String): (DataFrame, DataFrame, Long) = {
     // the order-2 instance of [[ngramLm]], renamed to the (w1, w2, c12) /
-    // (w1, c1) schema [[collectBigramModel]] and existing callers expect —
+    // (w1, c1) schema [[perplexityBits]] and existing callers expect —
     // ONE implementation of the counting/smoothing pipeline, so a fix to
     // either path cannot silently diverge the other (the n=2 equivalence
     // is additionally spec-pinned)
@@ -182,109 +182,6 @@ object LmOps {
         when(col("n_ngrams") > 0,
           round(col("bits_sum").cast("double") / col("n_ngrams"), 4))
           .as("bits"))
-  }
-
-  /** Collect a trained bigram model to driver maps for broadcast into a
-    * stateless stream filter — counted BEFORE collecting (the guarded-
-    * collect discipline of [[graft.streaming.StreamingExtract
-    * .decontaminateStream]]): an oversized model fails with a clear
-    * message instead of the driver OOM the guard exists to prevent. Batch
-    * scoring ([[perplexityBits]]) has no such bound — its joins complete
-    * at any model size.
-    *
-    * Size the bound to the driver heap, not to wishful thinking: each
-    * collected entry costs ~120–150 B on the driver (Row, boxed tuple
-    * key, map node), so the 5M default is ~600–750 MB — safe on the 8 GiB+
-    * drivers streaming jobs run with, NOT on a default 1 GiB driver.
-    * A reference corpus easily exceeds this (8M random-soup tokens already
-    * produced 7.8M distinct bigrams in the BENCH.md stress); prune the
-    * model (minimum-count filter on the count tables) before collecting,
-    * or score in batch.
-    */
-  def collectBigramModel(bigrams: DataFrame, unigrams: DataFrame,
-                         maxEntries: Long = 5000000L)
-      : (Map[(String, String), Long], Map[String, Long]) = {
-    val nBi = bigrams.count()
-    val nUni = unigrams.count()
-    require(nBi + nUni <= maxEntries,
-      s"LM model has ${nBi + nUni} count entries > $maxEntries — too large " +
-        "to broadcast to a stream filter; score in batch (perplexityBits) " +
-        "or raise the bound deliberately")
-    (bigrams.collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap,
-      unigrams.collect().map(r => (r.getString(0), r.getLong(1))).toMap)
-  }
-
-  /** Driver/executor-side scalar mirror of [[perplexityBits]]: same
-    * tokenization, same per-term 6-decimal rounding, same exact decimal
-    * sum, same 4-decimal mean — exact-equality-tested against the batch
-    * scorer in LmOpsSpec so stream and batch agree on every document.
-    * None ⇔ the batch scorer's NULL (< 2 tokens).
-    *
-    * The mirror is precise about three engine quirks the obvious Java
-    * one-liners get wrong (each flips real scores): Spark's `trim` strips
-    * ONLY 0x20 spaces (Java `String.trim` strips every char ≤ 0x20, so
-    * `"the cat\n"` would lose its trailing empty token and score one
-    * fewer bigram); Spark's `split` keeps trailing empty strings (Java
-    * default limit drops them); and Spark's `lower` is UTF8String's
-    * ASCII fast path for pure-ASCII input with a DEFAULT-locale
-    * `String.toLowerCase` fallback otherwise (so `Locale.ROOT` would
-    * diverge on every locale-sensitive mapping the engine applies).
-    * `log2` uses `StrictMath.log` exactly as Spark's `Log2` codegen does
-    * — `Math.log` is intrinsified and may differ by 1 ulp, enough to
-    * flip the 6-decimal HALF_UP rounding.
-    */
-  private[graft] def bitsLocal(text: String, bi: Map[(String, String), Long],
-                               uni: Map[String, Long],
-                               vocab: Long): Option[Double] = {
-    if (text == null) return None
-    val t = trimSpaces(lowerLikeSpark(text))
-    if (t.isEmpty) return None
-    val toks = t.split("\\s+", -1)
-    if (toks.length < 2) return None
-    var sum = java.math.BigDecimal.ZERO
-    var i = 0
-    while (i < toks.length - 1) {
-      val c12 = bi.getOrElse((toks(i), toks(i + 1)), 0L)
-      val c1 = uni.getOrElse(toks(i), 0L)
-      val p = (c12 + 1.0) / (c1 + vocab.toDouble)
-      val term = -(StrictMath.log(p) / StrictMath.log(2.0))
-      sum = sum.add(java.math.BigDecimal.valueOf(term)
-        .setScale(6, java.math.RoundingMode.HALF_UP))
-      i += 1
-    }
-    val n = toks.length - 1
-    Some(java.math.BigDecimal.valueOf(sum.doubleValue() / n)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue())
-  }
-
-  /** Spark `trim` semantics: strip leading/trailing 0x20 ONLY. */
-  private def trimSpaces(s: String): String = {
-    var a = 0
-    var b = s.length
-    while (a < b && s.charAt(a) == ' ') a += 1
-    while (b > a && s.charAt(b - 1) == ' ') b -= 1
-    s.substring(a, b)
-  }
-
-  /** Spark `lower` semantics (UTF8String.toLowerCase): per-char ASCII
-    * mapping when the string is pure ASCII, default-locale
-    * `String.toLowerCase` otherwise.
-    */
-  private def lowerLikeSpark(s: String): String = {
-    var ascii = true
-    var i = 0
-    while (ascii && i < s.length) { if (s.charAt(i) >= 0x80) ascii = false; i += 1 }
-    if (!ascii) s.toLowerCase
-    else {
-      val b = new java.lang.StringBuilder(s.length)
-      var j = 0
-      while (j < s.length) {
-        val c = s.charAt(j)
-        b.append(if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
-        j += 1
-      }
-      b.toString
-    }
   }
 
   /** Add-one-smoothed unigram counts + total + vocab of a corpus — one

@@ -2,25 +2,21 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata, plus decode / feature-extract /
   * resize / frame-sample stages as batched per-partition transforms.
   *
-  * Two decode paths exist behind one interface:
-  *  - a REAL codec path ([[decodeImage]] / [[resizeImagesCodec]] /
-  *    [[extractFeaturesCodec]]) backed by the JDK's `javax.imageio`
-  *    (PNG/JPEG/GIF/BMP/TIFF — headless-safe, probed at runtime via
-  *    [[codecAvailable]]), used whenever the payload actually decodes;
-  *  - a clearly-marked deterministic STUB (`fakeDecode`, byte-sampling
-  *    resize) used as the fallback for undecodable payloads and as the
-  *    test double — the synthesized test corpus carries text bytes, not
-  *    real images, so its oracled queries stay on the stub path.
-  * Everything around either path (schema, batching, partitioning, output
-  * shape) is the same Spark plumbing: a video/audio FFI decoder would drop
-  * into the same `mapPartitions` slot.
+  * Feature extraction, resize and frame sampling run a clearly-marked
+  * deterministic STUB (`fakeDecode`, byte-sampling resize): the
+  * synthesized test corpus carries text bytes, not real images, and a real
+  * decoder would drop into the same `mapPartitions` slot. Image near-dup
+  * detection ([[imageNearDups]]) decodes for real through the JDK's
+  * `javax.imageio` ([[decodeImage]], probed at runtime via
+  * [[codecAvailable]]) and falls back to an exact-bytes content hash for
+  * payloads that do not decode.
   */
 object MediaOps {
   /** One media object: opaque payload + typed metadata. */
@@ -125,9 +121,8 @@ object MediaOps {
 
   /** True when the JVM ships image codecs (javax.imageio readers exist).
     * Always true on a standard JDK (java.desktop module); false only on
-    * jlink-stripped runtimes — the codec entry points below fall back to
-    * the stub per-row when a payload doesn't decode, and callers can check
-    * this probe to skip the codec path wholesale.
+    * jlink-stripped runtimes, where [[decodeImage]] returns None and
+    * [[imageDHash]] takes its content-hash fallback for every row.
     */
   lazy val codecAvailable: Boolean =
     try javax.imageio.ImageIO.getReaderFormatNames.nonEmpty
@@ -146,12 +141,6 @@ object MediaOps {
       // them, and one such row must fall back, not kill the stage
       try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload)))
       catch { case scala.util.control.NonFatal(_) => None }
-
-  private def encodePng(img: java.awt.image.BufferedImage): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
 
   private def scaleImage(src: java.awt.image.BufferedImage,
                          w: Int, h: Int): java.awt.image.BufferedImage = {
@@ -267,252 +256,7 @@ object MediaOps {
       maxHamming, nBands = nBands, maxBucket = maxBucket)
   }
 
-  /** 64-bit audio fingerprint over the decoded envelope: the clip splits
-    * into 65 equal time windows, bit i is set iff window i+1 has more RMS
-    * energy than window i — the dHash idea on the energy envelope.
-    * Invariant under uniform amplitude scaling (every RMS scales by the
-    * same factor, so the comparisons are unchanged) and under resampling
-    * (windows are time-fractions, not sample counts). Degenerate flat
-    * envelopes (a pure tone, silence) all hash to 0 and land in one
-    * bucket — exactly what the hot-bucket guard downstream is for.
-    */
-  private[ops] def audioEnvelopeHash(clip: AudioClip): Long = {
-    val n = clip.samples.length
-    if (n == 0) return 0L
-    val w = 65
-    val rms = new Array[Double](w)
-    var i = 0
-    while (i < w) {
-      val s = (n.toLong * i / w).toInt
-      val e = (n.toLong * (i + 1) / w).toInt
-      var acc = 0.0
-      var j = s
-      while (j < e) { acc += clip.samples(j).toDouble * clip.samples(j); j += 1 }
-      rms(i) = if (e > s) math.sqrt(acc / (e - s)) else 0.0
-      i += 1
-    }
-    var bits = 0L
-    i = 0
-    while (i < 64) { if (rms(i + 1) > rms(i)) bits |= 1L << i; i += 1 }
-    bits
-  }
-
-  /** Audio fingerprint per row: `(media_id, doc_id, afp, decoded)` — real
-    * WAV path ([[decodeAudio]] → [[audioEnvelopeHash]]) with the same
-    * bytes-only avalanche fallback as images ([[dHashStub]]; the decode
-    * attempt ignores the kind label for the same mislabeled-row reason as
-    * [[imageDHash]]). One map-side pass, no shuffle.
-    */
-  def audioFingerprints(media: Dataset[MediaFile]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map { m =>
-      decodeAudio(m.payload) match {
-        case Some(clip) => (m.media_id, m.doc_id, audioEnvelopeHash(clip), true)
-        case None => (m.media_id, m.doc_id, dHashStub(m.payload), false)
-      }
-    }).toDF("media_id", "doc_id", "afp", "decoded")
-  }
-
-  /** Audio near-dup pairs — same enforced-pigeonhole Hamming-banded shape
-    * as [[imageNearDups]], over the envelope fingerprints. The returned
-    * frame is persisted — caller unpersists when done.
-    */
-  def audioNearDups(media: Dataset[MediaFile], maxHamming: Int = 3,
-                    maxBucket: Int = Int.MaxValue, nBands: Int = 4): DataFrame = {
-    require(maxHamming < nBands,
-      s"maxHamming $maxHamming >= nBands $nBands would lose the pigeonhole " +
-        "recall guarantee — raise nBands (must divide 64; mind the bucket-" +
-        "cardinality tradeoff documented on hammingNearDups)")
-    DedupOps.hammingNearDups(audioFingerprints(media), "media_id", "afp",
-      maxHamming, nBands = nBands, maxBucket = maxBucket)
-  }
-
-  /** Visual dedup composition — the image analogue of
-    * [[graft.ops.DedupOps.dedupCorpus]]: perceptual near-dup pairs →
-    * connected components (strict: an unconverged labeling could silently
-    * drop keepers) → min-media_id keeper per visual cluster; returns the
-    * surviving rows. Scale shape: pairs shuffle (id, 8-byte phash) rows,
-    * the CC iterates on two-long rows, and the loser anti-join keys on
-    * media_id — payload bytes never cross an exchange anywhere in the
-    * composition.
-    */
-  def dedupImages(media: Dataset[MediaFile], maxHamming: Int = 3,
-                  maxBucket: Int = Int.MaxValue, nBands: Int = 4,
-                  maxIter: Int = 20): Dataset[MediaFile] = {
-    val pairs = imageNearDups(media, maxHamming, maxBucket, nBands)
-    try {
-      val labels = DedupOps.connectedComponents(
-        pairs.select("id_a", "id_b"), maxIter, strict = true)
-      val losers = labels.filter(col("id") =!= col("cluster"))
-        .select(col("id").as("media_id"))
-      import media.sparkSession.implicits._
-      media.join(losers, Seq("media_id"), "left_anti").as[MediaFile]
-    } finally pairs.unpersist(blocking = false)
-    // safe to release before the caller's action: the survivor frame
-    // depends only on the CC labels, which are checkpoint-truncated
-  }
-
-  /** Codec-backed resize: decode (ImageIO), bilinear-scale, re-encode as
-    * PNG, with true decoded dimensions in the metadata. Payloads that do
-    * not decode fall back to the deterministic stub row so a mixed corpus
-    * (some rows real images, some junk) still flows end-to-end. Same
-    * batched per-partition shape as the stub stage.
-    */
-  def resizeImagesCodec(media: Dataset[MediaFile], targetW: Int, targetH: Int): Dataset[MediaFile] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { iter =>
-      iter.map { m =>
-        if (m.kind != "image") m
-        else decodeImage(m.payload) match {
-          case Some(img) =>
-            m.copy(width = targetW, height = targetH,
-              payload = encodePng(scaleImage(img, targetW, targetH)))
-          case None => stubResizeRow(m, targetW, targetH)
-        }
-      }
-    }
-  }
-
-  /** ======== REAL audio path (JDK javax.sound.sampled) ======== */
-
-  /** Decoded audio: mono PCM samples in [-1, 1] at `sampleRate` Hz. */
-  final case class AudioClip(sampleRate: Float, samples: Array[Float])
-
-  /** True when the JVM ships audio file readers (WAV/AIFF/AU on a standard
-    * JDK — java.desktop's javax.sound.sampled, headless-safe; compressed
-    * formats like mp3 need codecs the JDK does not ship).
-    */
-  lazy val audioCodecAvailable: Boolean =
-    try javax.sound.sampled.AudioSystem.getAudioFileTypes.nonEmpty
-    catch { case _: Throwable => false }
-
-  /** Real audio decode: parse the payload's container (WAV/AIFF/AU),
-    * convert to 16-bit signed PCM if needed, downmix channels to mono in
-    * [-1, 1]. None when the payload is not decodable audio — same
-    * NonFatal-fallback contract as [[decodeImage]] (a crawl corpus WILL
-    * contain truncated/adversarial payloads).
-    */
-  def decodeAudio(payload: Array[Byte]): Option[AudioClip] =
-    if (payload == null || payload.isEmpty || !audioCodecAvailable) None
-    else {
-      import javax.sound.sampled._
-      try {
-        val raw = AudioSystem.getAudioInputStream(new java.io.ByteArrayInputStream(payload))
-        try {
-          val src = raw.getFormat
-          val target = new AudioFormat(AudioFormat.Encoding.PCM_SIGNED,
-            src.getSampleRate, 16, src.getChannels, src.getChannels * 2,
-            src.getSampleRate, false)
-          val in = if (src.matches(target)) raw else AudioSystem.getAudioInputStream(target, raw)
-          val bytes = in.readAllBytes()
-          val ch = math.max(1, target.getChannels)
-          val nFrames = bytes.length / (2 * ch)
-          val out = new Array[Float](nFrames)
-          var i = 0
-          while (i < nFrames) {
-            var sum = 0f
-            var c = 0
-            while (c < ch) {
-              val off = (i * ch + c) * 2 // little-endian 16-bit signed
-              val s = (((bytes(off + 1) & 0xff) << 8) | (bytes(off) & 0xff)).toShort
-              sum += s / 32768.0f
-              c += 1
-            }
-            out(i) = sum / ch
-            i += 1
-          }
-          Some(AudioClip(target.getSampleRate, out))
-        } finally raw.close()
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
-
-  /** Per-window audio features over decoded PCM: the clip is split into
-    * `dims / 2` equal windows; each contributes (RMS energy, zero-crossing
-    * rate) — the classic cheap audio descriptors. Returns (features,
-    * window count).
-    */
-  private[ops] def audioFeatures(clip: AudioClip, dims: Int): (Array[Float], Int) = {
-    val windows = math.max(1, dims / 2)
-    val out = new Array[Float](dims)
-    val n = clip.samples.length
-    // a decodable zero-sample clip (valid WAV, empty data chunk — crawl
-    // corpora contain these) keeps the frames >= 1 invariant every other
-    // feature path maintains: zero features over one (empty) window
-    if (n == 0) return (out, 1)
-    var w = 0
-    while (w < windows) {
-      val from = (w.toLong * n / windows).toInt
-      val until = math.max(from + 1, ((w + 1).toLong * n / windows).toInt)
-      var sq = 0.0
-      var crossings = 0
-      var i = from
-      while (i < until && i < n) {
-        val s = clip.samples(i)
-        sq += s * s
-        if (i > from && (s >= 0) != (clip.samples(i - 1) >= 0)) crossings += 1
-        i += 1
-      }
-      val len = math.max(1, math.min(until, n) - from)
-      if (2 * w < dims) out(2 * w) = math.sqrt(sq / len).toFloat
-      if (2 * w + 1 < dims) out(2 * w + 1) = crossings.toFloat / len
-      w += 1
-    }
-    (out, windows)
-  }
-
-  /** Codec-backed feature extraction: decode, scale to a √dims-ish grid,
-    * emit per-cell RGB means in [0,1] — a real (if simple) visual feature.
-    * Audio payloads decode through the JDK's javax.sound.sampled (WAV/
-    * AIFF/AU) into per-window RMS + zero-crossing features. Undecodable
-    * payloads fall back to [[fakeDecode]].
-    */
-  def extractFeaturesCodec(media: Dataset[MediaFile], dims: Int = 16): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val grid = math.max(1, math.sqrt(dims / 3.0).toInt)
-    media.mapPartitions { iter =>
-      iter.map { m0 =>
-        // null payload (failed download) is in-domain, same contract as
-        // [[stubResizeRow]]: zero-ish features from an empty payload,
-        // n_bytes 0 — one bad row must not NPE the stage
-        val m = if (m0.payload == null) m0.copy(payload = Array.emptyByteArray) else m0
-        def stubFrames: Int = m.kind match {
-          case "video" => math.max(1, (m.duration_ms / 1000).toInt)
-          case "audio" => math.max(1, (m.duration_ms / 500).toInt)
-          case _       => 1
-        }
-        val (feats, frames) = m.kind match {
-          case "image" => decodeImage(m.payload) match {
-            case Some(img) =>
-              val small = scaleImage(img, grid, grid)
-              val out = new Array[Float](dims)
-              var idx = 0
-              for (y <- 0 until grid; x <- 0 until grid; c <- 0 until 3
-                   if idx < dims) {
-                val rgb = small.getRGB(x, y)
-                out(idx) = (((rgb >> (16 - 8 * c)) & 0xff) / 255.0f)
-                idx += 1
-              }
-              (out, 1)
-            case None => (fakeDecode(m.payload, dims), stubFrames)
-          }
-          case "audio" => decodeAudio(m.payload) match {
-            case Some(clip) => audioFeatures(clip, dims) // frames = real windows
-            case None       => (fakeDecode(m.payload, dims), stubFrames)
-          }
-          case _ => (fakeDecode(m.payload, dims), stubFrames)
-        }
-        MediaFeatures(m.media_id, m.doc_id, m.kind, m.payload.length,
-          contentHash(m.payload), feats, frames)
-      }
-    }
-  }
-
-  /** The deterministic stub resize of a single row (shared by the stub
-    * stage and the codec stage's undecodable fallback).
-    */
+  /** The deterministic stub resize of a single row. */
   private def stubResizeRow(m: MediaFile, targetW: Int, targetH: Int): MediaFile =
     // empty payload with intact metadata (failed download) passes through
     // rather than indexing an empty array below

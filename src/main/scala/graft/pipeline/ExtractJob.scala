@@ -196,11 +196,10 @@ object ExtractJob {
       extractMainContent(pending, cfg, metrics).toDF()
     }
 
-  /** Core per-turn main-content transform — pure; shared by the batch and
-    * streaming faces so per-turn equality between them holds by
-    * construction (same contract as [[extractTurn]]).
+  /** Core per-turn main-content transform — pure; a failure becomes the
+    * row's `parse_error` (same contract as [[extractTurn]]).
     */
-  def mainContentTurn(t: Turn, cfg: Map[String, TagAttributes]): MainContentOut =
+  private def mainContentTurn(t: Turn, cfg: Map[String, TagAttributes]): MainContentOut =
     try MainContentOut(t.conv_id, t.turn_idx, t.role, t.tool, t.ts,
       ContentExtract.mainContent(t.text, cfg),
       if (t.text == null) 0 else t.text.length, null)

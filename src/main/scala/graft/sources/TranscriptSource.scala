@@ -1,10 +1,10 @@
 package graft.sources
 
 import graft.pipeline.Turn
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Pluggable transcript-table source/sink.
+/** Pluggable transcript-table source.
   *
   * The production target is an Iceberg catalog table; this sandbox ships no
   * Iceberg jar, so the reader takes the format as configuration: the same
@@ -39,15 +39,4 @@ object TranscriptSource {
     cfg.convFilter.foreach(c => df = df.filter(col("conv_id") === lit(c)))
     df.select(turnCols.map(col): _*).as[Turn]
   }
-
-  /** Write turns in the Iceberg-like layout: partitioned by event date
-    * (coarse pruning) — at 10^12 turns this gives day-level scan elision,
-    * with file-level min/max stats handling conv_id ranges within a day.
-    */
-  def writePartitioned(turns: Dataset[Turn], path: String,
-                       mode: SaveMode = SaveMode.Overwrite): Unit =
-    turns.withColumn("ts_date", date_format(col("ts"), "yyyy-MM-dd"))
-      .write.mode(mode)
-      .partitionBy("ts_date")
-      .parquet(path)
 }

@@ -43,7 +43,7 @@ class BenchGateSpec extends AnyFunSuite {
   test("bench evidence file covers every query at HEAD (no stale-artifact claims)") {
     // the round-2 failure mode: a query lands after the last bench refresh
     // and the committed evidence silently stops covering HEAD. This pins
-    // BENCH_local_r3.json to the full query set — adding a query without
+    // BENCH_local_r5.json to the full query set — adding a query without
     // re-running Bench (and refreshing the artifact) fails here.
     val f = new java.io.File("BENCH_local_r5.json")
     assert(f.exists, "BENCH_local_r5.json missing from repo root")
@@ -57,6 +57,6 @@ class BenchGateSpec extends AnyFunSuite {
     val missing = SparkEntry.queries.keySet -- benched
     assert(missing.isEmpty,
       s"queries not covered by the committed bench artifact (re-run Bench and " +
-        s"refresh BENCH_local_r3.json): ${missing.mkString(", ")}")
+        s"refresh BENCH_local_r5.json): ${missing.mkString(", ")}")
   }
 }

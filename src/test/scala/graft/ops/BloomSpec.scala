@@ -69,8 +69,10 @@ class BloomSpec extends AnyFunSuite with SparkSuite {
 
   test("build is deterministic across partitionings and has no false negatives") {
     val keys = (0 until 5000).map(i => DedupOps.hash64("key" + i))
-    val (numBits, j) = BloomOps.sizeFor(keys.size.toLong, 0.01)
-    assert(numBits % 64 == 0, "sizeFor must emit word-granular sizes buildBloom accepts")
+    // ceil(-n·ln 0.01 / ln²2) = 47,926 bits for n = 5,000 keys (a 1% FP
+    // budget), rounded up to the 64-bit words buildBloom requires
+    val numBits = 47936L
+    val j = BloomOps.hashesFor(numBits, keys.size.toLong)
     val keysDf = spark.createDataFrame(keys.map(Tuple1(_))).toDF("h")
     val one = BloomOps.buildBloom(keysDf.repartition(1), numBits, j)
     val many = BloomOps.buildBloom(keysDf.repartition(13), numBits, j)
@@ -112,9 +114,9 @@ class BloomSpec extends AnyFunSuite with SparkSuite {
     assert(!phys.contains("Window"), "no window anywhere in the decontamination plan")
   }
 
-  test("sizeFor rejects nonsense; empty bench short-circuits") {
-    intercept[IllegalArgumentException](BloomOps.sizeFor(0, 0.01))
-    intercept[IllegalArgumentException](BloomOps.sizeFor(100, 0.0))
+  test("hashesFor rejects an empty key set; empty bench short-circuits") {
+    intercept[IllegalArgumentException](BloomOps.hashesFor(64, 0))
+    intercept[IllegalArgumentException](BloomOps.hashesFor(64, -1))
     val d = corpus
     val none = BloomOps.contaminationBloom(
       d, d.filter(lit(false)), "doc_id", "text", k = 5)

@@ -98,35 +98,6 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkSuite {
     assert(inc.isEmpty, inc.toString)
   }
 
-  test("compaction: a compacted index answers identically from one batch dir") {
-    val src = tmp("graft_inc_c1")
-    val dst = tmp("graft_inc_c2")
-    DedupOps.writeMinhashIndex(oldCorpus(), "doc_id", "text", src,
-      k = 3, numHashes = 512, bands = 64)
-    DedupOps.appendMinhashIndex(batch(), "doc_id", "text", src, "day1")
-    // plus a torn append that compaction must NOT carry
-    val torn = toDf(Seq((900L, soup(88) + " tornmark")))
-    DedupOps.appendMinhashIndex(torn, "doc_id", "text", src, "torn")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tornMarker = new org.apache.hadoop.fs.Path(src, "_COMMITTED_torn")
-    tornMarker.getFileSystem(conf).delete(tornMarker, false)
-
-    DedupOps.compactMinhashIndex(spark, src, dst)
-    val day2 = toDf(Seq((300L, nearDup(400)), (301L, nearDup(20)),
-      (302L, soup(88) + " tornmark")))
-    val corpus = oldCorpus().union(batch())
-    val fromSrc = pairSet(DedupOps.incrementalNearDups(day2, "doc_id", "text",
-      src, corpus, threshold = 0.5))
-    val fromDst = pairSet(DedupOps.incrementalNearDups(day2, "doc_id", "text",
-      dst, corpus, threshold = 0.5))
-    assert(fromSrc == fromDst && fromSrc == Set((220L, 300L), (20L, 301L)),
-      s"src=$fromSrc dst=$fromDst")
-    // one batch directory in the compacted layout
-    val bandedDirs = new java.io.File(s"$dst/banded").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    assert(bandedDirs == Set("batch=compacted"), bandedDirs.toString)
-  }
-
   test("filterUnseen: index hits, batch-internal first-wins, null text, torn append") {
     val dir = tmp("graft_fp1")
     DedupOps.writeFingerprintIndex(oldCorpus(), "doc_id", "text", dir)

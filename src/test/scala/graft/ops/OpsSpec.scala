@@ -767,15 +767,20 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("minhash LSH finds all planted near-dups (recall) with verified jaccard") {
-    val pairs = DedupOps.minhashNearDups(docsDf, "doc_id", "text", threshold = 0.7)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val reported = DedupOps.minhashNearDups(docsDf, "doc_id", "text", threshold = 0.7)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(4)).toMap
+    val pairs = reported.keySet
     val expected = (0 until 30).map(i => (i.toLong, 1000L + i)).toSet
     assert(expected.subsetOf(pairs), s"missing: ${expected -- pairs}")
-    // and no wildly-false positives: every reported pair really has j>=0.7
-    val verified = DedupOps.jaccardVerify(
-      DedupOps.minhashCandidates(docsDf, "doc_id", "text"), docsDf, "doc_id", "text")
-      .filter(col("jaccard") >= 0.7).count()
-    assert(verified == pairs.size)
+    // and no false positives: every reported pair's Jaccard, recomputed
+    // from the documents' word 3-shingle sets, is the reported one and >= 0.7
+    val sets = docsDf.collect().map { r =>
+      r.getLong(0) -> r.getString(1).split(" ").sliding(3).map(_.mkString(" ")).toSet
+    }.toMap
+    reported.foreach { case ((a, b), jaccard) =>
+      val j = (sets(a) & sets(b)).size.toDouble / (sets(a) | sets(b)).size
+      assert(j >= 0.7 && j == jaccard, s"pair ($a, $b): reported $jaccard, recomputed $j")
+    }
   }
 
   test("simhash: planted near-dups collide with small hamming distance") {
@@ -925,9 +930,19 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // 40 docs with the same single shingle-ish text land in one hot bucket
     val hot = (0 until 40).map(i => (5000L + i, s"common phrase here unique$i"))
     val df = docsDf.union(spark.createDataFrame(hot).toDF("doc_id", "text"))
-    val capped = DedupOps.minhashCandidates(df, "doc_id", "text", maxBucket = 8).count()
-    val uncapped = DedupOps.minhashCandidates(df, "doc_id", "text").count()
-    assert(capped <= uncapped)
+    // threshold 0: every verified candidate pair is reported
+    def pairSet(maxBucket: Int): Set[(Long, Long)] = {
+      val pairs = DedupOps.minhashNearDups(df, "doc_id", "text", threshold = 0.0,
+        maxBucket = maxBucket)
+      try pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      finally pairs.unpersist()
+    }
+    val capped = pairSet(8)
+    val uncapped = pairSet(Int.MaxValue)
+    assert(capped.subsetOf(uncapped), s"guard invented pairs: ${capped -- uncapped}")
+    assert(capped.size < uncapped.size, "the cap must drop the hot bucket's pairs")
+    val planted = (0 until 30).map(i => (i.toLong, 1000L + i)).toSet
+    assert(planted.subsetOf(capped), s"small buckets lost: ${planted -- capped}")
   }
 
   test("topKPerQuery matches a window top-k exactly incl. ties") {

@@ -217,6 +217,41 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       s"survivor filtering must not shuffle the corpus:\n${df.queryExecution.executedPlan}")
   }
 
+  test("dedupCorpus clusters on star edges: no within-group self-join, no cross expansion") {
+    import graft.ops.DedupOps
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, Expression, LessThan}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    def attrs(a: Expression, b: Expression, name: String) =
+      (a, b) match {
+        case (x: AttributeReference, y: AttributeReference) => x.name == name && y.name == name
+        case _ => false
+      }
+    // the within-group clique: a self-join on rep = rep with id < id
+    def withinGroupJoins(p: LogicalPlan) = p.collect {
+      case j @ Join(_, _, _, Some(cond), _)
+          if cond.exists { case EqualTo(a, b) => attrs(a, b, "rep"); case _ => false } &&
+            cond.exists { case LessThan(a, b) => attrs(a, b, "id"); case _ => false } => j
+    }
+    // the rep-pair to member-pair expansion: members aliased ma / mb
+    def crossAliases(p: LogicalPlan) = p.flatMap(_.expressions.flatMap(_.collect {
+      case a: Alias if a.name == "ma" || a.name == "mb" => a.name
+    }))
+    // positive control: the public pair list takes both expansions
+    val expanded = DedupOps.minhashNearDups(docs, "doc_id", "text", threshold = 0.5)
+    try {
+      assert(withinGroupJoins(expanded.queryExecution.analyzed).nonEmpty)
+      assert(crossAliases(expanded.queryExecution.analyzed).toSet == Set("ma", "mb"))
+    } finally expanded.unpersist()
+    val (edges, release) = DedupOps.minhashClusterEdges(docs, "doc_id", "text",
+      threshold = 0.5, k = 3, numHashes = 64, bands = 16, maxBucket = Int.MaxValue)
+    try {
+      val plan = edges.queryExecution.analyzed
+      assert(withinGroupJoins(plan).isEmpty, s"within-group self-join on the clustering path:\n$plan")
+      assert(crossAliases(plan).isEmpty, s"cross expansion on the clustering path:\n$plan")
+    } finally release()
+  }
+
   test("dedupCorpus hands CC a checkpointed leaf: its rounds never reach the corpus") {
     import graft.ops.DedupOps
     import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}

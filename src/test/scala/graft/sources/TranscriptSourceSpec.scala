@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSuite
 import graft.pipeline.TranscriptGen
+import org.apache.spark.sql.functions.{col, date_format}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source/sink round-trip + the scan-side properties that matter at scale:
@@ -14,7 +15,9 @@ class TranscriptSourceSpec extends AnyFunSuite with SparkSuite {
   test("partitioned write + filtered read: round trip, pruning reaches the scan") {
     val dir = Files.createTempDirectory("graft_src").toString
     val turns = TranscriptGen.turns(spark, 3000, seed = 42, partitions = 8)
-    TranscriptSource.writePartitioned(turns, dir)
+    // the Iceberg-like layout the reader prunes: one directory per event date
+    turns.withColumn("ts_date", date_format(col("ts"), "yyyy-MM-dd"))
+      .write.mode("overwrite").partitionBy("ts_date").parquet(dir)
 
     // partition layout exists
     val dates = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("ts_date="))
