@@ -1,12 +1,15 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.core.TagAttributes
 import graft.pipeline.{ExtractJob, TranscriptGen}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ExplainMode
 
 import scala.collection.mutable
@@ -16,9 +19,12 @@ import scala.jdk.CollectionConverters._
   * timing helpers: `runMain graft.Probe <command> [args]`.
   *
   *  - `jobs [q…]`: each query's wall time (every query if none is named),
-  *    then one line per Spark job: its duration, the driver-side gap before
-  *    it and its call site. Runs each query SPARK_GRAFT_PROBE_RUNS times
-  *    (default 1; a second run is JIT-warm).
+  *    its job count and the generated classes it compiled (codegen-cache
+  *    misses) with their Janino time, then one line per Spark job: its
+  *    duration, the driver-side gap before it and its call site. Runs each
+  *    query SPARK_GRAFT_PROBE_RUNS times (default 1; a second run is
+  *    JIT-warm, and compiles nothing if the query's classes fit Spark's
+  *    codegen cache).
   *  - `plans [outDir suffix] q…`: the formatted explain output of each
   *    query, on stdout or in `<outDir>/<q>_<suffix>.txt`.
   *  - `profile [n] [cores]`: samples the stack of every RUNNABLE
@@ -54,6 +60,8 @@ object Probe {
 
   private def jobs(names: Seq[String]): Unit = {
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "1").toInt
+    // one histogram entry per generated class compiled (a codegen-cache miss)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     val spark = Bench.session(cpus)
     final case class Job(id: Int, site: String, start: Long, var end: Long = 0L)
     val seen = mutable.LinkedHashMap[Int, Job]()
@@ -71,11 +79,16 @@ object Probe {
     })
     for (name <- names; run <- 1 to runs) {
       seen.synchronized(seen.clear())
+      val compiles0 = compiles.getCount
+      val janinoNs0 = CodeGenerator.compileTime
       val (times, failures) = Bench.timeQueries(Seq(name -> (() =>
         SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save())))
       failures.foreach(System.err.println)
       val js = seen.synchronized(seen.values.toSeq.sortBy(_.start))
-      println(f"== $name run $run: ${times.head._2}%.2f s, ${js.size} jobs ==")
+      val compiled = compiles.getCount - compiles0
+      val janinoMs = (CodeGenerator.compileTime - janinoNs0) / 1e6
+      println(f"== $name run $run: ${times.head._2}%.2f s, ${js.size} jobs, " +
+        f"$compiled classes compiled in $janinoMs%.0f ms ==")
       var prevEnd = 0L
       js.foreach { j =>
         val gap = if (prevEnd == 0) 0.0 else (j.start - prevEnd) / 1e3
@@ -107,12 +120,15 @@ object Probe {
     val spark = Bench.session(cores)
     val counts = new ConcurrentHashMap[String, AtomicLong]()
     @volatile var sampling = false
+    val threads = ManagementFactory.getThreadMXBean
     val sampler = new Thread(() => {
       while (true) {
-        if (sampling) Thread.getAllStackTraces.forEach { (t, frames) =>
-          // parked threads of the task-launch pool are idle, not work
-          if (t.getName.startsWith("Executor task launch") && frames.nonEmpty &&
-              t.getState == Thread.State.RUNNABLE) {
+        // state and stack from one snapshot: parked threads of the
+        // task-launch pool are idle, not work
+        if (sampling) threads.dumpAllThreads(false, false).foreach { t =>
+          val frames = t.getStackTrace
+          if (t.getThreadName.startsWith("Executor task launch") && frames.nonEmpty &&
+              t.getThreadState == Thread.State.RUNNABLE) {
             val top = frames.take(2).map(f => s"${f.getClassName}.${f.getMethodName}").mkString(" <- ")
             counts.computeIfAbsent(top, _ => new AtomicLong()).incrementAndGet()
           }

@@ -4,6 +4,7 @@ import graft.core.{TagAttributes => CoreTagAttributes}
 import graft.ops.{BloomOps, ClassifyOps, CurateOps, DedupOps, JoinOps, LmOps, MediaOps, PackOps, PdfOps, RetrievalOps, ShuffleOps, SimOps, TextOps, WebOps}
 import graft.pipeline.{ConvAssembly, ConvOps, ExtractJob, SpanLineage, TranscriptGen, Turn, Udfs}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -56,7 +57,12 @@ object SparkEntry {
     */
   private def widen(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+    // the split count of the planned scan node itself: no RDD of rows is
+    // built and no second, adaptive query execution is planned for it
+    val splits = df.queryExecution.sparkPlan.collectFirst {
+      case scan: FileSourceScanExec => scan.inputRDD.getNumPartitions
+    }.getOrElse(df.rdd.getNumPartitions)
+    if (splits < p) df.repartition(p) else df
   }
 
   private def docs(s: SparkSession, dir: String) = s.read.parquet(s"$dir/documents.parquet")

@@ -198,19 +198,21 @@ object DedupOps {
     * set back, computes |∩| / |∪| with native array ops and keeps pairs with
     * `jaccard >= threshold` as `(id_a, id_b, inter, union, jaccard)`. The
     * one verify step of [[minhashNearDups]], [[dedupCorpus]] and
-    * [[incrementalNearDups]].
+    * [[incrementalNearDups]]. Both joins read `sets` under an alias, not a
+    * renamed copy, so their build sides are one plan: Spark reuses the
+    * exchange instead of building the same sets twice.
     */
   private def verifyPairs(candidates: DataFrame, sets: DataFrame,
                           threshold: Double): DataFrame =
     candidates
-      .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("union", size(array_union(col("sh_a"), col("sh_b"))))
+      .join(sets.as("a"), col("id_a") === col("a.id"))
+      .join(sets.as("b"), col("id_b") === col("b.id"))
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("a.sh"), col("b.sh"))).as("inter"),
+        size(array_union(col("a.sh"), col("b.sh"))).as("union"))
       .withColumn("jaccard",
         when(col("union") === 0, lit(0.0)).otherwise(col("inter").cast("double") / col("union")))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "inter", "union", "jaccard")
 
   /** Expand representative-level pairs to full id pairs across fingerprint
     * groups, carrying the rep pair's metric columns (identical normalized
@@ -257,10 +259,10 @@ object DedupOps {
     *     scan stage), and the distinct-shingle count. The per-fingerprint
     *     aggregate then shuffles only (fp, id, band hashes, count) — raw
     *     text and full signatures stay on the map side, and the partial
-    *     min/min_by collapses duplicate clusters before the exchange.
+    *     aggregate collapses duplicate clusters before the exchange.
     *     (Members of a fingerprint group share normalized text, hence
-    *     identical shingles/signature/band hashes — min_by is only for
-    *     determinism.)
+    *     identical shingles/signature/band hashes, so the band hashes and
+    *     the count are grouping keys beside the fingerprint.)
     *  2. Candidate generation explodes the per-rep band hashes and joins
     *     on (band, bucket): ids + 8-byte hashes only.
     *  3. Exact-Jaccard verification re-reads text for candidate reps ONLY,
@@ -280,82 +282,66 @@ object DedupOps {
                       threshold: Double = 0.8, k: Int = 3,
                       numHashes: Int = 64, bands: Int = 16,
                       maxBucket: Int = Int.MaxValue): DataFrame = {
-    val (repPairs, byRep, release) =
-      minhashRepPairs(df, idCol, textCol, threshold, k, numHashes, bands, maxBucket)
-    // within-group pairs are exact duplicates: jaccard 1 whenever the
-    // shingle set is non-empty. Pre-filtering byRep to duplicate groups
-    // makes the self-join quadratic only in the DUPLICATE members, never
-    // the corpus-sized (id → rep) map.
-    val within = withinGroupPairs(dupMembers(byRep), carry = Seq("nsh"))
+    val groups = minhashRepAgg(df, idCol, textCol, k, numHashes, bands)
+    val (repPairs, logSkips) =
+      minhashRepPairs(df, idCol, textCol, groups, threshold, k, maxBucket)
+    // (id → rep, gsz, nsh) for every document with a non-empty shingle set
+    // (no other document is in a verified pair or a within-group pair); the
+    // groups side re-derives only the fingerprint (cheap md5 scan)
+    val byRep = df.select(col(idCol).as("id"), TextOps.fingerprint(col(textCol)).as("fp"))
+      .join(groups.select(col("fp"), col("rep"), col("gsz"), col("nsh")), "fp")
+      .select(col("id"), col("rep"), col("gsz"), col("nsh"))
+    // within-group pairs are exact duplicates: jaccard 1. Pre-filtering
+    // byRep to duplicate groups makes the self-join quadratic only in the
+    // DUPLICATE members, never the corpus-sized (id → rep) map.
+    val within = withinGroupPairs(byRep.filter(col("gsz") > 1), carry = Seq("nsh"))
       .select(col("id_a"), col("id_b"), col("nsh").as("inter"), col("nsh").as("union"),
         lit(1.0).as("jaccard"))
     val expanded = expandCross(repPairs, byRep, Seq("inter", "union", "jaccard"))
       .unionByName(within)
 
-    // Materialize into a pairs-only cache, then release the intermediates.
-    // The returned (small) frame owns its own cache; callers release it
-    // with result.unpersist() when done.
+    // Materialize into a pairs-only cache: one query, in which Spark reuses
+    // the exchanges its branches share (the signature aggregate among them).
+    // The returned (small) frame owns its cache; callers release it with
+    // result.unpersist() when done.
     val result = expanded.persist(StorageLevel.MEMORY_AND_DISK)
     result.count()
-    release()
+    logSkips()
     result
   }
 
-  /** Passes 1-3 of [[minhashNearDups]]: the verified representative pairs
-    * `(id_a < id_b, inter, union, jaccard)` (lazy), the persisted
-    * `(id, rep, gsz, nsh)` map, and a hook that frees the caches and logs
-    * the bucket guard's skips once a consumer of the pairs has run.
+  /** Passes 2-3 of [[minhashNearDups]] over `groups`, the
+    * [[minhashRepAgg]] of pass 1: the verified representative pairs
+    * `(id_a < id_b, inter, union, jaccard)`, lazy, and a hook that logs the
+    * bucket guard's skips once a consumer of the pairs has run. Nothing is
+    * cached: the groups, the candidates and the shingle sets each have two
+    * or more readers in the consumer's one query, and Spark reuses the
+    * exchange under each.
     */
   private def minhashRepPairs(df: DataFrame, idCol: String, textCol: String,
-                              threshold: Double, k: Int, numHashes: Int, bands: Int,
-                              maxBucket: Int): (DataFrame, DataFrame, () => Unit) = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val spark = df.sparkSession
-    val skipped = spark.sparkContext
+                              groups: DataFrame, threshold: Double, k: Int,
+                              maxBucket: Int): (DataFrame, () => Unit) = {
+    val skipped = df.sparkSession.sparkContext
       .collectionAccumulator[(Int, Long, Long)]("graft.dedup.minhash.skippedBuckets")
-
-    val repAgg = minhashRepAgg(df, idCol, textCol, k, numHashes, bands)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // (id → rep) is consumed several times by the consumers — cache the
-    // tiny id-pair map instead of recomputing its corpus-scan lineage. The
-    // groups side re-derives only the fingerprint (cheap md5 scan). gsz and
-    // nsh ride along so the within-group consumers need NO further join
-    // against repAgg and can pre-filter to duplicate groups only.
-    val groups = df.select(col(idCol).as("id"), TextOps.fingerprint(col(textCol)).as("fp"))
-    val byRep = groups
-      .join(repAgg.select(col("fp"), col("rep"), col("gsz"), col("nsh")), "fp")
-      .select(col("id"), col("rep"), col("gsz"), col("nsh"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val banded = repAgg.select(col("rep").as("id"),
-      posexplode(col("bh")).as(Seq("band", "bucket")))
-    // Persisted: reused by the verify join AND the candidate-id broadcast
-    // below. The eager count() barrier runs only when the bucket guard is
-    // active (its accumulator-fed predicate should execute exactly once);
-    // un-guarded runs let the first consumer (the verify stage's
-    // candidate-id broadcast) materialize the cache — one fewer action on
-    // the default path, identical pair output.
+    // _outer: bh always holds `bands` hashes, so the rows are posexplode's,
+    // but a plain posexplode lets the optimizer infer size(bh) > 0 and push
+    // it below the aggregate (bh is a grouping key), where it would compute
+    // the signature a second time per row
+    val banded = groups.select(col("rep").as("id"),
+      posexplode_outer(col("bh")).as(Seq("band", "bucket")))
     val candidates = bucketJoin(banded, maxBucket, Some(skipped))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (maxBucket != Int.MaxValue) candidates.count()
 
-    // Exact verification: fetch shingle sets for candidate reps only.
-    val candIds = candidates.select(col("id_a").as("__cid"))
-      .union(candidates.select(col("id_b").as("__cid"))).distinct()
-    // persisted: consumed by both sides of the pair join — block-level
-    // cache locking means whichever side computes a partition first feeds
-    // the other, so no eager count barrier is needed (one fewer action)
+    // Exact verification: fetch shingle sets for candidate reps only. A
+    // repeated id on the semi-join's build side changes nothing, so the
+    // candidate ids need no distinct.
+    val candIds = candidates.select(explode(array(col("id_a"), col("id_b"))).as("__cid"))
+    // Hash-partitioned by id: both verify joins read the sets through this
+    // one exchange (the one a shuffle join needs anyway), which Spark then
+    // reuses, so the candidate documents are read and shingled once.
     val sets = df.join(broadcast(candIds), col(idCol) === col("__cid"), "left_semi")
       .select(col(idCol).as("id"), array_distinct(TextOps.shingles(col(textCol), k)).as("sh"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val repPairs = verifyPairs(candidates, sets, threshold)
-
-    (repPairs, byRep, () => {
-      repAgg.unpersist(blocking = false)
-      byRep.unpersist(blocking = false)
-      candidates.unpersist(blocking = false)
-      sets.unpersist(blocking = false)
+      .repartition(col("id"))
+    (verifyPairs(candidates, sets, threshold), () => {
       val nSkipped = skippedPairCount(skipped)
       if (nSkipped > 0)
         org.slf4j.LoggerFactory.getLogger("graft.dedup").warn(
@@ -368,41 +354,51 @@ object DedupOps {
     * plus one star edge `(rep, id)` per other member of an exact-duplicate
     * group — g − 1 edges per group, not [[minhashNearDups]]'s g(g − 1)/2,
     * with the same components (a star through the min-id rep reaches the
-    * same min id as the clique). Lazy over the front half's caches: the
-    * hook releases them once the edges are materialized.
+    * same min id as the clique). Lazy and uncached; the hook logs the
+    * bucket guard's skips once the edges are materialized.
     */
   private[graft] def minhashClusterEdges(df: DataFrame, idCol: String, textCol: String,
                                          threshold: Double, k: Int, numHashes: Int,
                                          bands: Int, maxBucket: Int): (DataFrame, () => Unit) = {
-    val (repPairs, byRep, release) =
-      minhashRepPairs(df, idCol, textCol, threshold, k, numHashes, bands, maxBucket)
-    val star = dupMembers(byRep).filter(col("id") =!= col("rep"))
+    // Both branches read the same fingerprint groups, so Spark reuses the
+    // aggregate's exchange and the signature pass runs once without a cache.
+    val groups = minhashRepAgg(df, idCol, textCol, k, numHashes, bands)
+    val (repPairs, logSkips) = minhashRepPairs(df, idCol, textCol, groups, threshold, k, maxBucket)
+    val star = df.select(col(idCol).as("id"), TextOps.fingerprint(col(textCol)).as("fp"))
+      .join(groups.select(col("fp"), col("rep")), "fp")
+      .filter(col("id") =!= col("rep"))
       .select(col("rep").as("id_a"), col("id").as("id_b"))
-    (repPairs.select("id_a", "id_b").unionByName(star), release)
+    (repPairs.select("id_a", "id_b").unionByName(star), logSkips)
   }
 
-  /** Exact-duplicate members; empty shingle sets stay unclustered. */
-  private def dupMembers(byRep: DataFrame): DataFrame =
-    byRep.filter(col("gsz") > 1 && col("nsh") > 0)
-
   /** Map-side pass 1 + per-fingerprint collapse for [[minhashNearDups]]:
-    * (fp, rep, band hashes, distinct-shingle count) per distinct document.
+    * (fp, band hashes, distinct-shingle count, rep, group size) per
+    * distinct document with a non-empty shingle set. Members of a
+    * fingerprint group share normalized text, so they share band hashes
+    * and shingle count: grouping on all three gives one row per fingerprint
+    * through a hash aggregate (an aggregate OVER the arrays would force a
+    * sort aggregate). Documents with fewer than k tokens have no shingles:
+    * they stay unclustered, and their band hashes would all collide only to
+    * verify to jaccard 0, so they are left out before the signature pass.
     * Package-visible so plan tests can assert that no exchange in this
     * stage carries the raw text column.
     */
   private[graft] def minhashRepAgg(df: DataFrame, idCol: String, textCol: String,
-                                 k: Int, numHashes: Int, bands: Int): DataFrame =
-    df.withColumn("__sh", array_distinct(TextOps.shingles(col(textCol), k)))
+                                 k: Int, numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    df.filter(size(TextOps.tokens(lower(col(textCol)))) >= k)
+      .withColumn("__sh", array_distinct(TextOps.shingles(col(textCol), k)))
       .withColumn("__sig", minhashSignatureOf(col("__sh"), numHashes))
-      .select(TextOps.fingerprint(col(textCol)).as("fp"),
+      // the coalesce never fires (null text has no tokens), but it tells the
+      // optimizer that fp is never null, so a join on fp infers no not-null
+      // filter to push below the aggregate in that branch alone
+      .select(coalesce(TextOps.fingerprint(col(textCol)), lit("")).as("fp"),
         col(idCol).as("id"),
         bandHashesOf(col("__sig"), bands, numHashes / bands).as("bh"),
         size(col("__sh")).as("nsh"))
-      .groupBy("fp")
-      .agg(min(col("id")).as("rep"),
-        min_by(col("bh"), col("id")).as("bh"),
-        min_by(col("nsh"), col("id")).as("nsh"),
-        count(lit(1)).as("gsz"))
+      .groupBy("fp", "bh", "nsh")
+      .agg(min(col("id")).as("rep"), count(lit(1)).as("gsz"))
+  }
 
   /** Connected components over an undirected pair list `(id_a, id_b)`:
     * one row `(id, cluster)` per vertex, `cluster` = the minimum id
@@ -416,7 +412,10 @@ object DedupOps {
     * are unions of near-cliques, so the diameter is tiny (2-3 rounds in
     * practice); for adversarial long-chain graphs at extreme scale the
     * round count is capped by `maxIter` and the result still a valid
-    * refinement (each label is some reachable id).
+    * refinement (each label is some reachable id). The directed edge list
+    * is truncated once and cached once, hash-partitioned by dst; each round
+    * is one checkpoint, and the job that stores it also counts the round's
+    * changed labels, so a round costs no action of its own.
     *
     * The returned frame is backed by the final round's (materialized)
     * checkpoint — small (two longs per vertex) and freed with the session.
@@ -459,22 +458,23 @@ object DedupOps {
     // with the session, lost with an executor) for single-box / ephemeral
     // runs, reliable `checkpoint` (HDFS/object store) so a 1000-executor
     // cluster recovers rounds instead of restarting the whole loop on
-    // executor loss. Reliable rounds are CLEANED as the loop advances
+    // executor loss. Superseded rounds are FREED as the loop advances
     // (Spark never deletes checkpoints itself — cleanCheckpoints defaults
     // off, and maxIter full label copies at 10^12-vertex scale is real
     // storage): each invocation writes under its own cc-<uuid> subdir, and
-    // a superseded round's rdd dir is deleted once the next round is
-    // materialized and counted. The FINAL round's files back the returned
-    // frame — its cc-<uuid> path is returned in CcResult.checkpointPath for
-    // the caller to delete when done with the labels.
+    // a superseded round is freed once the next round is materialized and
+    // counted, the edge list once the last round is. The FINAL round's
+    // files back the returned frame — its cc-<uuid> path is returned in
+    // CcResult.checkpointPath for the caller to delete when done with the
+    // labels.
     //
     // CAVEAT (inherent to Spark's API): the checkpoint directory is a
     // GLOBAL SparkContext setting. It is saved and restored around this
     // loop, but another thread calling `.checkpoint()` concurrently with
-    // the loop can land its files in this invocation's cc-<uuid> dir and
-    // have them swept by the per-round cleanup. Reliable mode assumes the
-    // session's checkpoint users are sequential (the normal batch-pipeline
-    // shape); run concurrent checkpoint workloads on separate sessions.
+    // the loop can land its files in this invocation's cc-<uuid> dir.
+    // Reliable mode assumes the session's checkpoint users are sequential
+    // (the normal batch-pipeline shape); run concurrent checkpoint
+    // workloads on separate sessions.
     // (If NO checkpoint dir was set before this call, Spark offers no
     // unset API, so the session keeps pointing at this invocation's subdir
     // afterwards — set your own dir before unrelated checkpoint work.)
@@ -483,14 +483,14 @@ object DedupOps {
     // EVERYTHING after the checkpoint-dir capture runs under try/finally:
     // the redirect is a SparkContext-GLOBAL mutation, and a failure can
     // surface before the loop's first action (driver-side plan work in
-    // persist()/analysis throws for bad input), so the restore must guard
-    // the redirect itself, not just the iteration. On failure the
-    // cc-<uuid> dir is best-effort deleted — nothing can consume a
-    // partial run's round files.
+    // analysis throws for bad input), so the restore must guard the
+    // redirect itself, not just the iteration. On failure the cc-<uuid>
+    // dir is best-effort deleted — nothing can consume a partial run's
+    // round files.
     var ok = false
-    var edgesHandle: Option[DataFrame] = None
+    var freeEdges: () => Unit = () => ()
     try {
-      val (truncate, cleanupSuperseded): (DataFrame => DataFrame, () => Unit) =
+      val (truncate, free): (DataFrame => DataFrame, DataFrame => Unit) =
         checkpointDir match {
           case Some(dir) =>
             import org.apache.hadoop.fs.Path
@@ -498,59 +498,39 @@ object DedupOps {
             ccPath = Some(unique)
             spark.sparkContext.setCheckpointDir(unique)
             val fs = new Path(unique).getFileSystem(spark.sparkContext.hadoopConfiguration)
-            def rddDirs(): Set[String] = {
-              val base = new Path(unique)
-              if (!fs.exists(base)) Set.empty
-              else fs.listStatus(base).toSeq.flatMap { u =>
-                if (!u.isDirectory) Nil
-                else fs.listStatus(u.getPath).toSeq.collect {
-                  case s if s.isDirectory && s.getPath.getName.startsWith("rdd-") =>
-                    s.getPath.toString
-                }
-              }.toSet
-            }
-            var deletable = Set.empty[String]
             // eager: a lazy reliable checkpoint computes its rows twice, once
             // for the change count and once more for the write
-            val trunc: DataFrame => DataFrame = df => {
-              val before = rddDirs()
-              val out = df.checkpoint(eager = true)
-              deletable = before
-              out
-            }
-            (trunc, () => deletable.foreach(d => fs.delete(new Path(d), true)))
+            (_.checkpoint(eager = true), cp => cp.queryExecution.analyzed.collectLeaves().foreach {
+              case l: org.apache.spark.sql.execution.LogicalRDD =>
+                l.rdd.getCheckpointFile.foreach(f => fs.delete(new Path(f), true))
+              case _ => ()
+            })
           case None =>
-          // mirror the reliable path's superseded-round cleanup: without
-          // it, up to maxIter full per-vertex label frames stay pinned in
-          // executor storage until RDD GC (the BpeOps freeLocalCheckpoint
-          // lesson). A superseded round is freed only after the next round
-          // is materialized. The checkpoint is lazy: the round's change
-          // count is the job that stores it (see materializeCount).
-          var prevLocal: Option[DataFrame] = None
-          var supersededLocal: Option[DataFrame] = None
-          val trunc: DataFrame => DataFrame = df => {
-            val out = df.localCheckpoint(eager = false)
-            supersededLocal = prevLocal
-            prevLocal = Some(out)
-            out
-          }
-          (trunc, () => { supersededLocal.foreach(CacheUtil.freeLocalCheckpoint); supersededLocal = None })
+            // lazy: the first job that reads the frame stores it, so a
+            // round's change count is the job that stores the round (see
+            // materializeCount). Freeing superseded rounds keeps up to
+            // maxIter label frames from staying pinned in executor storage
+            // until RDD GC (the BpeOps freeLocalCheckpoint lesson).
+            (_.localCheckpoint(eager = false), CacheUtil.freeLocalCheckpoint)
         }
+      // Both directions of every pair. Truncated, so the rounds read a leaf,
+      // not the plan behind `pairs`, which each round would otherwise
+      // re-analyse; then hash-partitioned by dst and cached: every round
+      // joins edges on dst, so the cached partitioning satisfies the join's
+      // distribution and only the (small) labels side shuffles per round —
+      // one upfront edge shuffle replaces one per round. (A checkpoint of
+      // an adaptive plan does not carry its partitioning; a cache does.)
       // No edge distinct(): min-label propagation is IDEMPOTENT to
       // duplicate edges (min over a multiset equals min over its set), so
       // de-duplicating 2|pairs| rows would spend a full shuffle to buy
       // nothing for the unique pair lists the dedup pipelines emit.
       // Callers with heavily-duplicated pair lists should distinct first —
       // duplicates cost per-round join width, never correctness.
-      // Hash-partitioned by dst BEFORE caching: every propagation round
-      // joins edges on dst, so the cached partitioning satisfies the
-      // join's distribution and only the (small) labels side shuffles per
-      // round — one upfront edge shuffle replaces one per round.
-      val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-        .repartition(col("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      edgesHandle = Some(edges) // released in finally: failure paths too
+      val directed = truncate(pairs.select(inline(array(
+        struct(col("id_a").as("src"), col("id_b").as("dst")),
+        struct(col("id_b").as("src"), col("id_a").as("dst"))))))
+      val edges = directed.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
+      freeEdges = () => { edges.unpersist(blocking = false); free(directed) }
 
       // Each round's result is checkpointed: without lineage TRUNCATION
       // the logical plan triples per iteration and Catalyst
@@ -560,15 +540,12 @@ object DedupOps {
       //
       // Round 1 is FUSED with initialization: with labels(id) = id, the
       // first round's neighbor-min join degenerates to min(dst) per src, so
-      // one hash-aggregate over the edge list replaces the old
-      // distinct-vertices checkpoint PLUS the first join round — one
-      // exchange instead of four, two fewer actions. Each round also
-      // carries its own `chg` flag (did this vertex's label shrink?), so
-      // the convergence count needs no join back against the previous
-      // round (two more exchanges saved per round), and no job of its own:
-      // it is the result of the job that materializes the round's
-      // checkpoint. Label states per round are IDENTICAL to the unfused
-      // loop; `iterations` counts the fused round as 1.
+      // one hash-aggregate over the edge list replaces a distinct-vertices
+      // checkpoint PLUS the first join round. Every round carries its own
+      // `chg` flag (did this vertex's label shrink?), so the convergence
+      // count needs no join back against the previous round and no job of
+      // its own: it is the result of the job that materializes the round's
+      // checkpoint. `iterations` counts the fused round as 1.
       var labels = truncate(edges.groupBy("src").agg(min(col("dst")).as("nmin"))
         .select(col("src").as("id"),
           least(col("src"), col("nmin")).as("label"),
@@ -577,18 +554,18 @@ object DedupOps {
       var changed = materializeCount(labels, Some("chg"))
       var iter = 1
       while (changed > 0 && iter < maxIter) {
-        val neighborMin = edges
-          .join(labels.select(col("id").as("dst"), col("label").as("nlabel")), "dst")
-          .groupBy("src").agg(min(col("nlabel")).as("nmin"))
-        val updated = truncate(labels
-          .select(col("id"), col("label"))
-          .join(neighborMin.select(col("src").as("id"), col("nmin")), Seq("id"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
-            (coalesce(col("nmin"), col("label")) < col("label")).as("chg")))
+        // every vertex is offered its own label and each neighbor's; one
+        // aggregate takes the least and, from the `own` offer, the old one
+        val offers = edges
+          .join(labels.select(col("id").as("dst"), col("label").as("offer")), "dst")
+          .select(col("src").as("id"), col("offer"), lit(false).as("own"))
+          .unionByName(labels.select(col("id"), col("label").as("offer"), lit(true).as("own")))
+        val updated = truncate(offers.groupBy("id")
+          .agg(min(col("offer")).as("label"), min(when(col("own"), col("offer"))).as("old"))
+          .select(col("id"), col("label"), (col("label") < col("old")).as("chg")))
         changed = materializeCount(updated, Some("chg"))
+        free(labels) // superseded by the round just materialized
         labels = updated
-        cleanupSuperseded() // previous round's reliable checkpoint, if any
         iter += 1
       }
       if (changed > 0)
@@ -599,9 +576,9 @@ object DedupOps {
       ok = true
       CcResult(labels.select(col("id"), col("label").as("cluster")), changed == 0, iter, ccPath)
     } finally {
-      // release the edge cache on EVERY exit path (a mid-loop failure must
-      // not pin 2|pairs| rows in executor storage for the session)
-      edgesHandle.foreach(_.unpersist(blocking = false))
+      // the last round is materialized (or the run failed): nothing reads
+      // the edges any more, on EVERY exit path
+      freeEdges()
       // restore the session's checkpoint dir (a global setting this loop
       // redirected); later .checkpoint() callers must not land in cc-<uuid>
       prevCheckpointDir.foreach(spark.sparkContext.setCheckpointDir)
@@ -626,12 +603,19 @@ object DedupOps {
     */
   private def materializeCount(cp: DataFrame, flag: Option[String] = None): Long = {
     val i = flag.fold(-1)(cp.schema.fieldIndex)
-    val rows = cp.queryExecution.toRdd
-    rows.sparkContext.runJob(rows, (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-      var n = 0L
-      it.foreach(r => if (i < 0 || (!r.isNullAt(i) && r.getBoolean(i))) n += 1)
-      n
-    }).sum
+    val qe = cp.queryExecution
+    // as a SQL execution, so its tasks load generated code through the
+    // session's class loader like every other job of the session (a bare
+    // runJob's tasks use the executor's default loader, and compile every
+    // class they share with the session's jobs a second time)
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("materializeCount")) {
+      val rows = qe.toRdd
+      rows.sparkContext.runJob(rows, (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        var n = 0L
+        it.foreach(r => if (i < 0 || (!r.isNullAt(i) && r.getBoolean(i))) n += 1)
+        n
+      }).sum
+    }
   }
 
   /** End-to-end dedup "keeper" composition — the form a pretraining
@@ -664,14 +648,16 @@ object DedupOps {
     * (cluster, id, key) rows — no window, so a degenerate 10^9-member
     * cluster partial-aggregates map-side instead of landing on one reducer.
     *
-    * The edge list reaches connected components as a checkpointed leaf,
-    * not as the front half's plan (which every CC round would re-analyse):
-    * an eager `localCheckpoint`, or with `checkpointDir` set a reliable
-    * checkpoint under a per-invocation `edges-<uuid>` dir. With
-    * `checkpointDir` set, that dir and the final round's `cc-<uuid>` files
-    * (which back the labels frame) are consumed into the loser id set and
-    * then DELETED here — callers get a clean survivor frame and no leaked
-    * per-invocation directory.
+    * Nothing of the front half is cached: the edge list is one query, in
+    * which Spark reuses the exchanges its branches share, and connected
+    * components checkpoints it before its first round, so no round
+    * re-analyses the front half's plan. Beside that query a call runs one
+    * checkpoint per CC round and one for the loser set, each counted by the
+    * job that stores it: 19 Spark jobs on the OpsSpec chained-groups
+    * corpus, a budget its job-count case pins. With `checkpointDir` set, the
+    * final round's `cc-<uuid>` files (which back the labels frame) are
+    * consumed into the loser id set and then DELETED here — callers get a
+    * clean survivor frame and no leaked per-invocation directory.
     *
     * Every run takes the stage sequence `pairs` (the clustering edge list)
     * → `labels` (`(id, cluster)`), kept in memory by default. With
@@ -742,41 +728,19 @@ object DedupOps {
         }
         spark.read.parquet(s"$dir/$name") // the _-prefixed marker is not scanned
     }
-    var handedOff: Option[DataFrame] = None // in-memory edge checkpoint
-    var scratchDirs = List.empty[String] // per-invocation reliable-checkpoint dirs
+    var ccDir: Option[String] = None // the final round's reliable checkpoint files
     val (losers, nLosers) = try {
       val labels = stage("labels") {
-        var release: () => Unit = () => ()
-        val edges = try {
-          val e = stage("pairs") {
-            val (e, r) = minhashClusterEdges(df, idCol, textCol, threshold, k,
-              numHashes, bands, maxBucket)
-            release = r
-            e
-          }
-          // CC gets the edges as a leaf, truncated the way it truncates its
-          // rounds, not as the front half's plan, which every round would
-          // re-analyse. A committed stage's parquet already is a leaf.
-          if (artifacts.nonEmpty) e
-          else {
-            val leaf = checkpointDir match {
-              case None => e.localCheckpoint(eager = true)
-              case Some(cd) =>
-                // the checkpoint dir is SparkContext-global: restore the
-                // session's own (see the caveat in connectedComponentsStatus)
-                val dir = s"$cd/edges-${java.util.UUID.randomUUID()}"
-                scratchDirs ::= dir
-                val prev = spark.sparkContext.getCheckpointDir
-                spark.sparkContext.setCheckpointDir(dir)
-                try e.checkpoint(eager = true)
-                finally prev.foreach(spark.sparkContext.setCheckpointDir)
-            }
-            handedOff = Some(leaf)
-            leaf
-          }
-        } finally release() // the edges are materialized: the front half's caches are done
+        var logSkips: () => Unit = () => ()
+        val edges = stage("pairs") {
+          val (e, log) = minhashClusterEdges(df, idCol, textCol, threshold, k,
+            numHashes, bands, maxBucket)
+          logSkips = log
+          e
+        }
         val cc = connectedComponentsStatus(edges, maxIter, checkpointDir)
-        scratchDirs ++= cc.checkpointPath
+        logSkips() // the edges are materialized, so the bucket guard has run
+        ccDir = cc.checkpointPath
         if (!cc.converged)
           throw new IllegalArgumentException(
             s"dedupCorpus: connected components did not converge in maxIter=$maxIter " +
@@ -832,10 +796,9 @@ object DedupOps {
       }
     } finally {
       // the losers are materialized (or the run failed): nothing reads the
-      // handed-off edges or the reliable edge and cc checkpoint files any
-      // more (Spark never deletes checkpoints itself)
-      handedOff.foreach(CacheUtil.freeLocalCheckpoint)
-      scratchDirs.foreach { p =>
+      // reliable cc checkpoint files any more (Spark never deletes
+      // checkpoints itself)
+      ccDir.foreach { p =>
         try {
           val hp = new Path(p)
           hp.getFileSystem(hadoopConf).delete(hp, true)

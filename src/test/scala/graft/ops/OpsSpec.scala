@@ -47,6 +47,97 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   private def labelSet(cc: DataFrame): Set[(Long, Long)] =
     cc.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** The Spark jobs `body` starts. Listener events arrive in the order the
+    * jobs start, so the jobs between a marker job run before `body` and
+    * one run after it are `body`'s.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("__before")
+      body
+      marker("__after")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.contains("__after") && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    started.asScala.toSeq.dropWhile(_ != "__before").drop(1).takeWhile(_ != "__after").size
+  }
+
+  test("dedupCorpus job budget: one call runs at most 19 Spark jobs") {
+    val docs = chainedGroupsCorpus(1)
+    var survivors: DataFrame = null
+    val jobs = jobsOf { survivors = DedupOps.dedupCorpus(docs, "doc_id", "text", threshold = 0.7) }
+    // the A-B-C-D cluster and E keep one member each
+    assert(survivors.count() == docs.count() - 12 - 2)
+    // 31 before the front half dropped its four caches and CC its second
+    // edge materialization; an action put back fails this
+    assert(jobs <= 19, s"$jobs Spark jobs for one dedupCorpus call")
+  }
+
+  test("minhashRepAgg groups on (fp, bh, nsh): rows, id -> rep map and survivors as with min_by") {
+    val rnd = new scala.util.Random(11)
+    def words(n: Int) = Vector.fill(n)(s"W${rnd.nextInt(100000)}")
+    // six spellings of each base that the fingerprint normalizes alike: it
+    // lower-cases, trims spaces and collapses whitespace runs
+    def spellings(t: String) = Seq(t, t.toLowerCase, s"  $t  ", t.replace(" ", "\t"),
+      t.replace(" ", " \n  "), t.toUpperCase)
+    val bases = Seq.fill(5)(words(12).mkString(" "))
+    val texts: Seq[Option[String]] = bases.flatMap(spellings).map(Some(_)) ++
+      Seq.fill(8)(Some(words(12).mkString(" "))) ++ // unrelated
+      Seq(Some("Short TEXT"), Some("short   text"), Some(""), None) // no shingles: unclustered
+    val ids = rnd.shuffle(texts.indices.map(_.toLong * 7))
+    val docs = spark.createDataFrame(ids.zip(texts)).toDF("doc_id", "text")
+    val (k, numHashes, bands) = (3, 64, 16)
+
+    // the aggregate as it was: min_by over the arrays, a sort aggregate
+    val perDoc = docs.withColumn("__sh", array_distinct(TextOps.shingles(col("text"), k)))
+      .select(TextOps.fingerprint(col("text")).as("fp"), col("doc_id").as("id"),
+        DedupOps.bandHashesOf(DedupOps.minhashSignatureOf(col("__sh"), numHashes), bands,
+          numHashes / bands).as("bh"),
+        size(col("__sh")).as("nsh"))
+    // not vacuous: each base's spellings are one fingerprint group, and
+    // every group's members share band hashes and shingle count
+    assert(perDoc.groupBy("fp").agg(count(lit(1)).as("n"),
+        countDistinct(col("bh")).as("nbh"), countDistinct(col("nsh")).as("nnsh"))
+      .filter(col("n") === 6 && col("nbh") === 1 && col("nnsh") === 1).count() == bases.size)
+    val before = perDoc.groupBy("fp")
+      .agg(min(col("id")).as("rep"), min_by(col("bh"), col("id")).as("bh"),
+        min_by(col("nsh"), col("id")).as("nsh"), count(lit(1)).as("gsz"))
+      .filter(col("nsh") > 0)
+    val now = DedupOps.minhashRepAgg(docs, "doc_id", "text", k, numHashes, bands)
+    def groupRows(g: DataFrame) = g.select("fp", "rep", "bh", "nsh", "gsz").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getSeq[Long](2), r.getInt(3), r.getLong(4))).toSet
+    assert(groupRows(now) == groupRows(before))
+    assert(groupRows(now).size == bases.size + 8)
+    def byRep(g: DataFrame) = docs.select(col("doc_id").as("id"), TextOps.fingerprint(col("text")).as("fp"))
+      .join(g, "fp").select("id", "rep", "gsz", "nsh").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
+    assert(byRep(now) == byRep(before))
+
+    // survivors: the min id of each base's spellings, and every other doc
+    val byText = ids.zip(texts).toMap
+    val losers = bases.flatMap { b =>
+      val group = ids.filter(i => byText(i).exists(t => spellings(b).contains(t)))
+      assert(group.size == 6)
+      group.filter(_ != group.min)
+    }.toSet
+    val survivors = DedupOps.dedupCorpus(docs, "doc_id", "text", threshold = 0.7)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(survivors == ids.toSet -- losers)
+  }
+
   test("dedupCorpus edge list: components equal those of the expanded minhash pairs") {
     def edgeList(docs: DataFrame, threshold: Double) = {
       val (edges, release) = DedupOps.minhashClusterEdges(docs, "doc_id", "text",
