@@ -58,11 +58,12 @@ object SparkEntry {
   private def widen(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     // the split count of the planned scan node itself: no RDD of rows is
-    // built and no second, adaptive query execution is planned for it
-    val splits = df.queryExecution.sparkPlan.collectFirst {
+    // built and no second, adaptive query execution is planned for it (a
+    // frame without a file scan is left as it is)
+    val narrow = df.queryExecution.sparkPlan.collectFirst {
       case scan: FileSourceScanExec => scan.inputRDD.getNumPartitions
-    }.getOrElse(df.rdd.getNumPartitions)
-    if (splits < p) df.repartition(p) else df
+    }.exists(_ < p)
+    if (narrow) df.repartition(p) else df
   }
 
   private def docs(s: SparkSession, dir: String) = s.read.parquet(s"$dir/documents.parquet")

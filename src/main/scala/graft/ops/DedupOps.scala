@@ -275,6 +275,11 @@ object DedupOps {
     * Only this public pair list expands the verified REPRESENTATIVE pairs
     * to id pairs (quadratic in group size); [[dedupCorpus]] does not.
     *
+    * A document with fewer than `k` tokens has no shingles and is in no
+    * pair, whatever the threshold: with `threshold <= 0` the result holds
+    * every verified candidate pair of documents that have shingles, not
+    * the jaccard-0 pairs that shingle-less documents would form.
+    *
     * The returned (small, pairs-only) frame is persisted and materialized;
     * call `result.unpersist()` when done with it.
     */
@@ -412,10 +417,11 @@ object DedupOps {
     * are unions of near-cliques, so the diameter is tiny (2-3 rounds in
     * practice); for adversarial long-chain graphs at extreme scale the
     * round count is capped by `maxIter` and the result still a valid
-    * refinement (each label is some reachable id). The directed edge list
-    * is truncated once and cached once, hash-partitioned by dst; each round
-    * is one checkpoint, and the job that stores it also counts the round's
-    * changed labels, so a round costs no action of its own.
+    * refinement (each label is some reachable id). The pair list is
+    * truncated once and its two directions cached once, hash-partitioned
+    * by dst; each round is one checkpoint, and the job that stores it also
+    * counts the round's changed labels, so a round costs no action of its
+    * own.
     *
     * The returned frame is backed by the final round's (materialized)
     * checkpoint — small (two longs per vertex) and freed with the session.
@@ -500,11 +506,7 @@ object DedupOps {
             val fs = new Path(unique).getFileSystem(spark.sparkContext.hadoopConfiguration)
             // eager: a lazy reliable checkpoint computes its rows twice, once
             // for the change count and once more for the write
-            (_.checkpoint(eager = true), cp => cp.queryExecution.analyzed.collectLeaves().foreach {
-              case l: org.apache.spark.sql.execution.LogicalRDD =>
-                l.rdd.getCheckpointFile.foreach(f => fs.delete(new Path(f), true))
-              case _ => ()
-            })
+            (_.checkpoint(eager = true), CacheUtil.freeCheckpoint(_, fs))
           case None =>
             // lazy: the first job that reads the frame stores it, so a
             // round's change count is the job that stores the round (see
@@ -513,24 +515,28 @@ object DedupOps {
             // until RDD GC (the BpeOps freeLocalCheckpoint lesson).
             (_.localCheckpoint(eager = false), CacheUtil.freeLocalCheckpoint)
         }
-      // Both directions of every pair. Truncated, so the rounds read a leaf,
-      // not the plan behind `pairs`, which each round would otherwise
-      // re-analyse; then hash-partitioned by dst and cached: every round
-      // joins edges on dst, so the cached partitioning satisfies the join's
-      // distribution and only the (small) labels side shuffles per round —
-      // one upfront edge shuffle replaces one per round. (A checkpoint of
-      // an adaptive plan does not carry its partitioning; a cache does.)
+      // The pairs are truncated, so the rounds read a leaf, not the plan
+      // behind `pairs`, which each round would otherwise re-analyse. Both
+      // directions of every pair are generated after the leaf, in the map
+      // stage of the edge shuffle, so the checkpoint holds |pairs| rows,
+      // not 2|pairs|. The edges are hash-partitioned by dst and cached:
+      // every round joins edges on dst, so the cached partitioning
+      // satisfies the join's distribution and only the (small) labels side
+      // shuffles per round — one upfront edge shuffle replaces one per
+      // round. (A checkpoint of an adaptive plan does not carry its
+      // partitioning; a cache does.)
       // No edge distinct(): min-label propagation is IDEMPOTENT to
       // duplicate edges (min over a multiset equals min over its set), so
       // de-duplicating 2|pairs| rows would spend a full shuffle to buy
       // nothing for the unique pair lists the dedup pipelines emit.
       // Callers with heavily-duplicated pair lists should distinct first —
       // duplicates cost per-round join width, never correctness.
-      val directed = truncate(pairs.select(inline(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst")),
-        struct(col("id_b").as("src"), col("id_a").as("dst"))))))
-      val edges = directed.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-      freeEdges = () => { edges.unpersist(blocking = false); free(directed) }
+      val undirected = truncate(pairs.select("id_a", "id_b"))
+      val edges = undirected.select(inline(array(
+          struct(col("id_a").as("src"), col("id_b").as("dst")),
+          struct(col("id_b").as("src"), col("id_a").as("dst")))))
+        .repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
+      freeEdges = () => { edges.unpersist(blocking = false); free(undirected) }
 
       // Each round's result is checkpointed: without lineage TRUNCATION
       // the logical plan triples per iteration and Catalyst

@@ -252,6 +252,43 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     } finally release()
   }
 
+  test("dedupCorpus edge list computes the signature aggregate once: its readers reuse the exchange") {
+    import graft.ops.DedupOps
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val (edges, release) = DedupOps.minhashClusterEdges(docs, "doc_id", "text",
+      threshold = 0.5, k = 3, numHashes = 64, bands = 16, maxBucket = Int.MaxValue)
+    try {
+      edges.collect() // let AQE finalize, with its stage reuse
+      val plan = edges.queryExecution.executedPlan
+      // the map side of the per-fingerprint aggregate, which computes the
+      // signature of every row
+      def isSigAgg(p: SparkPlan) = p match {
+        case a: HashAggregateExec =>
+          a.groupingExpressions.map(_.name) == Seq("fp", "bh", "nsh") &&
+            a.aggregateExpressions.forall(_.mode == Partial)
+        case _ => false
+      }
+      // the nodes of one stage: no descent past an exchange or a stage
+      def inStage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case _: Exchange | _: QueryStageExec => Nil
+        case other => other.children.flatMap(inStage)
+      })
+      def writesSig(e: SparkPlan) = e.children.flatMap(inStage).exists(isSigAgg)
+      val nodes = collectPlan(plan)
+      val sigExchanges = nodes.collect { case s: ShuffleExchangeExec if writesSig(s) => s }
+      val reused = nodes.collect { case r: ReusedExchangeExec if writesSig(r.child) => r }
+      // a branch that plans the aggregate's input differently (a filter
+      // pushed below it) gets an exchange of its own and signs every row again
+      assert(sigExchanges.size == 1,
+        s"${sigExchanges.size} signature-aggregate exchanges, want 1:\n$plan")
+      assert(reused.nonEmpty, s"no reader reuses the signature-aggregate exchange:\n$plan")
+    } finally release()
+  }
+
   test("dedupCorpus hands CC a checkpointed leaf: its rounds never reach the corpus") {
     import graft.ops.DedupOps
     import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
