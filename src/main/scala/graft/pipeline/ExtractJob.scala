@@ -40,8 +40,8 @@ object ExtractJob {
     case Html   => Map.empty
   }
 
-  /** Core per-turn transform — pure, reused by the pipeline, UDFs, and
-    * tests as the single source of extraction semantics.
+  /** Core per-turn transform — pure, reused by the pipeline, `graft.Probe`
+    * and tests as the single source of extraction semantics.
     *
     * BBCode mode: `plain_text` = tag strip, `html` = BBCode→HTML render
     * with escape/`<br>` transform. HTML mode (boilerplate strip):

@@ -1,29 +1,15 @@
 package graft.pipeline
 
 import graft.core._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
-/** SQL-facing registrations of the core parse/transform operators. These
-  * are opaque CPU-bound string functions — a plain `spark.udf.register` is
-  * the idiomatic exposure (a custom codegen Expression would still call
-  * into the same FSM; there is no expression-tree fusion to win here).
+/** Column-API wrappers of the core transforms that have no native Catalyst
+  * expression (strip, render, HTML strip and tag count are the
+  * `graft.functions` expressions).
   */
 object Udfs {
   private val cfg = TagAttributes.bbcodeCanonical
-
-  val stripBBCode: UserDefinedFunction = udf { (s: String) =>
-    if (s == null) null else Transform.textTransform(BBCodeParser.parse(s, cfg))
-  }
-
-  val stripHtml: UserDefinedFunction = udf { (s: String) =>
-    if (s == null) null else Transform.textTransform(HtmlParser.parse(s, Map.empty))
-  }
-
-  val bbcodeToHtml: UserDefinedFunction = udf { (s: String) =>
-    if (s == null) null else BBCodeToHtml(BBCodeParser.parse(s, cfg))
-  }
 
   val escapeHtml: UserDefinedFunction = udf { (s: String) =>
     if (s == null) null
@@ -35,27 +21,8 @@ object Udfs {
     }
   }
 
-  val bbcodeTagCount: UserDefinedFunction = udf { (s: String) =>
-    if (s == null) 0 else BBCodeParser.parse(s, cfg).tagCount
-  }
-
   /** DOM-heuristic main-content extraction (readability-lite). */
   val mainContent: UserDefinedFunction = udf { (s: String) =>
     if (s == null) null else ContentExtract.mainContent(s)
-  }
-
-  /** Count of tag/attribute offsets — the source-reconstruction metadata. */
-  val bbcodeOffsetCount: UserDefinedFunction = udf { (s: String) =>
-    if (s == null) 0 else BBCodeParser.parse(s, cfg).offsets.size
-  }
-
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("strip_bbcode", stripBBCode)
-    spark.udf.register("strip_html", stripHtml)
-    spark.udf.register("bbcode_to_html", bbcodeToHtml)
-    spark.udf.register("escape_html", escapeHtml)
-    spark.udf.register("bbcode_tag_count", bbcodeTagCount)
-    spark.udf.register("main_content", mainContent)
-    spark.udf.register("bbcode_offset_count", bbcodeOffsetCount)
   }
 }

@@ -2,12 +2,11 @@ package graft.functions
 
 import graft.SparkSuite
 import graft.core._
-import graft.pipeline.Udfs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Native Catalyst expression path must agree exactly with the UDF path and
-  * the pure core, survive codegen, and register via SparkSessionExtensions.
+/** Native Catalyst expressions must agree exactly with the pure core,
+  * survive codegen, and register via SparkSessionExtensions.
   */
 class NativeExpressionSpec extends AnyFunSuite with SparkSuite {
   override protected def cores: Int = 2
@@ -88,18 +87,6 @@ class NativeExpressionSpec extends AnyFunSuite with SparkSuite {
     val s2 = spark.newSession()
     GraftFunctions.register(s2)
     assert(s2.sql("SELECT bbcode_to_html_native('[i]y[/i]') AS h").head().getString(0) == "<em>y</em>")
-  }
-
-  test("UDF registrations agree with native expressions") {
-    Udfs.registerAll(spark)
-    val s = spark; import s.implicits._
-    val df = samples.toDF("t")
-    df.createOrReplaceTempView("samples2")
-    val diff = spark.sql(
-      """SELECT count(*) FROM samples2
-        |WHERE strip_bbcode(t) <> bbcode_strip_native(t)
-        |   OR bbcode_to_html(t) <> bbcode_to_html_native(t)""".stripMargin).head().getLong(0)
-    assert(diff == 0L)
   }
 
   test("array_dot is bit-identical to aggregate(zip_with) and null-intolerant") {
