@@ -21,24 +21,26 @@ import org.apache.spark.sql.SparkSession
   * resumable bucket machinery.
   *
   * Behavior: resumable bucket-committed write (re-running after any
-  * partial failure completes exactly the missing buckets), optional
-  * per-partition lineage table and span-lineage table, and one final JSON
-  * metrics line on stdout (rows, parse errors, wall seconds, turns/sec,
-  * completed buckets). Master/executors come from spark-submit — the job
-  * itself sets only job-shape configuration.
+  * partial failure completes exactly the missing buckets; each `bucket=N`
+  * dir follows [[graft.ops.Commit]]'s marker protocol), optional
+  * per-partition lineage table and span-lineage table. Flag parsing, the
+  * session and the JSON line come from [[Launch]]; the line's fields:
+  * rows, parse errors, wall seconds, turns/sec, completed buckets, out.
+  * Master/executors come from spark-submit — the job itself sets only
+  * job-shape configuration.
   */
 object ExtractMain {
-  private def parseArgs(args: Array[String]): Map[String, String] = {
-    require(args.length % 2 == 0,
-      s"arguments must be --flag value pairs, got: ${args.mkString(" ")}")
-    args.sliding(2, 2).map {
-      case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
-      case Array(k, v) => sys.error(s"expected a --flag, got '$k $v'")
-    }.toMap
-  }
+  /** `wallSec` times the extract phase only: the optional lineage and span
+    * sinks are separate full passes, outside extraction throughput.
+    */
+  final case class Stats(rows: Long, parseErrors: Long, wallSec: Double,
+                         completedBuckets: Int, out: String)
 
-  def main(args: Array[String]): Unit = {
-    val a = parseArgs(args)
+  private val KnownFlags = Set("in", "out", "mode", "format", "markup",
+    "buckets", "date-from", "date-to", "lineage", "spans")
+
+  def run(spark: SparkSession, a: Map[String, String]): Stats = {
+    Launch.checkFlags(a, KnownFlags)
     val in = a.getOrElse("in", sys.error("--in <path-or-table> is required"))
     val out = a.getOrElse("out", sys.error("--out <dir> is required"))
     val markup = a.getOrElse("markup", "bbcode").toLowerCase match {
@@ -47,11 +49,8 @@ object ExtractMain {
       case other    => sys.error(s"--markup must be bbcode or html, got '$other'")
     }
     val buckets = a.getOrElse("buckets", "256").toInt
-
-    val spark = SparkSession.builder()
-      .appName("graft-extract")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    // the bucket count is the pmod divisor of every turn's bucket
+    require(buckets > 0, s"--buckets must be positive, got $buckets")
 
     val turns = TranscriptSource.read(spark, TranscriptSource.Config(
       format = a.getOrElse("format", "parquet"),
@@ -80,9 +79,6 @@ object ExtractMain {
           metrics = Some(metrics))
       case other => sys.error(s"--mode must be extract or main-content, got '$other'")
     }
-
-    // extraction throughput is measured over the extract phase only — the
-    // optional lineage/span sinks are separate full passes
     val sec = (System.nanoTime() - t0) / 1e9
 
     a.get("lineage").foreach { dir =>
@@ -92,19 +88,13 @@ object ExtractMain {
       SpanLineage.spanTable(turns, markup = markup)
         .write.mode("overwrite").parquet(dir)
     }
-    val rows = metrics.rows.value
-    def f(d: Double): String = BigDecimal(d).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    // JSON-escape the user-supplied path (quotes/backslashes/control chars
-    // would otherwise produce an unparseable metrics line)
-    val outJson = out.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    println(s"""{"rows":$rows,"parse_errors":${metrics.errors.value},""" +
-      s""""wall_sec":${f(sec)},"turns_per_sec":${f(if (sec > 0) rows / sec else 0)},""" +
-      s""""completed_buckets":${done.size},"out":"$outJson"}""")
-    spark.stop()
+    Stats(metrics.rows.value, metrics.errors.value, sec, done.size, out)
   }
+
+  def fields(s: Stats, launchSec: Double): Seq[(String, Any)] = Seq(
+    "rows" -> s.rows, "parse_errors" -> s.parseErrors, "wall_sec" -> s.wallSec,
+    "turns_per_sec" -> (if (s.wallSec > 0) s.rows / s.wallSec else 0.0),
+    "completed_buckets" -> s.completedBuckets, "out" -> s.out)
+
+  def main(args: Array[String]): Unit = Launch.main("graft-extract", args)(run)(fields)
 }

@@ -1410,7 +1410,6 @@ object SparkEntry {
       // polynomial rolling hash over code points, mod 1e9+7, seed 7 — the
       // native codegen expression (one pass, no per-char array); the SQL
       // oracle spells out the same recurrence in DuckDB lambdas
-      graft.functions.GraftFunctions.register(s)
       docs(s, dir).select(col("doc_id"),
           expr("rollhash_native(text)").as("rollhash"))
         .orderBy("doc_id")
@@ -1865,7 +1864,6 @@ object SparkEntry {
       // the same constructed strip, but resolved by its registered SQL
       // name instead of built as a Column — puts the SQL-function
       // registration surface under the DuckDB oracle
-      graft.functions.GraftFunctions.register(s)
       docs(s, dir).select(col("doc_id"),
           expr("bbcode_strip_native(concat('[b]', text, '[/b] [list][*]', text, '[*]tail[/list]'))")
             .as("plain"))

@@ -306,9 +306,15 @@ object GraftFunctions {
       })
   )
 
-  /** Register on an existing session (temp functions). */
-  def register(spark: SparkSession): Unit =
+  /** Register on an existing session (temp functions). A name already
+    * bound to its builder (by an earlier call or [[GraftExtensions]]) is
+    * left as it is, so a repeat call replaces nothing and logs nothing.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     definitions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

@@ -27,12 +27,6 @@ import org.apache.spark.storage.StorageLevel
   *    reported through an accumulator — capped coverage is never silent.
   */
 object DedupOps {
-  /** Stage commit marker for [[dedupCorpus]]'s `artifactDir` resume: a
-    * stage directory without it is a partial write (same contract as
-    * ExtractJob's bucket markers — existence alone is never completion).
-    */
-  private val CommitMarker = "_COMMITTED"
-
   /** Rank duplicates within exact-fingerprint groups; `dup_rank = 1` is the
     * canonical survivor, everything else is droppable. This (id → rep)
     * representation is the form to persist at 10^12-doc scale — it is linear
@@ -668,7 +662,7 @@ object DedupOps {
     * Every run takes the stage sequence `pairs` (the clustering edge list)
     * → `labels` (`(id, cluster)`), kept in memory by default. With
     * `artifactDir` set the run is RESTARTABLE: each stage is written as
-    * `_COMMITTED`-marked parquet under it and read back, and a re-run
+    * [[Commit]]-marked parquet under it and read back, and a re-run
     * resumes from the last committed stage (a died clustering pass from
     * pairs, a died anti-join from labels) instead of re-running the corpus
     * signature pass. A `pairs` stage of fully expanded id pairs (as older
@@ -710,7 +704,7 @@ object DedupOps {
           s"dedupCorpus: artifactDir $dir was produced with different parameters " +
             s"($prior vs $params) — resuming would return stale results; delete the " +
             "directory to re-run under the new parameters")
-      } else if (Seq("pairs", "labels").exists(st => fs.exists(new Path(s"$dir/$st/$CommitMarker")))) {
+      } else if (Seq("pairs", "labels").exists(st => Commit.committed(fs, new Path(s"$dir/$st")))) {
         sys.error(s"dedupCorpus: artifactDir $dir has committed stages but no " +
           "params.json — cannot prove parameter compatibility; delete the directory")
       } else {
@@ -721,18 +715,13 @@ object DedupOps {
       (dir, fs)
     }
     // One stage of the sequence: the computed frame itself, or with
-    // artifactDir its committed parquet (ExtractJob's bucket-commit idiom:
-    // the marker is written only after the producing job finished; an
-    // unmarked stage dir is a partial write — overwritten, never trusted).
+    // artifactDir its parquet, written once (Commit) and read back.
     def stage(name: String)(compute: => DataFrame): DataFrame = artifacts match {
       case None => compute
       case Some((dir, fs)) =>
-        val marker = new Path(s"$dir/$name/$CommitMarker")
-        if (!fs.exists(marker)) {
-          compute.write.mode("overwrite").parquet(s"$dir/$name")
-          fs.create(marker, true).close()
-        }
-        spark.read.parquet(s"$dir/$name") // the _-prefixed marker is not scanned
+        val path = s"$dir/$name"
+        Commit.once(fs, new Path(path))(compute.write.mode("overwrite").parquet(path))
+        spark.read.parquet(path) // the _-prefixed marker is not scanned
     }
     var ccDir: Option[String] = None // the final round's reliable checkpoint files
     val (losers, nLosers) = try {
@@ -1386,7 +1375,9 @@ object DedupOps {
   // bands and exact fingerprints): a batch exists iff its root marker
   // does. Readers list markers; writers guard the label and create the
   // marker only after the batch directory is fully written.
-  private val CommittedPrefix = "_COMMITTED_"
+  // Not Commit.once: readers list these root markers to prune batch
+  // partitions, and a re-append fails rather than skips.
+  private val CommittedPrefix = Commit.Marker + "_"
   private def committedLabels(fs: org.apache.hadoop.fs.FileSystem,
                               root: org.apache.hadoop.fs.Path,
                               dir: String): Seq[String] = {

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core._
+import graft.ops.Commit
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -145,14 +146,6 @@ object ExtractJob {
     }
   }
 
-  /** Per-bucket commit marker: written into `bucket=N/` only after the job
-    * that produced the bucket completed successfully. A `bucket=N` directory
-    * WITHOUT the marker is a partial write (crash between task commits,
-    * speculative leftovers, FileOutputCommitter v2 partials) and must be
-    * repaired, never trusted — directory existence alone is not completion.
-    */
-  private val CommitMarker = "_COMMITTED"
-
   private def bucketDirs(fs: org.apache.hadoop.fs.FileSystem, path: Path): Seq[Path] =
     if (!fs.exists(path)) Seq.empty
     else fs.listStatus(path).iterator
@@ -164,7 +157,7 @@ object ExtractJob {
     val path = new Path(outDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     bucketDirs(fs, path)
-      .filter(p => fs.exists(new Path(p, CommitMarker)))
+      .filter(Commit.committed(fs, _))
       .map(_.getName.stripPrefix("bucket=").toInt)
       .toSet
   }
@@ -258,7 +251,7 @@ object ExtractJob {
     // repair: an unmarked bucket dir is a partial write — remove it so the
     // re-run regenerates it instead of silently skipping half a bucket
     bucketDirs(fs, path)
-      .filter(p => !fs.exists(new Path(p, CommitMarker)))
+      .filter(!Commit.committed(fs, _))
       .foreach(p => fs.delete(p, true))
 
     val withBucket = turns.withColumn("bucket", pmod(hash(col("conv_id")), lit(buckets)))
@@ -273,8 +266,8 @@ object ExtractJob {
 
     // the write job succeeded: commit every bucket dir it produced
     bucketDirs(fs, path)
-      .filter(p => !fs.exists(new Path(p, CommitMarker)))
-      .foreach(p => fs.create(new Path(p, CommitMarker), true).close())
+      .filter(!Commit.committed(fs, _))
+      .foreach(Commit.mark(fs, _))
     completedBuckets(spark, outDir)
   }
 }

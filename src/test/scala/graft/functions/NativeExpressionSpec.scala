@@ -89,6 +89,33 @@ class NativeExpressionSpec extends AnyFunSuite with SparkSuite {
     assert(s2.sql("SELECT bbcode_to_html_native('[i]y[/i]') AS h").head().getString(0) == "<em>y</em>")
   }
 
+  test("registration is idempotent: a repeat call replaces no function") {
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("register-warns", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = replaced.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry").asInstanceOf[CoreLogger]
+    logger.addAppender(appender)
+    try {
+      // one session set up through the extensions, one through register
+      val viaExtensions = spark.newSession()
+      val viaRegister = spark.newSession()
+      GraftFunctions.register(viaRegister)
+      replaced.clear()
+      for (s <- Seq(viaExtensions, viaRegister, viaRegister)) GraftFunctions.register(s)
+      assert(replaced.isEmpty, replaced)
+      assert(viaExtensions.sql("SELECT rollhash_native('') AS h").head().getLong(0) == 7L)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
   test("array_dot is bit-identical to aggregate(zip_with) and null-intolerant") {
     val s = spark; import s.implicits._
     val rnd = new scala.util.Random(7)
