@@ -41,16 +41,17 @@ import org.apache.spark.sql.functions._
   *
   * Probe positions use the Kirsch–Mitzenmacher double-hash family
   * `h_i = h1 + i·h2` (same construction as the MinHash kernel,
-  * [[DedupOps.deriveB]]) — j probes cost one multiply-free add each, and
-  * two independent 64-bit mixes of one xxhash64 are as good as j true
-  * hashes for Bloom FP purposes (Kirsch & Mitzenmacher 2006).
+  * [[graft.functions.MinhashKernel.deriveB]]) — j probes cost one
+  * multiply-free add each, and two independent 64-bit mixes of one
+  * xxhash64 are as good as j true hashes for Bloom FP purposes (Kirsch &
+  * Mitzenmacher 2006).
   */
 object BloomOps {
 
   /** An immutable Bloom bitset. `bits.length == ceil(numBits/64)`. */
   final case class BloomModel(bits: Array[Long], numBits: Long, numHashes: Int) {
     def contains(h: Long): Boolean = {
-      val h2 = DedupOps.deriveB(h)
+      val h2 = graft.functions.MinhashKernel.deriveB(h)
       var i = 0
       var cur = h
       while (i < numHashes) {
@@ -105,7 +106,7 @@ object BloomOps {
     import keys.sparkSession.implicits._
     val bits = keys.as[Long].rdd.treeAggregate(new Array[Long](words))(
       seqOp = (arr, h) => {
-        val h2 = DedupOps.deriveB(h)
+        val h2 = graft.functions.MinhashKernel.deriveB(h)
         var i = 0
         var cur = h
         while (i < nh) {

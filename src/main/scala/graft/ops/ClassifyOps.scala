@@ -59,7 +59,7 @@ object ClassifyOps {
     val seen = new java.util.LinkedHashSet[Integer]()
     var i = 0
     while (i < toks.length) {
-      val h = DedupOps.hash64(toks(i))
+      val h = graft.functions.MinhashKernel.hash64(toks(i))
       seen.add(java.lang.Long.remainderUnsigned(h, dim.toLong).toInt)
       i += 1
     }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{MinhashBandsExpr, MinhashKernel}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -62,124 +63,101 @@ object DedupOps {
       .select(col("id"), col("rep"), col("group_size"), (col("id") === col("rep")).as("is_keeper"))
   }
 
-  /** 64-bit string hash (xx-style avalanche over UTF-16 chars). */
-  private[ops] def hash64(s: String): Long = {
-    var h = 0x9e3779b97f4a7c15L
-    var i = 0
-    while (i < s.length) {
-      h ^= s.charAt(i)
-      h *= 0xc2b2ae3d27d4eb4fL
-      h ^= h >>> 29
-      i += 1
-    }
-    h * 0xff51afd7ed558ccdL
-  }
-
-  /** Per-permutation hash family: h_i(x) = a(x) + i·b(x) over Z/2^64 with
-    * `b` odd (a bijection per i) — the Kirsch–Mitzenmacher two-hash
-    * construction, the standard practical MinHash family (spark.ml's
-    * MinHashLSH uses the same affine-per-permutation shape). `a` is the
-    * string hash, `b` one more avalanche round of it, forced odd. The
-    * per-permutation cost is ONE add (the signature loop walks i
-    * incrementally), measured 1.45× faster end-to-end than the previous
-    * xor-multiply mix per (shingle, i) at 512 hashes — at 100 TB the
-    * signature pass is the dominant map cost of every near-dup pipeline,
-    * so the kernel constant is the lever.
+  /** LSH band hashes of a shingle-array column as a non-null
+    * array<bigint> of length `bands`: the MinHash signature of the set
+    * (`numHashes` minima, Kirsch–Mitzenmacher family, see
+    * [[graft.functions.MinhashKernel]]) cut into `bands` slices, band b
+    * being xxhash64 of its slice's decimal text, seeded by b. A null or
+    * empty array is the empty set. One native expression, so the signature
+    * pass stays inside whole-stage codegen; duplicate shingles change
+    * nothing.
     */
-  private[ops] def deriveB(a: Long): Long = {
-    var b = a
-    b ^= b >>> 33
-    b *= 0xc2b2ae3d27d4eb4fL
-    b ^= b >>> 29
-    b | 1L
-  }
+  private[graft] def minhashBands(sh: Column, numHashes: Int, bands: Int): Column =
+    GraftSqlBridge.column(MinhashBandsExpr(GraftSqlBridge.expression(sh), numHashes, bands))
 
-  /** MinHash signature from an already-computed shingle-array column. One
-    * pass: each shingle is hashed once (`a`), a second derived hash (`b`)
-    * strides the Kirsch–Mitzenmacher family h_i = a + i·b, and the inner
-    * loop updates the running minima with one add + compare per
-    * permutation — a single typed UDF beats the equivalent 64-expression
-    * Catalyst tree, which falls out of whole-stage codegen at this width
-    * (measured ~100×). Duplicate shingles cannot change a minimum, so
-    * distinct and raw shingle arrays give identical signatures.
-    */
-  def minhashSignatureOf(shCol: Column, numHashes: Int = 64): Column = {
-    val sigUdf = udf { (shingles: Seq[String]) =>
-      val mins = Array.fill(numHashes)(Long.MaxValue)
-      if (shingles != null) {
-        val it = shingles.iterator
-        while (it.hasNext) {
-          val a = hash64(it.next())
-          val b = deriveB(a)
-          var v = a
-          var i = 0
-          while (i < numHashes) {
-            if (v < mins(i)) mins(i) = v
-            v += b
-            i += 1
-          }
-        }
-      }
-      mins
-    }
-    sigUdf(shCol)
-  }
-
-  /** Map-side MinHash signature as an array<bigint> column of length
-    * `numHashes`, from word `k`-shingles of raw text.
-    */
-  def minhashSignature(textCol: Column, k: Int = 3, numHashes: Int = 64): Column =
-    minhashSignatureOf(TextOps.shingles(textCol, k), numHashes)
-
-  /** LSH band hashes of a signature column as an array<bigint> of length
-    * `bands` (band b = xxhash64 of its signature slice, seeded by b). The
-    * signature expression is bound via [[TextOps.bindOnce]] so it is
-    * evaluated once, not once per band.
-    */
-  private[graft] def bandHashesOf(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    TextOps.bindOnce(sig)(s =>
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(concat_ws(",", slice(s, b * rowsPerBand + 1, lit(rowsPerBand))), b)))
-
-  /** Band-explode a signature column into (id, band, bucket) rows. */
-  private def bandExplode(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    sig.select(col("id"), posexplode(
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))), b)))
-      .as(Seq("band", "bucket")))
-
-  /** Self-join banded rows on (band, bucket) into unique candidate id
-    * pairs, skipping buckets larger than `maxBucket` (the residual-skew
-    * guard).
+  /** The residual-skew guard of one banded candidate join: drops the
+    * (band, bucket) groups larger than `maxBucket` and WARNs about them on
+    * the `graft.dedup` logger once the guarded job has run — capped
+    * coverage is never silent.
     *
-    * Guard accounting is fused into the candidate job itself: the
-    * bucket-size filter runs through a side-effecting predicate that
-    * records each dropped (band, bucket, size) into `skippedBuckets` as
-    * the filter executes — no separate accounting action. The accumulator
-    * is a collection keyed by (band, bucket), so re-execution of the
-    * filter subtree (the self-join evaluates it on both sides; task
-    * retries re-run it) deduplicates instead of double-counting. The
-    * derived pair count ([[skippedPairCount]]) is an UPPER BOUND on lost
-    * pairs: a pair in an oversized bucket may still be emitted via another
+    * Accounting is fused into the candidate job itself: the bucket-size
+    * filter runs through a side-effecting predicate that records each
+    * dropped group and the candidate pairs it held into the collection
+    * accumulator `graft.dedup.<kind>.skippedBuckets` as the filter
+    * executes — no separate accounting action. A record is keyed by its
+    * group, so re-execution of the filter subtree (a self-join evaluates
+    * it on both sides; task retries re-run it) deduplicates instead of
+    * double-counting. The warned pair count is an UPPER BOUND on the pairs
+    * lost: a pair in an oversized bucket may still be emitted via another
     * small shared bucket, and the same pair is counted once per oversized
     * (band, bucket) it lands in.
     */
-  private def bucketJoin(banded: DataFrame, maxBucket: Int,
-                         skippedBuckets: Option[org.apache.spark.util.CollectionAccumulator[(Int, Long, Long)]]): DataFrame = {
-    val guarded =
+  private final class BucketGuard(spark: org.apache.spark.sql.SparkSession,
+                                  kind: String, op: String, maxBucket: Int) {
+    private val skipped: org.apache.spark.util.CollectionAccumulator[SkippedBucket] =
+      spark.sparkContext.collectionAccumulator[SkippedBucket](s"graft.dedup.$kind.skippedBuckets")
+
+    /** The rows of `banded` (band, bucket, ...) in buckets within the cap,
+      * for a self-join: a dropped bucket of n rows held n(n − 1)/2 pairs.
+      */
+    def apply(banded: DataFrame): DataFrame =
       if (maxBucket == Int.MaxValue) banded
       else {
         val sizes = banded.groupBy("band", "bucket").agg(count(lit(1)).as("bsize"))
-        val small = skippedBuckets match {
-          case Some(acc) =>
-            val guardPredicate = udf { (band: Int, bucket: Long, bsize: Long) =>
-              if (bsize > maxBucket) { acc.add((band, bucket, bsize)); false } else true
-            }.asNondeterministic() // side effect: must run exactly where placed
-            sizes.filter(guardPredicate(col("band"), col("bucket"), col("bsize")))
-          case None => sizes.filter(col("bsize") <= maxBucket)
-        }
-        banded.join(small, Seq("band", "bucket")).drop("bsize")
+        keep(banded, sizes, col("bsize") * (col("bsize") - 1) / 2, cross = false)
       }
+
+    /** The rows of `index` in the buckets `batch` shares with it, within
+      * the cap, for an index × batch join: a dropped bucket of n index and
+      * m batch rows held n × m pairs. Buckets the batch misses yield no
+      * pairs in that join, so they are neither kept nor recorded.
+      */
+    def cross(index: DataFrame, batch: DataFrame): DataFrame =
+      if (maxBucket == Int.MaxValue) index
+      else {
+        val m = batch.groupBy("band", "bucket").agg(count(lit(1)).as("m"))
+        val shared = index.join(broadcast(m), Seq("band", "bucket"))
+        val sizes = shared.groupBy("band", "bucket")
+          .agg(count(lit(1)).as("bsize"), max("m").as("m"))
+        keep(shared.drop("m"), sizes, col("bsize") * col("m"), cross = true)
+      }
+
+    private def keep(banded: DataFrame, sizes: DataFrame, pairs: Column,
+                     cross: Boolean): DataFrame = {
+      val acc = skipped
+      val cap = maxBucket
+      val guardPredicate = udf { (band: Int, bucket: Long, bsize: Long, pairs: Long) =>
+        if (bsize > cap) { acc.add(SkippedBucket(cross, band, bucket, pairs)); false } else true
+      }.asNondeterministic() // side effect: must run exactly where placed
+      val small = sizes.filter(guardPredicate(col("band"), col("bucket"), col("bsize"), pairs))
+        .select("band", "bucket")
+      banded.join(small, Seq("band", "bucket"))
+    }
+
+    /** Logs what the guard dropped; call after the guarded job ran. */
+    def warn(): Unit = {
+      import scala.jdk.CollectionConverters._
+      val buckets = skipped.value.asScala.toSet
+      if (buckets.nonEmpty) {
+        val pairs = buckets.iterator.map(_.pairs).sum
+        org.slf4j.LoggerFactory.getLogger("graft.dedup").warn(
+          s"$op: bucket guard (maxBucket=$maxBucket) skipped ${buckets.size} buckets " +
+            s"holding up to $pairs candidate pairs (pairs may survive via other buckets)")
+      }
+    }
+  }
+
+  /** One bucket a [[BucketGuard]] dropped: its group (`cross` tells an
+    * index × batch group from a self-join group with the same key) and the
+    * candidate pairs it held.
+    */
+  private final case class SkippedBucket(cross: Boolean, band: Int, bucket: Long, pairs: Long)
+
+  /** Self-join banded rows on (band, bucket) into unique candidate id
+    * pairs, skipping the buckets `guard` drops.
+    */
+  private def bucketJoin(banded: DataFrame, guard: BucketGuard): DataFrame = {
+    val guarded = guard(banded)
     guarded.as("l").join(guarded.as("r"),
         col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
           col("l.id") < col("r.id"))
@@ -231,17 +209,6 @@ object DedupOps {
         col("x.rep") === col("y.rep") && col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a") +: col("y.id").as("id_b") +:
         col("x.rep").as("rep") +: carry.map(c => col(s"x.$c").as(c)): _*)
-
-  /** Upper bound on candidate pairs lost to the bucket guard, derived from
-    * the recorded oversized buckets (deduplicated by (band, bucket), so
-    * re-executions of the guard filter cannot inflate it).
-    */
-  private def skippedPairCount(
-      acc: org.apache.spark.util.CollectionAccumulator[(Int, Long, Long)]): Long = {
-    import scala.jdk.CollectionConverters._
-    acc.value.asScala.toSet[(Int, Long, Long)].iterator
-      .map { case (_, _, n) => n * (n - 1) / 2 }.sum
-  }
 
   /** Full MinHash-LSH near-dup pipeline: exact-dedup collapse → LSH
     * candidates over representatives → exact-Jaccard verify → expand back
@@ -320,15 +287,14 @@ object DedupOps {
   private def minhashRepPairs(df: DataFrame, idCol: String, textCol: String,
                               groups: DataFrame, threshold: Double, k: Int,
                               maxBucket: Int): (DataFrame, () => Unit) = {
-    val skipped = df.sparkSession.sparkContext
-      .collectionAccumulator[(Int, Long, Long)]("graft.dedup.minhash.skippedBuckets")
+    val guard = new BucketGuard(df.sparkSession, "minhash", "minhashNearDups", maxBucket)
     // _outer: bh always holds `bands` hashes, so the rows are posexplode's,
     // but a plain posexplode lets the optimizer infer size(bh) > 0 and push
     // it below the aggregate (bh is a grouping key), where it would compute
     // the signature a second time per row
     val banded = groups.select(col("rep").as("id"),
       posexplode_outer(col("bh")).as(Seq("band", "bucket")))
-    val candidates = bucketJoin(banded, maxBucket, Some(skipped))
+    val candidates = bucketJoin(banded, guard)
 
     // Exact verification: fetch shingle sets for candidate reps only. A
     // repeated id on the semi-join's build side changes nothing, so the
@@ -340,13 +306,7 @@ object DedupOps {
     val sets = df.join(broadcast(candIds), col(idCol) === col("__cid"), "left_semi")
       .select(col(idCol).as("id"), array_distinct(TextOps.shingles(col(textCol), k)).as("sh"))
       .repartition(col("id"))
-    (verifyPairs(candidates, sets, threshold), () => {
-      val nSkipped = skippedPairCount(skipped)
-      if (nSkipped > 0)
-        org.slf4j.LoggerFactory.getLogger("graft.dedup").warn(
-          s"minhashNearDups: bucket guard (maxBucket=$maxBucket) skipped up to " +
-            s"$nSkipped candidate pairs (pairs may survive via other buckets)")
-    })
+    (verifyPairs(candidates, sets, threshold), () => guard.warn())
   }
 
   /** The clustering edge list of [[dedupCorpus]]: the verified rep pairs
@@ -387,13 +347,12 @@ object DedupOps {
     require(numHashes % bands == 0, "bands must divide numHashes")
     df.filter(size(TextOps.tokens(lower(col(textCol)))) >= k)
       .withColumn("__sh", array_distinct(TextOps.shingles(col(textCol), k)))
-      .withColumn("__sig", minhashSignatureOf(col("__sh"), numHashes))
       // the coalesce never fires (null text has no tokens), but it tells the
       // optimizer that fp is never null, so a join on fp infers no not-null
       // filter to push below the aggregate in that branch alone
       .select(coalesce(TextOps.fingerprint(col(textCol)), lit("")).as("fp"),
         col(idCol).as("id"),
-        bandHashesOf(col("__sig"), bands, numHashes / bands).as("bh"),
+        minhashBands(col("__sh"), numHashes, bands).as("bh"),
         size(col("__sh")).as("nsh"))
       .groupBy("fp", "bh", "nsh")
       .agg(min(col("id")).as("rep"), count(lit(1)).as("gsz"))
@@ -1073,8 +1032,8 @@ object DedupOps {
   }
 
   /** 64-bit SimHash over token hashes: for each bit, sum ±1 weights over
-    * tokens and take the sign. One-pass typed UDF for the same codegen-
-    * width reason as [[minhashSignature]].
+    * tokens and take the sign. One-pass typed UDF: a Catalyst tree of 64
+    * per-bit sums is too wide for whole-stage codegen.
     */
   def simhash64(textCol: Column): Column = {
     val simUdf = udf { (toks: Seq[String]) =>
@@ -1082,7 +1041,7 @@ object DedupOps {
       if (toks != null) {
         val it = toks.iterator
         while (it.hasNext) {
-          val h = hash64(it.next())
+          val h = MinhashKernel.hash64(it.next())
           var b = 0
           while (b < 64) {
             if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
@@ -1106,9 +1065,7 @@ object DedupOps {
     */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3, maxBucket: Int = Int.MaxValue): DataFrame = {
-    val spark = df.sparkSession
-    val skipped = spark.sparkContext
-      .collectionAccumulator[(Int, Long, Long)]("graft.dedup.simhash.skippedBuckets")
+    val guard = new BucketGuard(df.sparkSession, "simhash", "simhashNearDups", maxBucket)
 
     // Map-side pass: fingerprint + 8-byte simhash per row; the per-fp
     // collapse shuffles (fp, id, sim) only — text never leaves the scan
@@ -1123,7 +1080,7 @@ object DedupOps {
 
     val sigs = repAgg.select(col("rep").as("id"), col("sim").as("sig"))
     val repPairs =
-      bandedHammingPairs(sigs, nBands = 4, maxHamming, maxBucket, Some(skipped))
+      bandedHammingPairs(sigs, nBands = 4, maxHamming, guard)
 
     val cross = expandCross(repPairs, byRep, Seq("hamming"))
     // duplicate groups only — the self-join never touches the corpus-sized
@@ -1135,11 +1092,7 @@ object DedupOps {
     result.count()
     repAgg.unpersist(blocking = false)
     byRep.unpersist(blocking = false)
-    val nSkipped = skippedPairCount(skipped)
-    if (nSkipped > 0)
-      org.slf4j.LoggerFactory.getLogger("graft.dedup").warn(
-        s"simhashNearDups: bucket guard (maxBucket=$maxBucket) skipped up to " +
-          s"$nSkipped candidate pairs (pairs may survive via other buckets)")
+    guard.warn()
     result
   }
 
@@ -1196,21 +1149,15 @@ object DedupOps {
       require(Seq(ByteType, ShortType, IntegerType, LongType).contains(sigs.schema(c).dataType),
         s"hammingNearDups needs integral '$c'; got " + sigs.schema(c).dataType.simpleString)
     }
-    val spark = sigs.sparkSession
-    val skipped = spark.sparkContext
-      .collectionAccumulator[(Int, Long, Long)]("graft.dedup.hamming.skippedBuckets")
+    val guard = new BucketGuard(sigs.sparkSession, "hamming", "hammingNearDups", maxBucket)
     val s = sigs
       .select(col(idCol).cast("long").as("id"), col(sigCol).cast("long").as("sig"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val result = bandedHammingPairs(s, nBands, maxHamming, maxBucket, Some(skipped))
+    val result = bandedHammingPairs(s, nBands, maxHamming, guard)
       .persist(StorageLevel.MEMORY_AND_DISK)
     result.count()
     s.unpersist(blocking = false)
-    val nSkipped = skippedPairCount(skipped)
-    if (nSkipped > 0)
-      org.slf4j.LoggerFactory.getLogger("graft.dedup").warn(
-        s"hammingNearDups: bucket guard (maxBucket=$maxBucket) skipped up to " +
-          s"$nSkipped candidate pairs (pairs may survive via other bands)")
+    guard.warn()
     result
   }
 
@@ -1220,15 +1167,14 @@ object DedupOps {
     * UNPERSISTED (id_a, id_b, hamming) frame.
     */
   private def bandedHammingPairs(s: DataFrame, nBands: Int, maxHamming: Int,
-                                 maxBucket: Int,
-                                 skipped: Option[org.apache.spark.util.CollectionAccumulator[(Int, Long, Long)]]): DataFrame = {
+                                 guard: BucketGuard): DataFrame = {
     val width = 64 / nBands
     val mask = if (width == 64) -1L else (1L << width) - 1
     val banded = s.select(col("id"), posexplode(array(
       (0 until nBands).map(b =>
         shiftrightunsigned(col("sig"), b * width).bitwiseAND(lit(mask))): _*))
       .as(Seq("band", "bucket")))
-    bucketJoin(banded, maxBucket, skipped)
+    bucketJoin(banded, guard)
       .join(s.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(s.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
       .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
@@ -1405,12 +1351,11 @@ object DedupOps {
     spark.createDataFrame(Seq((k, numHashes, bands)))
       .toDF("k", "num_hashes", "bands")
       .write.mode("overwrite").parquet(s"$dir/$IdxParams")
-  private def bandedRows(df: DataFrame, idCol: String, textCol: String,
-                         k: Int, numHashes: Int, bands: Int): DataFrame = {
-    val sig = df.select(col(idCol).cast("long").as("id"),
-      minhashSignature(col(textCol), k, numHashes).as("sig"))
-    bandExplode(sig, bands, numHashes / bands)
-  }
+  private[graft] def bandedRows(df: DataFrame, idCol: String, textCol: String,
+                                k: Int, numHashes: Int, bands: Int): DataFrame =
+    df.select(col(idCol).cast("long").as("id"),
+      posexplode(minhashBands(TextOps.shingles(col(textCol), k), numHashes, bands))
+        .as(Seq("band", "bucket")))
 
   /** Create a MinHash band index at `dir` from the initial corpus — the
     * index-once half of incremental dedup. Only (id, band, 8-byte bucket)
@@ -1485,9 +1430,11 @@ object DedupOps {
     * alone — never a full-corpus shingle pass.
     *
     * `maxBucket` guards degenerate index buckets (boilerplate text at
-    * corpus scale): per-(band, bucket) index counts — 16-byte rows,
-    * map-side partial aggregation — drop buckets above the cap before the
-    * broadcast join, same upper-bound contract as [[minhashNearDups]].
+    * corpus scale): the index rows in buckets the batch shares (a
+    * broadcast join with the batch's bucket keys) are counted per (band,
+    * bucket), and buckets above the cap are dropped before the candidate
+    * join, same upper-bound contract as [[minhashNearDups]]. Only buckets
+    * the batch meets are counted or warned about.
     *
     * Ids must be unique across corpus ∪ batch (re-submitting an indexed id
     * yields self-pairs, which are excluded, not detected as updates).
@@ -1509,8 +1456,10 @@ object DedupOps {
       readMinhashIndexParams(batch.sparkSession, indexDir)
     // eager: the candidate pair set is consumed twice below (id pruning +
     // verification) and is batch-bounded — never recompute the band joins
-    val cands = incrementalCandidatesP(batch, idCol, textCol, indexDir,
-      maxBucket, k, numHashes, bands).localCheckpoint(true)
+    val (cands0, logSkips) = incrementalCandidatesP(batch, idCol, textCol,
+      indexDir, maxBucket, k, numHashes, bands)
+    val cands = cands0.localCheckpoint(true)
+    logSkips()
     // prune the corpus to candidate ids BEFORE shingling: verification must
     // cost O(candidates), not a full-corpus shingle pass — at 10^12 docs a
     // 10^6-row batch touches ~10^6 corpus rows, and the broadcast semi-join
@@ -1541,33 +1490,30 @@ object DedupOps {
     val (k, numHashes, bands) =
       readMinhashIndexParams(batch.sparkSession, indexDir)
     incrementalCandidatesP(batch, idCol, textCol, indexDir, maxBucket,
-      k, numHashes, bands)
+      k, numHashes, bands)._1
   }
 
+  /** The candidate pairs, lazy, and a hook that logs the bucket guard's
+    * skips (oversized index buckets the batch shares, oversized batch
+    * buckets) once the pairs have been computed.
+    */
   private def incrementalCandidatesP(batch: DataFrame, idCol: String,
                                      textCol: String, indexDir: String,
                                      maxBucket: Int, k: Int, numHashes: Int,
-                                     bands: Int): DataFrame = {
+                                     bands: Int): (DataFrame, () => Unit) = {
     val spark = batch.sparkSession
+    val guard = new BucketGuard(spark, "incremental", "incrementalNearDups", maxBucket)
     val newBanded = bandedRows(batch, idCol, textCol, k, numHashes, bands)
       .localCheckpoint(true)
-    val indexed0 = committedBanded(spark, indexDir)
-    val indexed =
-      if (maxBucket == Int.MaxValue) indexed0
-      else {
-        val sizes = indexed0.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("bsize"))
-          .filter(col("bsize") <= maxBucket)
-        indexed0.join(sizes, Seq("band", "bucket")).drop("bsize")
-      }
+    val indexed = guard.cross(committedBanded(spark, indexDir), newBanded)
     val crossPairs = indexed.as("o")
       .join(broadcast(newBanded.as("n")),
         col("o.band") === col("n.band") && col("o.bucket") === col("n.bucket"))
       .filter(col("o.id") =!= col("n.id"))
       .select(least(col("o.id"), col("n.id")).as("id_a"),
         greatest(col("o.id"), col("n.id")).as("id_b"))
-    val batchPairs = bucketJoin(newBanded, maxBucket, None)
-    crossPairs.union(batchPairs).distinct()
+    val batchPairs = bucketJoin(newBanded, guard)
+    (crossPairs.union(batchPairs).distinct(), () => guard.warn())
   }
 
   // ---- incremental EXACT dedup: fingerprint index ------------------------

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import graft.functions.ShinglesExpr
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines, built
@@ -299,25 +300,17 @@ object TextOps {
         urlPattern, "<URL>"),
       longDigitPattern, "<NUM>")
 
-  /** Word k-shingles over an already-bound token-array column: shingle i =
-    * toks[i..i+k); fewer than k tokens → empty array. `toks` MUST be a
-    * cheap reference (a materialized column or a lambda variable), not a
-    * full tokenizer expression — Catalyst splices lambda bodies verbatim
-    * and does not hoist invariant subexpressions out of them, so an
-    * expensive `toks` tree would re-evaluate once PER SHINGLE (O(tokens²)
-    * per document). [[shingles]] wraps this with the single-evaluation
-    * binding for callers starting from raw text.
+  /** Word k-shingles of a token-array column: shingle i is toks[i..i+k)
+    * joined by one space, null tokens skipped as `concat_ws` skips them;
+    * fewer than k tokens → empty array, a null array → null. One native
+    * expression ([[graft.functions.ShinglesExpr]]) that evaluates `toks`
+    * once and builds each shingle in one pass, inside whole-stage codegen.
     */
   def shinglesOf(toks: Column, k: Int): Column =
-    when(size(toks) < k, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), size(toks) - k),
-        i => concat_ws(" ", slice(toks, i + 1, lit(k)))))
+    GraftSqlBridge.column(ShinglesExpr(GraftSqlBridge.expression(toks), k))
 
-  /** Word k-shingles from raw text (native higher-order functions; no
-    * UDF): the tokenizer output is bound via [[bindOnce]] so the split
-    * runs once per row instead of once per shingle — the difference
-    * between O(n) and O(n²) per document.
+  /** Word k-shingles from raw text: [[shinglesOf]] over the lowercased
+    * whitespace tokens.
     */
-  def shingles(c: Column, k: Int): Column =
-    bindOnce(tokens(lower(c)))(ts => shinglesOf(ts, k))
+  def shingles(c: Column, k: Int): Column = shinglesOf(tokens(lower(c)), k)
 }

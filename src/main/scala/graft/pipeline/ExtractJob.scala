@@ -239,7 +239,12 @@ object ExtractJob {
 
   /** Shared resumable-bucket machinery: list committed buckets, repair
     * unmarked partials, run `stage` over the pending turns only, write
-    * partitioned by bucket, mark new buckets committed.
+    * partitioned by bucket, mark new buckets committed. When every bucket
+    * in `0 until buckets` is already committed, it returns them without
+    * reading the input: a relaunch over complete output starts no Spark
+    * job. A bucket no conversation hashes into gets no directory and so
+    * is never committed; an output with such a bucket is rescanned on
+    * each relaunch (and writes nothing).
     */
   private def resumable(spark: SparkSession, turns: Dataset[Turn], outDir: String,
                         buckets: Int)(stage: Dataset[Turn] => org.apache.spark.sql.DataFrame): Set[Int] = {
@@ -247,6 +252,7 @@ object ExtractJob {
     val path = new Path(outDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val done = completedBuckets(spark, outDir)
+    if ((0 until buckets).forall(done.contains)) return done
 
     // repair: an unmarked bucket dir is a partial write — remove it so the
     // re-run regenerates it instead of silently skipping half a bucket

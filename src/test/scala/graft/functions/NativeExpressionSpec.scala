@@ -90,30 +90,16 @@ class NativeExpressionSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("registration is idempotent: a repeat call replaces no function") {
-    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("register-warns", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = replaced.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    val logger = org.apache.logging.log4j.LogManager.getLogger(
-      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry").asInstanceOf[CoreLogger]
-    logger.addAppender(appender)
-    try {
-      // one session set up through the extensions, one through register
-      val viaExtensions = spark.newSession()
-      val viaRegister = spark.newSession()
-      GraftFunctions.register(viaRegister)
-      replaced.clear()
+    // one session set up through the extensions, one through register
+    val viaExtensions = spark.newSession()
+    val viaRegister = spark.newSession()
+    GraftFunctions.register(viaRegister)
+    val replaced = graft.LogCapture.messages(
+        "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry") {
       for (s <- Seq(viaExtensions, viaRegister, viaRegister)) GraftFunctions.register(s)
-      assert(replaced.isEmpty, replaced)
-      assert(viaExtensions.sql("SELECT rollhash_native('') AS h").head().getLong(0) == 7L)
-    } finally {
-      logger.removeAppender(appender)
-      appender.stop()
     }
+    assert(replaced.isEmpty, replaced)
+    assert(viaExtensions.sql("SELECT rollhash_native('') AS h").head().getLong(0) == 7L)
   }
 
   test("array_dot is bit-identical to aggregate(zip_with) and null-intolerant") {

@@ -68,7 +68,7 @@ class BloomSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("build is deterministic across partitionings and has no false negatives") {
-    val keys = (0 until 5000).map(i => DedupOps.hash64("key" + i))
+    val keys = (0 until 5000).map(i => graft.functions.MinhashKernel.hash64("key" + i))
     // ceil(-n·ln 0.01 / ln²2) = 47,926 bits for n = 5,000 keys (a 1% FP
     // budget), rounded up to the 64-bit words buildBloom requires
     val numBits = 47936L
@@ -80,7 +80,7 @@ class BloomSpec extends AnyFunSuite with SparkSuite {
       "OR-fold must be partitioning-independent")
     assert(keys.forall(one.contains), "a Bloom filter never false-negatives")
     // FP rate in the right ballpark: probe 20k fresh keys, expect ~1%
-    val fresh = (0 until 20000).count(i => one.contains(DedupOps.hash64("other" + i)))
+    val fresh = (0 until 20000).count(i => one.contains(graft.functions.MinhashKernel.hash64("other" + i)))
     assert(fresh < 20000 * 0.05, s"FP rate way above budget: $fresh/20000")
     assert(one.load > 0.2 && one.load < 0.8, s"unexpected load ${one.load}")
   }

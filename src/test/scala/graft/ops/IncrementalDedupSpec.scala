@@ -182,6 +182,44 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkSuite {
     self ++ p.children.flatMap(collectPlan)
   }
 
+  /** A 32-row index in which every band of soup(900) is one 12-row bucket. */
+  private def hotIndex(prefix: String): (String, DataFrame) = {
+    val dir = tmp(prefix)
+    val corpus = toDf((0 until 20).map(i => (i.toLong, soup(i))) ++
+      (0 until 12).map(i => (500L + i, soup(900))))
+    DedupOps.writeMinhashIndex(corpus, "doc_id", "text", dir, k = 3, numHashes = 64, bands = 16)
+    (dir, corpus)
+  }
+
+  private def guardWarnings(batch: DataFrame, dir: String, corpus: DataFrame)
+      : (Set[(Long, Long)], Seq[String]) = {
+    var pairs = Set.empty[(Long, Long)]
+    val warned = graft.LogCapture.messages("graft.dedup") {
+      pairs = pairSet(DedupOps.incrementalNearDups(batch, "doc_id", "text", dir, corpus,
+        threshold = 0.5, maxBucket = 5))
+    }.filter(_.startsWith("incrementalNearDups: bucket guard"))
+    (pairs, warned)
+  }
+
+  test("incremental bucket guard counts the skips of the buckets a batch meets") {
+    val (dir, corpus) = hotIndex("graft_inc5")
+    // one more copy of the hot text meets the index only in its 16 hot
+    // buckets, each holding 12 index rows × 1 batch row
+    val (pairs, warned) = guardWarnings(toDf(Seq((600L, soup(900)), (601L, soup(901)))), dir, corpus)
+    assert(pairs.isEmpty, pairs.toString)
+    assert(warned.size == 1, warned)
+    assert(warned.head.contains("maxBucket=5") && warned.head.contains("skipped 16 buckets") &&
+      warned.head.contains("up to 192 candidate pairs"), warned)
+  }
+
+  test("incremental bucket guard is quiet for a batch that misses every hot bucket") {
+    val (dir, corpus) = hotIndex("graft_inc6")
+    val (pairs, warned) = guardWarnings(
+      toDf(Seq((600L, nearDup(3)), (601L, soup(901)), (602L, soup(902)))), dir, corpus)
+    assert(pairs == Set((3L, 600L)), pairs.toString)
+    assert(warned.isEmpty, warned)
+  }
+
   test("plan: the index's band rows never shuffle and text never crosses an exchange") {
     val dir = tmp("graft_inc4")
     // un-repartitioned inputs: any exchange in this plan is the operator's

@@ -47,34 +47,6 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   private def labelSet(cc: DataFrame): Set[(Long, Long)] =
     cc.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  /** The Spark jobs `body` starts. Listener events arrive in the order the
-    * jobs start, so the jobs between a marker job run before `body` and
-    * one run after it are `body`'s.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("__before")
-      body
-      marker("__after")
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!started.contains("__after") && System.nanoTime() < deadline) Thread.sleep(10)
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    started.asScala.toSeq.dropWhile(_ != "__before").drop(1).takeWhile(_ != "__after").size
-  }
-
   test("dedupCorpus job budget: one call runs at most 19 Spark jobs") {
     val docs = chainedGroupsCorpus(1)
     var survivors: DataFrame = null
@@ -101,11 +73,11 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val docs = spark.createDataFrame(ids.zip(texts)).toDF("doc_id", "text")
     val (k, numHashes, bands) = (3, 64, 16)
 
-    // the aggregate as it was: min_by over the arrays, a sort aggregate
-    val perDoc = docs.withColumn("__sh", array_distinct(TextOps.shingles(col("text"), k)))
+    // the aggregate as it was: min_by over the arrays, a sort aggregate,
+    // over the interpreted shingles, the signature UDF and the band transform
+    val perDoc = docs.withColumn("__sh", array_distinct(MinhashReference.shingles(col("text"), k)))
       .select(TextOps.fingerprint(col("text")).as("fp"), col("doc_id").as("id"),
-        DedupOps.bandHashesOf(DedupOps.minhashSignatureOf(col("__sh"), numHashes), bands,
-          numHashes / bands).as("bh"),
+        MinhashReference.bandHashes(col("__sh"), numHashes, bands).as("bh"),
         size(col("__sh")).as("nsh"))
     // not vacuous: each base's spellings are one fingerprint group, and
     // every group's members share band hashes and shingle count

@@ -98,6 +98,15 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(actual.toSeq == expected.toSeq)
   }
 
+  test("a relaunch over complete output reads no input: zero Spark jobs") {
+    val dir = Files.createTempDirectory("graft_relaunch").toString
+    val turns = TranscriptGen.turns(spark, 3000, seed = 42, partitions = 8)
+    assert(ExtractJob.runResumable(spark, turns, dir, buckets = 8) == (0 until 8).toSet)
+    var done = Set.empty[Int]
+    assert(jobsOf { done = ExtractJob.runResumable(spark, turns, dir, buckets = 8) } == 0)
+    assert(done == (0 until 8).toSet)
+  }
+
   test("resume repairs a partially-written bucket (unmarked dir is not trusted)") {
     val dir = Files.createTempDirectory("graft_partial").toString
     val turns = TranscriptGen.turns(spark, 3000, seed = 42, partitions = 8)

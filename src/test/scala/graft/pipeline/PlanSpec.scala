@@ -377,6 +377,22 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       s"expected a hash-aggregate count stage:\n$s")
   }
 
+  test("MinHash signature passes run native expressions: no Scala UDF, no interpreted transform") {
+    import graft.ops.DedupOps
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Expression, ScalaUDF}
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    for (df <- Seq(
+        DedupOps.minhashRepAgg(docs, "doc_id", "text", k = 3, numHashes = 64, bands = 16),
+        DedupOps.bandedRows(docs, "doc_id", "text", k = 3, numHashes = 64, bands = 16))) {
+      val exprs: Seq[Expression] = df.queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      val names = exprs.map(_.getClass.getSimpleName).toSet
+      assert(names.contains("ShinglesExpr") && names.contains("MinhashBandsExpr"), names)
+      val interpreted = exprs.collect { case e: ScalaUDF => e; case e: ArrayTransform => e }
+      assert(interpreted.isEmpty, s"interpreted expressions in:\n${df.queryExecution.optimizedPlan}")
+    }
+  }
+
   test("whole-stage codegen covers the text-analysis operators") {
     val df = SparkEntry.queries("q_docs_quality")(spark, sfDir)
     df.collect() // finalize AQE so codegen stages appear
