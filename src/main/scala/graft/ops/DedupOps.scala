@@ -165,50 +165,94 @@ object DedupOps {
       .distinct()
   }
 
-  /** Exact n-gram Jaccard of candidate pairs `(id_a, id_b)` against the
-    * `(id, sh)` distinct-shingle sets of their documents: joins each side's
-    * set back, computes |∩| / |∪| with native array ops and keeps pairs with
-    * `jaccard >= threshold` as `(id_a, id_b, inter, union, jaccard)`. The
-    * one verify step of [[minhashNearDups]], [[dedupCorpus]] and
-    * [[incrementalNearDups]]. Both joins read `sets` under an alias, not a
-    * renamed copy, so their build sides are one plan: Spark reuses the
-    * exchange instead of building the same sets twice.
+  /** The one verify step of every near-dup path: joins each side's row of
+    * `sets` (keyed by `id`) to the candidate pairs `(id_a, id_b)`, computes
+    * `metrics` over the two rows, aliased `a` and `b`, and keeps the pairs
+    * whose metrics satisfy `keep`, as `(id_a, id_b, metrics…)`. Both joins
+    * read `sets` under an alias, not a renamed copy, so their build sides
+    * are one plan: Spark reuses the exchange instead of building the same
+    * sets twice.
     */
   private def verifyPairs(candidates: DataFrame, sets: DataFrame,
-                          threshold: Double): DataFrame =
+                          metrics: Seq[Column], keep: Column): DataFrame =
     candidates
       .join(sets.as("a"), col("id_a") === col("a.id"))
       .join(sets.as("b"), col("id_b") === col("b.id"))
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("a.sh"), col("b.sh"))).as("inter"),
-        size(array_union(col("a.sh"), col("b.sh"))).as("union"))
-      .withColumn("jaccard",
-        when(col("union") === 0, lit(0.0)).otherwise(col("inter").cast("double") / col("union")))
-      .filter(col("jaccard") >= threshold)
+      .select(col("id_a") +: col("id_b") +: metrics: _*)
+      .filter(keep)
 
-  /** Expand representative-level pairs to full id pairs across fingerprint
-    * groups, carrying the rep pair's metric columns (identical normalized
-    * text ⇒ identical shingle sets/signatures). Emits id_a < id_b.
+  /** Exact n-gram Jaccard of candidate pairs against the `(id, sh)`
+    * distinct-shingle sets of their documents: |∩| / |∪| with native array
+    * ops, keeping `(id_a, id_b, inter, union, jaccard)` with `jaccard >=
+    * threshold`. The verify of [[minhashNearDups]], [[dedupCorpus]] and
+    * [[incrementalNearDups]].
     */
-  private def expandCross(repPairs: DataFrame, byRep: DataFrame,
-                          carry: Seq[String]): DataFrame =
-    repPairs
-      .join(byRep.select(col("rep").as("id_a"), col("id").as("ma")), "id_a")
-      .join(byRep.select(col("rep").as("id_b"), col("id").as("mb")), "id_b")
+  private def jaccardPairs(candidates: DataFrame, sets: DataFrame,
+                           threshold: Double): DataFrame = {
+    val jaccard =
+      when(col("union") === 0, lit(0.0)).otherwise(col("inter").cast("double") / col("union"))
+    verifyPairs(candidates, sets,
+        Seq(size(array_intersect(col("a.sh"), col("b.sh"))).as("inter"),
+          size(array_union(col("a.sh"), col("b.sh"))).as("union")),
+        jaccard >= threshold)
+      .withColumn("jaccard", jaccard)
+  }
+
+  /** The (id → rep) member map of fingerprint `groups` `(fp, rep, carry…)`:
+    * one row `(id, rep, carry…)` per document of `df` whose fingerprint has
+    * a group. Only the fingerprint is re-derived (a cheap md5 scan); a null
+    * text has a null fingerprint and joins no group. The rows with `id =!=
+    * rep` are the groups' star edges.
+    */
+  private def memberMap(df: DataFrame, idCol: String, textCol: String,
+                        groups: DataFrame, carry: Seq[String] = Nil): DataFrame =
+    df.select(col(idCol).as("id"), TextOps.fingerprint(col(textCol)).as("fp"))
+      .join(groups.select((Seq("fp", "rep") ++ carry).map(col): _*), "fp")
+      .select((Seq("id", "rep") ++ carry).map(col): _*)
+
+  /** Expands verified representative pairs `(id_a < id_b, metrics…)` to
+    * all id pairs (id_a < id_b) through the member map `members` `(id, rep,
+    * carry…)`, the expansion that ends each public pair list:
+    *  - a rep pair becomes every member pair across its two groups, with the
+    *    rep pair's metrics (members share normalized text, hence shingle
+    *    sets and signatures);
+    *  - a group's own pairs come from its star edges: `(rep, m)` per star
+    *    edge, plus star ⋈ star on `rep` for the pairs of two non-rep
+    *    members, with the metrics `sameGroup` computes from `carry`. Only
+    *    duplicate members are in a star, so the self-join is quadratic in
+    *    them alone, never in the corpus-sized map.
+    */
+  private def expandPairs(repPairs: DataFrame, members: DataFrame,
+                          sameGroup: Seq[Column]): DataFrame = {
+    val metrics = repPairs.columns.filterNot(Set("id_a", "id_b")).map(col)
+    val cross = repPairs
+      .join(members.select(col("rep").as("id_a"), col("id").as("ma")), "id_a")
+      .join(members.select(col("rep").as("id_b"), col("id").as("mb")), "id_b")
       .select(least(col("ma"), col("mb")).as("id_a") +:
-        greatest(col("ma"), col("mb")).as("id_b") +: carry.map(col): _*)
-
-  /** All (id_a < id_b, rep) pairs within each fingerprint group — exact
-    * duplicates by construction — plus the left member's `carry` columns.
-    * Callers should pre-filter the input to duplicate groups (group size
-    * > 1): the self-join is then quadratic only in duplicate members,
-    * never in the corpus-sized (id → rep) map.
-    */
-  private def withinGroupPairs(byRep: DataFrame, carry: Seq[String] = Nil): DataFrame =
-    byRep.as("x").join(byRep.as("y"),
+        greatest(col("ma"), col("mb")).as("id_b") +: metrics: _*)
+    val carry = members.columns.filterNot(Set("id", "rep"))
+    val star = members.filter(col("id") =!= col("rep"))
+    val fromRep = star.select(col("rep").as("id_a") +: col("id").as("id_b") +: carry.map(col): _*)
+    val betweenMembers = star.as("x").join(star.as("y"),
         col("x.rep") === col("y.rep") && col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a") +: col("y.id").as("id_b") +:
-        col("x.rep").as("rep") +: carry.map(c => col(s"x.$c").as(c)): _*)
+        carry.map(c => col(s"x.$c").as(c)): _*)
+    cross.unionByName(fromRep.unionByName(betweenMembers)
+      .select(col("id_a") +: col("id_b") +: sameGroup: _*))
+  }
+
+  /** Ends a public pair list: persists `pairs` and materializes them with
+    * one action, one query in which Spark reuses the exchanges the branches
+    * share (the signature aggregate among them), then logs what `guard`
+    * skipped. The returned (small, pairs-only) frame owns its cache; the
+    * caller releases it with `result.unpersist()`.
+    */
+  private def materialize(pairs: DataFrame, guard: BucketGuard): DataFrame = {
+    val result = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    result.count()
+    guard.warn()
+    result
+  }
 
   /** Full MinHash-LSH near-dup pipeline: exact-dedup collapse → LSH
     * candidates over representatives → exact-Jaccard verify → expand back
@@ -230,11 +274,15 @@ object DedupOps {
     *     via a broadcast semi-join on the candidate id set — the corpus
     *     streams map-side through the filter and just the candidates'
     *     shingle sets shuffle into the pair join.
+    *  4. The verified rep pairs expand through the (id → rep) member map,
+    *     and each group's own pairs (jaccard 1) come from its star edges:
+    *     the factorized shape of [[dedupCorpus]]'s edge list, expanded only
+    *     here, at the end, because the output is the id pairs
+    *     (quadratic in group size).
     * The cost of this shape is signature work per ROW (not per rep) in
     * pass 1 and a second corpus scan in pass 3 — map-side compute traded
-    * for exchange bytes, the right trade at 100 TB.
-    * Only this public pair list expands the verified REPRESENTATIVE pairs
-    * to id pairs (quadratic in group size); [[dedupCorpus]] does not.
+    * for exchange bytes, the right trade at 100 TB. Every branch reads the
+    * one signature aggregate, so the pass runs once, with no cache.
     *
     * A document with fewer than `k` tokens has no shingles and is in no
     * pair, whatever the threshold: with `threshold <= 0` the result holds
@@ -249,44 +297,23 @@ object DedupOps {
                       numHashes: Int = 64, bands: Int = 16,
                       maxBucket: Int = Int.MaxValue): DataFrame = {
     val groups = minhashRepAgg(df, idCol, textCol, k, numHashes, bands)
-    val (repPairs, logSkips) =
-      minhashRepPairs(df, idCol, textCol, groups, threshold, k, maxBucket)
-    // (id → rep, gsz, nsh) for every document with a non-empty shingle set
-    // (no other document is in a verified pair or a within-group pair); the
-    // groups side re-derives only the fingerprint (cheap md5 scan)
-    val byRep = df.select(col(idCol).as("id"), TextOps.fingerprint(col(textCol)).as("fp"))
-      .join(groups.select(col("fp"), col("rep"), col("gsz"), col("nsh")), "fp")
-      .select(col("id"), col("rep"), col("gsz"), col("nsh"))
-    // within-group pairs are exact duplicates: jaccard 1. Pre-filtering
-    // byRep to duplicate groups makes the self-join quadratic only in the
-    // DUPLICATE members, never the corpus-sized (id → rep) map.
-    val within = withinGroupPairs(byRep.filter(col("gsz") > 1), carry = Seq("nsh"))
-      .select(col("id_a"), col("id_b"), col("nsh").as("inter"), col("nsh").as("union"),
-        lit(1.0).as("jaccard"))
-    val expanded = expandCross(repPairs, byRep, Seq("inter", "union", "jaccard"))
-      .unionByName(within)
-
-    // Materialize into a pairs-only cache: one query, in which Spark reuses
-    // the exchanges its branches share (the signature aggregate among them).
-    // The returned (small) frame owns its cache; callers release it with
-    // result.unpersist() when done.
-    val result = expanded.persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    logSkips()
-    result
+    val (repPairs, guard) = minhashRepPairs(df, idCol, textCol, groups, threshold, k, maxBucket)
+    // a group's members are exact duplicates: jaccard 1 over its shingle count
+    materialize(expandPairs(repPairs, memberMap(df, idCol, textCol, groups, Seq("nsh")),
+      Seq(col("nsh").as("inter"), col("nsh").as("union"), lit(1.0).as("jaccard"))), guard)
   }
 
   /** Passes 2-3 of [[minhashNearDups]] over `groups`, the
     * [[minhashRepAgg]] of pass 1: the verified representative pairs
-    * `(id_a < id_b, inter, union, jaccard)`, lazy, and a hook that logs the
-    * bucket guard's skips once a consumer of the pairs has run. Nothing is
-    * cached: the groups, the candidates and the shingle sets each have two
-    * or more readers in the consumer's one query, and Spark reuses the
-    * exchange under each.
+    * `(id_a < id_b, inter, union, jaccard)`, lazy, and the guard that caps
+    * their candidate buckets (it logs its skips once a consumer of the
+    * pairs has run). Nothing is cached: the groups, the candidates and
+    * the shingle sets each have two or more readers in the consumer's one
+    * query, and Spark reuses the exchange under each.
     */
   private def minhashRepPairs(df: DataFrame, idCol: String, textCol: String,
                               groups: DataFrame, threshold: Double, k: Int,
-                              maxBucket: Int): (DataFrame, () => Unit) = {
+                              maxBucket: Int): (DataFrame, BucketGuard) = {
     val guard = new BucketGuard(df.sparkSession, "minhash", "minhashNearDups", maxBucket)
     // _outer: bh always holds `bands` hashes, so the rows are posexplode's,
     // but a plain posexplode lets the optimizer infer size(bh) > 0 and push
@@ -306,7 +333,7 @@ object DedupOps {
     val sets = df.join(broadcast(candIds), col(idCol) === col("__cid"), "left_semi")
       .select(col(idCol).as("id"), array_distinct(TextOps.shingles(col(textCol), k)).as("sh"))
       .repartition(col("id"))
-    (verifyPairs(candidates, sets, threshold), () => guard.warn())
+    (jaccardPairs(candidates, sets, threshold), guard)
   }
 
   /** The clustering edge list of [[dedupCorpus]]: the verified rep pairs
@@ -322,21 +349,20 @@ object DedupOps {
     // Both branches read the same fingerprint groups, so Spark reuses the
     // aggregate's exchange and the signature pass runs once without a cache.
     val groups = minhashRepAgg(df, idCol, textCol, k, numHashes, bands)
-    val (repPairs, logSkips) = minhashRepPairs(df, idCol, textCol, groups, threshold, k, maxBucket)
-    val star = df.select(col(idCol).as("id"), TextOps.fingerprint(col(textCol)).as("fp"))
-      .join(groups.select(col("fp"), col("rep")), "fp")
-      .filter(col("id") =!= col("rep"))
+    val (repPairs, guard) = minhashRepPairs(df, idCol, textCol, groups, threshold, k, maxBucket)
+    val star = memberMap(df, idCol, textCol, groups).filter(col("id") =!= col("rep"))
       .select(col("rep").as("id_a"), col("id").as("id_b"))
-    (repPairs.select("id_a", "id_b").unionByName(star), logSkips)
+    (repPairs.select("id_a", "id_b").unionByName(star), () => guard.warn())
   }
 
   /** Map-side pass 1 + per-fingerprint collapse for [[minhashNearDups]]:
-    * (fp, band hashes, distinct-shingle count, rep, group size) per
-    * distinct document with a non-empty shingle set. Members of a
-    * fingerprint group share normalized text, so they share band hashes
-    * and shingle count: grouping on all three gives one row per fingerprint
-    * through a hash aggregate (an aggregate OVER the arrays would force a
-    * sort aggregate). Documents with fewer than k tokens have no shingles:
+    * (fp, band hashes, distinct-shingle count, rep) per distinct document
+    * with a non-empty shingle set. Members of a fingerprint group share
+    * normalized text, so they share band hashes and shingle count: grouping
+    * on all three gives one row per fingerprint through a hash aggregate
+    * (an aggregate OVER the arrays would force a sort aggregate), with
+    * `min(id)` its only aggregate, so every reader plans the same
+    * aggregate. Documents with fewer than k tokens have no shingles:
     * they stay unclustered, and their band hashes would all collide only to
     * verify to jaccard 0, so they are left out before the signature pass.
     * Package-visible so plan tests can assert that no exchange in this
@@ -355,7 +381,7 @@ object DedupOps {
         minhashBands(col("__sh"), numHashes, bands).as("bh"),
         size(col("__sh")).as("nsh"))
       .groupBy("fp", "bh", "nsh")
-      .agg(min(col("id")).as("rep"), count(lit(1)).as("gsz"))
+      .agg(min(col("id")).as("rep"))
   }
 
   /** Connected components over an undirected pair list `(id_a, id_b)`:
@@ -908,57 +934,28 @@ object DedupOps {
     *
     * Scale shape: ONE map-side window explode; the per-window occurrence
     * count is a `count() OVER (PARTITION BY window)` on the single
-    * exchange (rows are (id, pos, 8-byte key) ≈ 24 B — an extremely hot
-    * boilerplate window concentrates on one reducer but spills and
-    * completes; the alternative agg+join shape is AQE-skew-splittable at
-    * the price of running the corpus explode twice — the dominant map
-    * cost — so the single-pass form wins until a corpus is boilerplate-
-    * degenerate). Flagged windows merge into maximal regions per doc
-    * (variable-gap islands: regions whose coverage overlaps or abuts are
-    * ONE region; per-doc window partitions are bounded by the doc's own
-    * window count). With `hashed = true` (the 100 TB default) windows
-    * travel as 8-byte xxhash64 keys; a collision can only over-flag a
-    * span for review — the safe failure direction. Within-doc repeats
-    * count toward `minCount` (text repeated twice in one document is
-    * duplicated text).
-    *
-    * `skewSafe` selects the per-window counting plan:
-    *  - `false` (default): `count() OVER (PARTITION BY w)` on the single
-    *    exchange the flagged rows need anyway — ONE corpus explode, one
-    *    exchange, no join. The catch at scale: window functions get no AQE
-    *    skew splitting, and the hot key IS the operator's target workload —
-    *    a boilerplate 50-gram repeated 10^9 times materializes every
-    *    occurrence on one reducer (~24 GB; spills and completes, but
-    *    serializes the stage).
-    *  - `true`: two-level hash-aggregate count — the partial (map-side)
-    *    combine collapses the hot key to one 16-byte row per map partition
-    *    BEFORE the exchange, so no reducer ever sees a key's full
-    *    occurrence list — then the flagged-window set joins back to the
-    *    occurrence rows (an equi-join AQE can both broadcast, when the
-    *    flagged set is small, and skew-split, when it is not). The price is
-    *    the corpus explode running twice (count pass + join pass) — the
-    *    dominant map cost — which is why the single-pass form stays the
-    *    default; flip this on for boilerplate-degenerate corpora.
-    *    Detections are IDENTICAL under both plans.
+    * exchange the flagged rows need anyway — one corpus explode, one
+    * exchange, no join (rows are (id, pos, 8-byte key) ≈ 24 B). The catch
+    * at scale: window functions get no AQE skew splitting, so an extremely
+    * hot boilerplate window concentrates on one reducer, which spills and
+    * completes but serializes the stage. Flagged windows merge into
+    * maximal regions per doc (variable-gap islands: regions whose coverage
+    * overlaps or abuts are ONE region; per-doc window partitions are
+    * bounded by the doc's own window count). With `hashed = true` (the
+    * 100 TB default) windows travel as 8-byte xxhash64 keys; a collision
+    * can only over-flag a span for review — the safe failure direction.
+    * Within-doc repeats count toward `minCount` (text repeated twice in one
+    * document is duplicated text).
     */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
                      k: Int = 50, minCount: Long = 2,
-                     hashed: Boolean = true, skewSafe: Boolean = false): DataFrame = {
+                     hashed: Boolean = true): DataFrame = {
     require(minCount >= 2,
       s"duplicateSpans: minCount must be >= 2 (a window trivially occurs " +
         s"once — minCount=$minCount would flag every document whole)")
-    val win = keyedPositionedShingles(df, idCol, textCol, k, hashed)
-    val flagged =
-      if (skewSafe) {
-        // partial-agg count (map-side combine kills the hot key), then the
-        // flagged set joins back; no window over w anywhere in this plan
-        val flaggedW = win.groupBy("w").agg(count(lit(1)).as("n"))
-          .filter(col("n") >= minCount)
-          .select("w")
-        win.join(flaggedW, "w")
-      } else win
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("w")))
-        .filter(col("n") >= minCount)
+    val flagged = keyedPositionedShingles(df, idCol, textCol, k, hashed)
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("w")))
+      .filter(col("n") >= minCount)
     // merge flagged windows into MAXIMAL regions: windows p1 < p2 overlap
     // or abut (contiguous duplicated tokens) iff p2 - p1 <= k, so a new
     // island starts when the position gap exceeds k — a lag + running-sum
@@ -991,8 +988,8 @@ object DedupOps {
     */
   def stripDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
                           k: Int = 50, minCount: Long = 2,
-                          hashed: Boolean = true, skewSafe: Boolean = false): DataFrame = {
-    val spans = duplicateSpans(df, idCol, textCol, k, minCount, hashed, skewSafe)
+                          hashed: Boolean = true): DataFrame = {
+    val spans = duplicateSpans(df, idCol, textCol, k, minCount, hashed)
       .groupBy("id")
       .agg(collect_list(struct(col("span_start"), col("span_end"))).as("__spans"))
     df.select(col(idCol).as("id"), col(textCol).as("__text"))
@@ -1061,50 +1058,35 @@ object DedupOps {
     * into 4×16-bit keys (Hamming ≤ 3 over 4 bands ⇒ at least one band
     * identical, so recall at the Hamming threshold is structural, not
     * probabilistic) → verify by exact Hamming distance → expand back to id
-    * pairs. Hot-bucket guard as in [[minhashNearDups]].
+    * pairs, each group's own pairs at hamming 0 from its star edges. The
+    * shape of [[minhashNearDups]]: every branch reads the one signature
+    * aggregate ([[simhashRepAgg]]), so the text is read and hashed once and
+    * nothing but the result is cached; text never leaves the scan stage
+    * (the verify needs just the 64-bit signatures). Hot-bucket guard as in
+    * [[minhashNearDups]]. A null text is in no pair.
+    *
+    * The returned frame is persisted and materialized; call
+    * `result.unpersist()` when done with it.
     */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3, maxBucket: Int = Int.MaxValue): DataFrame = {
     val guard = new BucketGuard(df.sparkSession, "simhash", "simhashNearDups", maxBucket)
-
-    // Map-side pass: fingerprint + 8-byte simhash per row; the per-fp
-    // collapse shuffles (fp, id, sim) only — text never leaves the scan
-    // stage anywhere in this pipeline (hamming verification needs just the
-    // 64-bit signatures). min_by is for determinism: fp-equal docs share
-    // normalized text, hence the same simhash.
-    val repAgg = simhashRepAgg(df, idCol, textCol).persist(StorageLevel.MEMORY_AND_DISK)
-    val groups = df.select(col(idCol).as("id"), TextOps.fingerprint(col(textCol)).as("fp"))
-    val byRep = groups.join(repAgg.select(col("fp"), col("rep"), col("gsz")), "fp")
-      .select(col("id"), col("rep"), col("gsz"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val sigs = repAgg.select(col("rep").as("id"), col("sim").as("sig"))
-    val repPairs =
-      bandedHammingPairs(sigs, nBands = 4, maxHamming, guard)
-
-    val cross = expandCross(repPairs, byRep, Seq("hamming"))
-    // duplicate groups only — the self-join never touches the corpus-sized
-    // (id -> rep) map (see withinGroupPairs)
-    val within = withinGroupPairs(byRep.filter(col("gsz") > 1))
-      .select(col("id_a"), col("id_b"), lit(0).as("hamming"))
-
-    val result = cross.unionByName(within).persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    repAgg.unpersist(blocking = false)
-    byRep.unpersist(blocking = false)
-    guard.warn()
-    result
+    val groups = simhashRepAgg(df, idCol, textCol)
+    val repPairs = bandedHammingPairs(groups.select(col("rep").as("id"), col("sim").as("sig")),
+      nBands = 4, maxHamming, guard)
+    materialize(expandPairs(repPairs, memberMap(df, idCol, textCol, groups),
+      Seq(lit(0).as("hamming"))), guard)
   }
 
   /** Hamming-banded near-dup over PRECOMPUTED 64-bit signatures — the
-    * generic core behind media perceptual hashes (text SimHash keeps its
-    * own fingerprint-collapsed pipeline): `sigs` carries one signature
-    * per id; the 64-bit key splits into `nBands` equal slices that bucket
-    * the candidate join. Pigeonhole guarantee: a pair at hamming
-    * < nBands differs in fewer bits than there are bands, so at least one
-    * band is bit-equal — recall is 100% up to `nBands − 1`; wider
-    * distances surface only via a luckily-equal band (raise nBands for
-    * wider radii: 16 bands of 4 bits guarantee ≤ 15). Output
+    * generic core behind media perceptual hashes (text SimHash adds the
+    * fingerprint collapse and expansion of [[simhashNearDups]]): `sigs`
+    * carries one signature per id; the 64-bit key splits into `nBands`
+    * equal slices that bucket the candidate join. Pigeonhole guarantee: a
+    * pair at hamming < nBands differs in fewer bits than there are bands,
+    * so at least one band is bit-equal — recall is 100% up to `nBands − 1`;
+    * wider distances surface only via a luckily-equal band (raise nBands
+    * for wider radii: 16 bands of 4 bits guarantee ≤ 15). Output
     * `(id_a, id_b, hamming)` with id_a < id_b.
     *
     * Scale shape: the band explode is map-side and only (id, band,
@@ -1113,6 +1095,9 @@ object DedupOps {
     * thumbnails, a solid-color meme template repeated 10⁹ times) are
     * capped by `maxBucket` with the same skip-accounting warning as the
     * text paths — capped pairs may still surface via their other bands.
+    * The signatures are persisted for the call: the explode and both verify
+    * joins read them, and a caller's signatures are often costly to
+    * recompute (image decodes) with no exchange above them to reuse.
     *
     * THE RADIUS/SCALE TRADEOFF (read before raising nBands): each band's
     * bucket key has only `2^(64/nBands)` possible values, and expected
@@ -1153,18 +1138,14 @@ object DedupOps {
     val s = sigs
       .select(col(idCol).cast("long").as("id"), col(sigCol).cast("long").as("sig"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val result = bandedHammingPairs(s, nBands, maxHamming, guard)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
+    val result = materialize(bandedHammingPairs(s, nBands, maxHamming, guard), guard)
     s.unpersist(blocking = false)
-    guard.warn()
     result
   }
 
   /** The band-explode → bucket-join → popcount-verify core shared by
-    * [[hammingNearDups]] and [[simhashNearDups]]: `s` = (id, sig) rows
-    * (caller persists — this frame is consumed three times). Returns an
-    * UNPERSISTED (id_a, id_b, hamming) frame.
+    * [[hammingNearDups]] and [[simhashNearDups]] over `s` = (id, sig) rows:
+    * a lazy (id_a, id_b, hamming) frame.
     */
   private def bandedHammingPairs(s: DataFrame, nBands: Int, maxHamming: Int,
                                  guard: BucketGuard): DataFrame = {
@@ -1174,24 +1155,27 @@ object DedupOps {
       (0 until nBands).map(b =>
         shiftrightunsigned(col("sig"), b * width).bitwiseAND(lit(mask))): _*))
       .as(Seq("band", "bucket")))
-    bucketJoin(banded, guard)
-      .join(s.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(s.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
+    verifyPairs(bucketJoin(banded, guard), s,
+      Seq(bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming")),
+      col("hamming") <= maxHamming)
   }
 
   /** Map-side pass + per-fingerprint collapse for [[simhashNearDups]]:
-    * (fp, rep, simhash) per distinct document. Package-visible for plan
-    * tests (no text column above the exchange).
+    * (fp, simhash, rep) per distinct document. fp-equal documents share
+    * normalized text, hence tokens and simhash, so the simhash is a
+    * grouping key beside the fingerprint and `min(id)` the only aggregate:
+    * one hash aggregate that every reader plans alike. A null text's
+    * fingerprint is null; the coalesce groups it under "" (which no md5
+    * equals), so a join on fp infers no not-null filter to push below the
+    * aggregate in one branch alone, and the group has no member in the
+    * member map, so it is in no pair. Package-visible for plan tests (no
+    * text column above the exchange).
     */
   private[graft] def simhashRepAgg(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(TextOps.fingerprint(col(textCol)).as("fp"), col(idCol).as("id"),
-        simhash64(col(textCol)).as("sim"))
-      .groupBy("fp")
-      .agg(min(col("id")).as("rep"), min_by(col("sim"), col("id")).as("sim"),
-        count(lit(1)).as("gsz"))
+    df.select(coalesce(TextOps.fingerprint(col(textCol)), lit("")).as("fp"),
+        col(idCol).as("id"), simhash64(col(textCol)).as("sim"))
+      .groupBy("fp", "sim")
+      .agg(min(col("id")).as("rep"))
 
   /** CORPUS-WIDE duplicate-line removal (C4-style): every line that occurs
     * more than once anywhere in the corpus keeps only its globally-first
@@ -1475,7 +1459,7 @@ object DedupOps {
       .dropDuplicates(idCol)
     val sets = texts.select(col(idCol).as("id"),
       array_distinct(TextOps.shingles(col(textCol), k)).as("sh"))
-    verifyPairs(cands, sets, threshold)
+    jaccardPairs(cands, sets, threshold)
   }
 
   /** The candidate (id_a, id_b) stage of [[incrementalNearDups]],

@@ -86,17 +86,39 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       .filter(col("n") === 6 && col("nbh") === 1 && col("nnsh") === 1).count() == bases.size)
     val before = perDoc.groupBy("fp")
       .agg(min(col("id")).as("rep"), min_by(col("bh"), col("id")).as("bh"),
-        min_by(col("nsh"), col("id")).as("nsh"), count(lit(1)).as("gsz"))
+        min_by(col("nsh"), col("id")).as("nsh"))
       .filter(col("nsh") > 0)
     val now = DedupOps.minhashRepAgg(docs, "doc_id", "text", k, numHashes, bands)
-    def groupRows(g: DataFrame) = g.select("fp", "rep", "bh", "nsh", "gsz").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getSeq[Long](2), r.getInt(3), r.getLong(4))).toSet
-    assert(groupRows(now) == groupRows(before))
-    assert(groupRows(now).size == bases.size + 8)
-    def byRep(g: DataFrame) = docs.select(col("doc_id").as("id"), TextOps.fingerprint(col("text")).as("fp"))
-      .join(g, "fp").select("id", "rep", "gsz", "nsh").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    assert(byRep(now) == byRep(before))
+    // the (id -> rep, signature) member map through the fingerprint join (a
+    // null text joins nothing), and each group's size counted from it
+    def members(g: DataFrame, sig: Seq[String]) =
+      docs.select(col("doc_id").as("id"), TextOps.fingerprint(col("text")).as("fp"))
+        .join(g, "fp").select((Seq("id", "fp", "rep") ++ sig).map(col): _*)
+    def groupRows(g: DataFrame, sig: Seq[String]) =
+      members(g, sig).groupBy((Seq("fp", "rep") ++ sig).map(col): _*).agg(count(lit(1)).as("gsz"))
+        .collect().map(_.toSeq).toSet
+    def memberRows(g: DataFrame, sig: Seq[String]) =
+      members(g, sig).drop("fp").collect().map(_.toSeq).toSet
+    val mh = Seq("bh", "nsh")
+    assert(groupRows(now, mh) == groupRows(before, mh))
+    assert(groupRows(now, mh).size == bases.size + 8)
+    assert(memberRows(now, mh) == memberRows(before, mh))
+
+    // the SimHash collapse against its min_by form: no k filter, so the
+    // short texts and the empty text form groups too; the null text is in
+    // no group's members
+    val simPerDoc = docs.select(TextOps.fingerprint(col("text")).as("fp"), col("doc_id").as("id"),
+      DedupOps.simhash64(col("text")).as("sim"))
+    assert(simPerDoc.groupBy("fp").agg(count(lit(1)).as("n"), countDistinct(col("sim")).as("ns"))
+      .filter(col("n") === 6 && col("ns") === 1).count() == bases.size)
+    val simBefore = simPerDoc.groupBy("fp")
+      .agg(min(col("id")).as("rep"), min_by(col("sim"), col("id")).as("sim"))
+    val simNow = DedupOps.simhashRepAgg(docs, "doc_id", "text")
+    val sh = Seq("sim")
+    assert(groupRows(simNow, sh) == groupRows(simBefore, sh))
+    assert(groupRows(simNow, sh).size == bases.size + 8 + 2)
+    assert(memberRows(simNow, sh) == memberRows(simBefore, sh))
+    assert(memberRows(simNow, sh).size == texts.size - 1)
 
     // survivors: the min id of each base's spellings, and every other doc
     val byText = ids.zip(texts).toMap
@@ -108,6 +130,52 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val survivors = DedupOps.dedupCorpus(docs, "doc_id", "text", threshold = 0.7)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == ids.toSet -- losers)
+  }
+
+  test("near-dup pair lists equal the cross + within-group composition, row for row") {
+    val rnd = new scala.util.Random(23)
+    def words(n: Int) = Vector.fill(n)(s"w${rnd.nextInt(100000)}").mkString(" ")
+    // spellings the fingerprint normalizes alike, so a group's raw texts differ
+    def spelling(t: String, i: Int) = Seq(t, t.toUpperCase, s" $t ", t.replace(" ", "\t"),
+      t.replace(" ", "  "), s"$t\n")(i % 6)
+    // exact groups of 1, 2, 3 and 6 members; each base's near copy (one word
+    // appended) gets the next size, so rep pairs expand across groups of
+    // different sizes
+    val sizes = Seq(1, 2, 3, 6)
+    val bases = Seq.fill(4)(words(40))
+    val texts: Seq[Option[String]] = bases.indices.flatMap { b =>
+      val near = bases(b) + " tail"
+      (0 until sizes(b)).map(i => Some(spelling(bases(b), i))) ++
+        (0 until sizes((b + 1) % 4)).map(i => Some(spelling(near, i)))
+    } ++ Seq.fill(5)(Some(words(40))) ++
+      Seq(Some("short doc"), Some("short doc"), Some(""), None)
+    val ids = rnd.shuffle(texts.indices.map(_.toLong * 5 + 3))
+    val docs = spark.createDataFrame(ids.zip(texts)).toDF("doc_id", "text")
+
+    def rows(df: DataFrame, persisted: Boolean) =
+      try (df.schema.map(f => (f.name, f.dataType)), df.collect().map(_.toSeq).toSeq.sortBy(_.toString))
+      finally if (persisted) df.unpersist()
+    def same(got: DataFrame, ref: DataFrame, metric: String) = {
+      val (g, r) = (rows(got, persisted = true), rows(ref, persisted = false))
+      assert(g == r, s"$metric: missing=${r._2.diff(g._2)} extra=${g._2.diff(r._2)}")
+      // not vacuous: exact pairs within groups and near pairs across them
+      val values = r._2.map(_(r._1.indexWhere(_._1 == metric))).toSet
+      assert(values.size >= 2, s"$metric: $values")
+    }
+
+    same(DedupOps.minhashNearDups(docs, "doc_id", "text", threshold = 0.8),
+      NearDupReference.minhashNearDups(docs, "doc_id", "text", 0.8, 3, 64, 16), "jaccard")
+    same(DedupOps.simhashNearDups(docs, "doc_id", "text", maxHamming = 16),
+      NearDupReference.simhashNearDups(docs, "doc_id", "text", 16), "hamming")
+
+    // signatures in exact groups of 1, 2, 3 and 6 ids, and near ones a few bits off
+    val sigBases = Seq.fill(4)(rnd.nextLong())
+    val sigs = spark.createDataFrame(rnd.shuffle(sigBases.indices.flatMap { b =>
+        Seq.fill(sizes(b))(sigBases(b)) ++ Seq.fill(sizes((b + 1) % 4))(sigBases(b) ^ (5L << (b * 16 + 3)))
+      } ++ Seq.fill(6)(rnd.nextLong())).zipWithIndex.map { case (s, i) => (i * 3, s) })
+      .toDF("id", "sig")
+    same(DedupOps.hammingNearDups(sigs, "id", "sig"),
+      NearDupReference.hammingNearDups(sigs, "id", "sig", 3, 4), "hamming")
   }
 
   test("dedupCorpus edge list: components equal those of the expanded minhash pairs") {
@@ -611,34 +679,6 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(hashed == spans)
     intercept[IllegalArgumentException] {
       DedupOps.duplicateSpans(df, "doc_id", "text", k = 3, minCount = 1)
-    }
-  }
-
-  test("duplicateSpans skewSafe: identical detections and strips under both plans") {
-    // the skew-safe (agg+join-back) plan must be a pure plan change: same
-    // spans, same stripped text, for both key representations
-    val df = spark.createDataFrame(Seq(
-      (1L, "a b p q r s t u v c d"),
-      (2L, "x p q r s t u v y z w"),
-      (3L, "m n o e f m n o e f g"),
-      (4L, "one two three four five six seven eight"),
-      (5L, "s1 s2 s3 gapa gapb gapc gapd gape t1 t2 t3"),
-      (6L, "s1 s2 s3 xgapa xgapb xgapc xgapd xgape t1 t2 t3"))).toDF("doc_id", "text")
-    for (h <- Seq(false, true)) {
-      val spansDefault = DedupOps.duplicateSpans(df, "doc_id", "text", k = 3,
-          minCount = 2, hashed = h, skewSafe = false)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-      val spansSafe = DedupOps.duplicateSpans(df, "doc_id", "text", k = 3,
-          minCount = 2, hashed = h, skewSafe = true)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-      assert(spansSafe == spansDefault, s"hashed=$h")
-      val stripDefault = DedupOps.stripDuplicateSpans(df, "doc_id", "text", k = 3,
-          minCount = 2, hashed = h, skewSafe = false)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3))).toSet
-      val stripSafe = DedupOps.stripDuplicateSpans(df, "doc_id", "text", k = 3,
-          minCount = 2, hashed = h, skewSafe = true)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3))).toSet
-      assert(stripSafe == stripDefault, s"hashed=$h")
     }
   }
 

@@ -76,6 +76,9 @@ class RetrySpec extends AnyFunSuite with SparkSuite {
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.sparkContext.setLogLevel("OFF") // the injected failures log as task errors
+    // the bucket guard's WARN lines, which a case compares across runs
+    org.apache.logging.log4j.core.config.Configurator.setLevel("graft.dedup",
+      org.apache.logging.log4j.Level.WARN)
     spark.sparkContext.addSparkListener(InjectedFailures.listener)
   }
 
@@ -130,6 +133,43 @@ class RetrySpec extends AnyFunSuite with SparkSuite {
       assert(fired > 0, s"$kind, artifactDir $artifacts: nothing injected")
       assert(got == clean, s"$kind, artifactDir $artifacts: " +
         s"missing=${clean -- got} extra=${got -- clean}")
+    }
+  }
+
+  test("minhashNearDups and simhashNearDups: pairs and the bucket guard's WARN survive a retried task") {
+    // 40 near-identical texts (one differing word) that crowd shared
+    // buckets past the cap, beside near copies, exact copies and singletons
+    val rnd = new scala.util.Random(9)
+    def text() = Vector.fill(30)(s"w${rnd.nextInt(2000)}").mkString(" ")
+    val bases = Vector.fill(30)(text())
+    val docs = spark.createDataFrame(
+        bases.indices.map(i => (i.toLong, bases(i))) ++
+          (0 until 10).map(i => (100L + i, bases(i) + " extra")) ++
+          (0 until 10).map(i => (200L + i, bases(i))) ++
+          (0 until 40).map(i => (500L + i, s"the same boilerplate sentence repeated here again $i")))
+      .toDF("doc_id", "text")
+    def run(call: () => DataFrame): (Set[Seq[Any]], Seq[String]) = {
+      var pairs = Set.empty[Seq[Any]]
+      val warned = graft.LogCapture.messages("graft.dedup") {
+        val result = call()
+        try pairs = result.collect().map(_.toSeq).toSet finally result.unpersist()
+      }.filter(_.contains("bucket guard"))
+      (pairs, warned)
+    }
+    for ((name, call) <- Seq[(String, () => DataFrame)](
+        "minhashNearDups" -> (() =>
+          DedupOps.minhashNearDups(docs, "doc_id", "text", threshold = 0.7, maxBucket = 5)),
+        "simhashNearDups" -> (() =>
+          DedupOps.simhashNearDups(docs, "doc_id", "text", maxBucket = 5)))) {
+      val clean = run(call)
+      assert(clean._1.nonEmpty && clean._2.size == 1, s"$name: $clean")
+      for (kind <- kinds) {
+        val (got, fired) = InjectedFailures.during(kind)(run(call))
+        assert(fired > 0, s"$name, $kind: nothing injected")
+        assert(got._2 == clean._2, s"$name, $kind")
+        assert(got._1 == clean._1, s"$name, $kind: " +
+          s"missing=${clean._1 -- got._1} extra=${got._1 -- clean._1}")
+      }
     }
   }
 

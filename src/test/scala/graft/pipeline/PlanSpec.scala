@@ -252,41 +252,75 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     } finally release()
   }
 
-  test("dedupCorpus edge list computes the signature aggregate once: its readers reuse the exchange") {
-    import graft.ops.DedupOps
+  /** The shuffle exchanges of `plan` that write the signature aggregate
+    * grouped on `keys` (its map side signs every row), and the reused
+    * exchanges that read one of them.
+    */
+  private def sigAggExchanges(plan: SparkPlan, keys: Seq[String]): (Seq[SparkPlan], Seq[SparkPlan]) = {
     import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
     import org.apache.spark.sql.execution.adaptive.QueryStageExec
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    def isSigAgg(p: SparkPlan) = p match {
+      case a: HashAggregateExec =>
+        a.groupingExpressions.map(_.name) == keys && a.aggregateExpressions.forall(_.mode == Partial)
+      case _ => false
+    }
+    // the nodes of one stage: no descent past an exchange or a stage
+    def inStage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: Exchange | _: QueryStageExec => Nil
+      case other => other.children.flatMap(inStage)
+    })
+    def writesSig(e: SparkPlan) = e.children.flatMap(inStage).exists(isSigAgg)
+    val nodes = collectPlan(plan)
+    (nodes.collect { case s: ShuffleExchangeExec if writesSig(s) => s },
+      nodes.collect { case r: ReusedExchangeExec if writesSig(r.child) => r })
+  }
+
+  test("dedupCorpus edge list computes the signature aggregate once: its readers reuse the exchange") {
+    import graft.ops.DedupOps
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val (edges, release) = DedupOps.minhashClusterEdges(docs, "doc_id", "text",
       threshold = 0.5, k = 3, numHashes = 64, bands = 16, maxBucket = Int.MaxValue)
     try {
       edges.collect() // let AQE finalize, with its stage reuse
       val plan = edges.queryExecution.executedPlan
-      // the map side of the per-fingerprint aggregate, which computes the
-      // signature of every row
-      def isSigAgg(p: SparkPlan) = p match {
-        case a: HashAggregateExec =>
-          a.groupingExpressions.map(_.name) == Seq("fp", "bh", "nsh") &&
-            a.aggregateExpressions.forall(_.mode == Partial)
-        case _ => false
-      }
-      // the nodes of one stage: no descent past an exchange or a stage
-      def inStage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-        case _: Exchange | _: QueryStageExec => Nil
-        case other => other.children.flatMap(inStage)
-      })
-      def writesSig(e: SparkPlan) = e.children.flatMap(inStage).exists(isSigAgg)
-      val nodes = collectPlan(plan)
-      val sigExchanges = nodes.collect { case s: ShuffleExchangeExec if writesSig(s) => s }
-      val reused = nodes.collect { case r: ReusedExchangeExec if writesSig(r.child) => r }
+      val (sigExchanges, reused) = sigAggExchanges(plan, Seq("fp", "bh", "nsh"))
       // a branch that plans the aggregate's input differently (a filter
       // pushed below it) gets an exchange of its own and signs every row again
       assert(sigExchanges.size == 1,
         s"${sigExchanges.size} signature-aggregate exchanges, want 1:\n$plan")
       assert(reused.nonEmpty, s"no reader reuses the signature-aggregate exchange:\n$plan")
     } finally release()
+  }
+
+  test("minhashNearDups and simhashNearDups write their signature-aggregate exchange once") {
+    import graft.ops.DedupOps
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.functions.col
+    // with exact copies, so that no branch of the pair list is empty (AQE
+    // would drop an empty branch, and its exchange, from the final plan)
+    val corpus = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val docs = corpus.union(corpus.filter(col("doc_id") % 10 === 0)
+      .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+    for ((name, pairs, keys) <- Seq(
+        ("minhashNearDups", () => DedupOps.minhashNearDups(docs, "doc_id", "text", threshold = 0.5),
+          Seq("fp", "bh", "nsh")),
+        ("simhashNearDups", () => DedupOps.simhashNearDups(docs, "doc_id", "text"),
+          Seq("fp", "sim")))) {
+      val result = pairs()
+      try {
+        // the returned frame is materialized: its plan is the one that filled the cache
+        val plan = collectPlan(result.queryExecution.executedPlan)
+          .collectFirst { case s: InMemoryTableScanExec => s.relation.cachedPlan }.get
+        val (sigExchanges, reused) = sigAggExchanges(plan, keys)
+        // one reader with a column the others prune (a group count) plans an
+        // aggregate of its own, and signs every row a second time
+        assert(sigExchanges.size == 1,
+          s"$name: ${sigExchanges.size} signature-aggregate exchanges, want 1:\n$plan")
+        assert(reused.nonEmpty, s"$name: no reader reuses the signature-aggregate exchange:\n$plan")
+      } finally result.unpersist()
+    }
   }
 
   test("dedupCorpus hands CC a checkpointed leaf: its rounds never reach the corpus") {
@@ -349,32 +383,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
         assert(attr.name != "stripped_text" && !attr.name.contains("text"),
           s"unexpected text-like string column '${attr.name}' crosses an exchange")
     }
-  }
-
-  test("skew-safe duplicateSpans plans no window over the shingle key") {
-    import graft.ops.DedupOps
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    def windowsOverW(skewSafe: Boolean): Seq[LWindow] =
-      DedupOps.duplicateSpans(docs, "doc_id", "text", k = 5, skewSafe = skewSafe)
-        .queryExecution.optimizedPlan.collect {
-          case w: LWindow if w.partitionSpec.exists(_.references.exists(_.name == "w")) => w
-        }
-    // the default single-pass plan DOES carry the hot-key window (so this
-    // assertion is not vacuous) ...
-    assert(windowsOverW(skewSafe = false).nonEmpty,
-      "expected the default plan's count() OVER (PARTITION BY w)")
-    // ... and the skew-safe plan must not: its per-window count is a
-    // two-level hash aggregate (map-side combine collapses the hot key)
-    // plus an AQE-splittable join-back — no reducer ever materializes a
-    // window key's full occurrence list
-    assert(windowsOverW(skewSafe = true).isEmpty,
-      "skew-safe duplicateSpans must not plan a window over w")
-    // the join-back + partial-agg shape is actually planned
-    val s = DedupOps.duplicateSpans(docs, "doc_id", "text", k = 5, skewSafe = true)
-      .queryExecution.executedPlan.toString()
-    assert(s.contains("partial_count") || s.contains("HashAggregate"),
-      s"expected a hash-aggregate count stage:\n$s")
   }
 
   test("MinHash signature passes run native expressions: no Scala UDF, no interpreted transform") {
