@@ -23,15 +23,18 @@ import org.apache.spark.sql.SparkSession
   * Behavior: resumable bucket-committed write (re-running after any
   * partial failure completes exactly the missing buckets; each `bucket=N`
   * dir follows [[graft.ops.Commit]]'s marker protocol), optional
-  * per-partition lineage table and span-lineage table. Flag parsing, the
+  * per-partition lineage table (the pass's
+  * [[graft.pipeline.PartitionStat]] records, written from the driver: it
+  * sums to the line's `rows`) and span-lineage table. Flag parsing, the
   * session and the JSON line come from [[Launch]]; the line's fields:
   * rows, parse errors, wall seconds, turns/sec, completed buckets, out.
   * Master/executors come from spark-submit — the job itself sets only
   * job-shape configuration.
   */
 object ExtractMain {
-  /** `wallSec` times the extract phase only: the optional lineage and span
-    * sinks are separate full passes, outside extraction throughput.
+  /** `wallSec` times the extract phase: the bucket listing and repair, and
+    * when a bucket is pending the input's schema resolution and the extract
+    * write. The optional span sink is a separate full pass, outside it.
     */
   final case class Stats(rows: Long, parseErrors: Long, wallSec: Double,
                          completedBuckets: Int, out: String)
@@ -52,18 +55,20 @@ object ExtractMain {
     // the bucket count is the pmod divisor of every turn's bucket
     require(buckets > 0, s"--buckets must be positive, got $buckets")
 
-    val turns = TranscriptSource.read(spark, TranscriptSource.Config(
+    // resolving a parquet input's schema is a Spark job, so the input is
+    // read only if a bucket is pending
+    lazy val turns = TranscriptSource.read(spark, TranscriptSource.Config(
       format = a.getOrElse("format", "parquet"),
       location = in,
       dateFrom = a.get("date-from"),
       dateTo = a.get("date-to")))
 
-    val metrics = ExtractJob.newMetrics(spark)
+    val stats = ExtractJob.newStats(spark)
     val t0 = System.nanoTime()
     val done = a.getOrElse("mode", "extract").toLowerCase match {
       case "extract" =>
         ExtractJob.runResumable(spark, turns, out, buckets = buckets,
-          cfg = ExtractJob.defaultCfg(markup), metrics = Some(metrics), markup = markup)
+          cfg = ExtractJob.defaultCfg(markup), stats = Some(stats), markup = markup)
       case "main-content" =>
         // the lineage/span sinks describe the strip/render pipeline, not
         // the main-content output — silently writing them here would emit
@@ -76,19 +81,21 @@ object ExtractMain {
         require(a.get("markup").isEmpty,
           "--markup applies to --mode extract only (main-content is HTML-only)")
         ExtractJob.runResumableMainContent(spark, turns, out, buckets = buckets,
-          metrics = Some(metrics))
+          stats = Some(stats))
       case other => sys.error(s"--mode must be extract or main-content, got '$other'")
     }
     val sec = (System.nanoTime() - t0) / 1e9
 
+    val records = ExtractJob.records(stats)
     a.get("lineage").foreach { dir =>
-      ExtractJob.lineage(turns, markup = markup).write.mode("overwrite").parquet(dir)
+      import spark.implicits._
+      spark.createDataset(records).coalesce(1).write.mode("overwrite").parquet(dir)
     }
     a.get("spans").foreach { dir =>
       SpanLineage.spanTable(turns, markup = markup)
         .write.mode("overwrite").parquet(dir)
     }
-    Stats(metrics.rows.value, metrics.errors.value, sec, done.size, out)
+    Stats(records.map(_.rows).sum, records.map(_.parse_errors).sum, sec, done.size, out)
   }
 
   def fields(s: Stats, launchSec: Double): Seq[(String, Any)] = Seq(

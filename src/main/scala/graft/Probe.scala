@@ -22,9 +22,9 @@ import scala.jdk.CollectionConverters._
   *    its job count and the generated classes it compiled (codegen-cache
   *    misses) with their Janino time, then one line per Spark job: its
   *    duration, the driver-side gap before it and its call site. Runs each
-  *    query SPARK_GRAFT_PROBE_RUNS times (default 1; a second run is
-  *    JIT-warm, and compiles nothing if the query's classes fit Spark's
-  *    codegen cache).
+  *    query SPARK_GRAFT_PROBE_RUNS times over an emptied cache (default 1;
+  *    a second run is JIT-warm, and compiles nothing if the query's classes
+  *    fit Spark's codegen cache).
   *  - `plans [outDir suffix] q…`: the formatted explain output of each
   *    query, on stdout or in `<outDir>/<q>_<suffix>.txt`.
   *  - `profile [n] [cores]`: samples the stack of every RUNNABLE
@@ -78,6 +78,8 @@ object Probe {
       }
     })
     for (name <- names; run <- 1 to runs) {
+      // else a query that persists and never releases reads run 1's cache
+      spark.catalog.clearCache()
       seen.synchronized(seen.clear())
       val compiles0 = compiles.getCount
       val janinoNs0 = CodeGenerator.compileTime

@@ -3,19 +3,22 @@ package graft.pipeline
 import graft.core._
 import graft.ops.Commit
 import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.util.CollectionAccumulator
 
-/** The flagship extraction pipeline: scan transcripts → (optional salted
-  * repartition) → `mapPartitions` parse+strip+escape+render → ordered,
-  * resumable write with per-partition lineage and global metrics.
+import scala.jdk.CollectionConverters._
+
+/** The flagship extraction pipeline: scan transcripts → `mapPartitions`
+  * parse+strip+escape+render → ordered, resumable write, with one
+  * [[PartitionStat]] record per partition taken from the pass that runs.
   *
   * Scale design notes:
   *  - Parse/transform is strictly per-turn, so the hot stage runs on
-  *    natural input splits with NO shuffle at all by default; an explicit
-  *    salted repartition is available for pathologically skewed file splits
-  *    (a single conversation never has to be colocated for extraction).
+  *    natural input splits with NO shuffle at all (a single conversation
+  *    never has to be colocated for extraction); skew-salted conversation
+  *    assembly lives in `ConvAssembly.assembleSalted`.
   *  - One parser/renderer "instance" per partition: the core is
   *    allocation-light (offset-only AST on the shared char[]) and carries
   *    no per-call state, so mapPartitions batches avoid per-row object
@@ -75,23 +78,33 @@ object ExtractJob {
     }
   }
 
-  /** Metrics handle: global accumulators + a lineage Dataset of
-    * per-partition stats.
+  /** The per-partition records of one extract pass ([[newStats]]; give
+    * each pass its own). A re-executed partition adds its record again;
+    * [[records]] keeps one per `partition_id`, so its sums stay exact under
+    * task retry.
     */
-  final case class Metrics(rows: LongAccumulator, errors: LongAccumulator,
-                           nanos: LongAccumulator)
+  type PartitionStats = CollectionAccumulator[PartitionStat]
 
-  def newMetrics(spark: SparkSession): Metrics = Metrics(
-    spark.sparkContext.longAccumulator("graft.extract.rows"),
-    spark.sparkContext.longAccumulator("graft.extract.parseErrors"),
-    spark.sparkContext.longAccumulator("graft.extract.nanos"))
+  def newStats(spark: SparkSession): PartitionStats = {
+    // unnamed: the scheduler copies a named accumulator's whole value into
+    // every task-end event (UI, event log), O(partitions²) records a pass
+    val acc = new CollectionAccumulator[PartitionStat]
+    spark.sparkContext.register(acc)
+    acc
+  }
+
+  /** One record per partition, in `partition_id` order. */
+  def records(stats: PartitionStats): Seq[PartitionStat] =
+    stats.value.asScala.groupMapReduce(_.partition_id)(identity)((_, last) => last)
+      .values.toSeq.sortBy(_.partition_id)
 
   /** The extraction stage: typed Dataset map over partitions. `cfg = null`
     * (the default) resolves to [[defaultCfg]] for the given markup dialect.
+    * With `stats`, each partition adds its record when its iterator ends.
     */
   def extract(turns: Dataset[Turn],
               cfg: Map[String, TagAttributes] = null,
-              metrics: Option[Metrics] = None,
+              stats: Option[PartitionStats] = None,
               markup: Markup = BBCode): Dataset[TurnOut] = {
     val spark = turns.sparkSession
     import spark.implicits._
@@ -112,37 +125,13 @@ object ExtractJob {
           val h = out.hasNext
           if (!h && !reported) {
             reported = true
-            metrics.foreach { m =>
-              m.rows.add(n); m.errors.add(errs); m.nanos.add(System.nanoTime() - t0)
-            }
+            stats.foreach(_.add(PartitionStat(TaskContext.getPartitionId(), n, errs,
+              System.nanoTime() - t0)))
           }
           h
         }
         def next(): TurnOut = out.next()
       }
-    }
-  }
-
-  /** Per-partition lineage rows (for a lineage sink table). `cfg = null`
-    * resolves per markup dialect, as in [[extract]].
-    */
-  def lineage(turns: Dataset[Turn],
-              cfg: Map[String, TagAttributes] = null,
-              markup: Markup = BBCode): Dataset[PartitionStat] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val resolvedCfg = if (cfg != null) cfg else defaultCfg(markup)
-    turns.mapPartitions { iter =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val t0 = System.nanoTime()
-      var n = 0L
-      var errs = 0L
-      while (iter.hasNext) {
-        val r = extractTurn(iter.next(), resolvedCfg, markup)
-        n += 1
-        if (r.parse_error != null) errs += 1
-      }
-      Iterator.single(PartitionStat(pid, n, errs, System.nanoTime() - t0))
     }
   }
 
@@ -167,26 +156,27 @@ object ExtractJob {
     * dirs, write the rest partitioned by bucket, then mark them committed.
     * Re-running after any partial failure completes exactly the missing
     * work; a bucket is either fully present and marked, or rewritten.
+    * `turns` is evaluated only when some bucket is pending.
     */
-  def runResumable(spark: SparkSession, turns: Dataset[Turn], outDir: String,
+  def runResumable(spark: SparkSession, turns: => Dataset[Turn], outDir: String,
                    buckets: Int = 32,
                    cfg: Map[String, TagAttributes] = null,
-                   metrics: Option[Metrics] = None,
+                   stats: Option[PartitionStats] = None,
                    markup: Markup = BBCode): Set[Int] =
     resumable(spark, turns, outDir, buckets) { pending =>
-      extract(pending, cfg, metrics, markup).toDF()
+      extract(pending, cfg, stats, markup).toDF()
     }
 
   /** Main-content variant of the resumable run (`--mode main-content`):
     * identical bucket-commit/repair machinery, but the per-turn stage is
     * the DOM-heuristic main-content extraction over HTML turns.
     */
-  def runResumableMainContent(spark: SparkSession, turns: Dataset[Turn], outDir: String,
+  def runResumableMainContent(spark: SparkSession, turns: => Dataset[Turn], outDir: String,
                               buckets: Int = 32,
                               cfg: Map[String, TagAttributes] = null,
-                              metrics: Option[Metrics] = None): Set[Int] =
+                              stats: Option[PartitionStats] = None): Set[Int] =
     resumable(spark, turns, outDir, buckets) { pending =>
-      extractMainContent(pending, cfg, metrics).toDF()
+      extractMainContent(pending, cfg, stats).toDF()
     }
 
   /** Core per-turn main-content transform — pure; a failure becomes the
@@ -204,16 +194,17 @@ object ExtractJob {
     }
 
   /** Main-content extraction stage: per-turn `ContentExtract.mainContent`
-    * inside `mapPartitions` — same zero-shuffle hot-stage shape and metrics
-    * plumbing as [[extract]].
+    * inside `mapPartitions` — same zero-shuffle hot-stage shape and
+    * per-partition record as [[extract]].
     */
   def extractMainContent(turns: Dataset[Turn],
                          cfg: Map[String, TagAttributes] = null,
-                         metrics: Option[Metrics] = None): Dataset[MainContentOut] = {
+                         stats: Option[PartitionStats] = None): Dataset[MainContentOut] = {
     val spark = turns.sparkSession
     import spark.implicits._
     val resolvedCfg = if (cfg != null) cfg else defaultCfg(Html)
     turns.mapPartitions { iter =>
+      val t0 = System.nanoTime()
       var n = 0L
       var errs = 0L
       val out = iter.map { t =>
@@ -228,7 +219,8 @@ object ExtractJob {
           val h = out.hasNext
           if (!h && !reported) {
             reported = true
-            metrics.foreach { m => m.rows.add(n); m.errors.add(errs) }
+            stats.foreach(_.add(PartitionStat(TaskContext.getPartitionId(), n, errs,
+              System.nanoTime() - t0)))
           }
           h
         }
@@ -241,12 +233,13 @@ object ExtractJob {
     * unmarked partials, run `stage` over the pending turns only, write
     * partitioned by bucket, mark new buckets committed. When every bucket
     * in `0 until buckets` is already committed, it returns them without
-    * reading the input: a relaunch over complete output starts no Spark
-    * job. A bucket no conversation hashes into gets no directory and so
-    * is never committed; an output with such a bucket is rescanned on
-    * each relaunch (and writes nothing).
+    * evaluating `turns` (by-name, so not even the input's schema is read):
+    * a relaunch over complete output starts no Spark job. A bucket no
+    * conversation hashes into gets no directory and so is never committed;
+    * an output with such a bucket is rescanned on each relaunch (and
+    * writes nothing).
     */
-  private def resumable(spark: SparkSession, turns: Dataset[Turn], outDir: String,
+  private def resumable(spark: SparkSession, turns: => Dataset[Turn], outDir: String,
                         buckets: Int)(stage: Dataset[Turn] => org.apache.spark.sql.DataFrame): Set[Int] = {
     import spark.implicits._
     val path = new Path(outDir)

@@ -126,20 +126,8 @@ object SpanLineage {
     */
   def renderSpanTable(turns: Dataset[Turn],
                       cfg: Map[String, TagAttributes] = null): Dataset[SpanRow] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
     val resolvedCfg = if (cfg != null) cfg else ExtractJob.defaultCfg(ExtractJob.BBCode)
-    turns.mapPartitions { iter =>
-      iter.flatMap { t =>
-        if (t.text == null) Iterator.empty
-        else {
-          val (_, spans) = renderSpans(t.text, resolvedCfg)
-          spans.iterator.map { case (nb, ne, ob, oe) =>
-            SpanRow(t.conv_id, t.turn_idx, nb, ne, ob, oe)
-          }
-        }
-      }
-    }
+    spanRows(turns)(renderSpans(_, resolvedCfg)._2)
   }
 
   /** The lineage table for a transcript Dataset: one row per text node per
@@ -148,17 +136,20 @@ object SpanLineage {
   def spanTable(turns: Dataset[Turn],
                 cfg: Map[String, TagAttributes] = null,
                 markup: ExtractJob.Markup = ExtractJob.BBCode): Dataset[SpanRow] = {
+    val resolvedCfg = if (cfg != null) cfg else ExtractJob.defaultCfg(markup)
+    spanRows(turns)(stripSpans(_, resolvedCfg, markup)._2)
+  }
+
+  /** One row per span of each non-null turn text, per partition, no shuffle. */
+  private def spanRows(turns: Dataset[Turn])(
+      spans: String => Seq[(Int, Int, Int, Int)]): Dataset[SpanRow] = {
     val spark = turns.sparkSession
     import spark.implicits._
-    val resolvedCfg = if (cfg != null) cfg else ExtractJob.defaultCfg(markup)
     turns.mapPartitions { iter =>
       iter.flatMap { t =>
         if (t.text == null) Iterator.empty
-        else {
-          val (_, spans) = stripSpans(t.text, resolvedCfg, markup)
-          spans.iterator.map { case (nb, ne, ob, oe) =>
-            SpanRow(t.conv_id, t.turn_idx, nb, ne, ob, oe)
-          }
+        else spans(t.text).iterator.map { case (nb, ne, ob, oe) =>
+          SpanRow(t.conv_id, t.turn_idx, nb, ne, ob, oe)
         }
       }
     }

@@ -28,6 +28,26 @@ class ExtractMainSpec extends AnyFunSuite with SparkSuite {
     assert(spark.read.parquet(out).count() == 2000)
   }
 
+  test("--lineage writes the pass's records; a relaunch writes none and reads no input") {
+    val out = freshOut()
+    val lineage = out + "_lineage"
+    val args = Map("in" -> in, "out" -> out, "buckets" -> "8", "lineage" -> lineage)
+    def records() = spark.read.parquet(lineage).collect()
+      .map(r => (r.getAs[Int]("partition_id"), r.getAs[Long]("rows"), r.getAs[Long]("parse_errors")))
+    val s1 = ExtractMain.run(spark, args)
+    val fresh = records()
+    assert(fresh.map(_._1).sorted.toSeq == (0 until spark.read.parquet(in).rdd.getNumPartitions))
+    assert(s1.rows == 2000 && fresh.map(_._2).sum == s1.rows)
+    assert(fresh.map(_._3).sum == s1.parseErrors)
+    var s2: ExtractMain.Stats = null
+    val jobs = jobsOf { s2 = ExtractMain.run(spark, args) }
+    val relaunch = records()
+    assert(s2.rows == 0 && s2.completedBuckets == 8)
+    assert(relaunch.map(_._2).sum == 0L, relaunch.toSeq)
+    assert(jobs == 1) // the lineage write; the input is not even resolved
+    assert(jobsOf(ExtractMain.run(spark, args - "lineage")) == 0)
+  }
+
   test("a typo'd flag fails before any output exists") {
     val out = freshOut()
     val e = intercept[IllegalArgumentException](

@@ -194,4 +194,22 @@ class RetrySpec extends AnyFunSuite with SparkSuite {
         s"missing=${(clean._1 -- rows).size} extra=${(rows -- clean._1).size}")
     }
   }
+
+  test("ExtractJob.runResumable: per-partition records under a retried task equal a clean run's") {
+    val turns = TranscriptGen.turns(spark, 2000, seed = 42, partitions = 4)
+      .repartition(4, col("conv_id"))
+    def run() = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_retry_stats").toString
+      val stats = ExtractJob.newStats(spark)
+      ExtractJob.runResumable(spark, turns, dir, buckets = 8, stats = Some(stats))
+      ExtractJob.records(stats).map(r => (r.partition_id, r.rows, r.parse_errors))
+    }
+    val clean = run()
+    assert(clean.map(_._1) == (0 until 4) && clean.map(_._2).sum == 2000, clean)
+    for (kind <- kinds) {
+      val (got, fired) = InjectedFailures.during(kind)(run())
+      assert(fired > 0, s"$kind: nothing injected")
+      assert(got == clean, s"$kind: $got")
+    }
+  }
 }

@@ -55,20 +55,27 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("metrics accumulators count rows and errors") {
-    val m = ExtractJob.newMetrics(spark)
+    val stats = ExtractJob.newStats(spark)
     val ds = ExtractJob.extract(TranscriptGen.turns(spark, 1000, seed = 42, partitions = 4),
-      metrics = Some(m))
+      stats = Some(stats))
     ds.count()
-    assert(m.rows.value == 1000L)
-    assert(m.errors.value == 0L)
-    assert(m.nanos.value > 0L)
+    ds.count() // the same partitions again: each replaces its record
+    val recs = ExtractJob.records(stats)
+    assert(recs.map(_.rows).sum == 1000L)
+    assert(recs.map(_.parse_errors).sum == 0L)
+    assert(recs.forall(r => r.rows > 0 && r.nanos > 0L), recs)
+    // a named one would copy all records into every task-end event
+    assert(stats.name.isEmpty)
   }
 
   test("per-partition lineage rows cover all input") {
-    val stats = ExtractJob.lineage(TranscriptGen.turns(spark, 1000, seed = 42, partitions = 8)).collect()
-    assert(stats.length == 8)
-    assert(stats.map(_.rows).sum == 1000L)
-    assert(stats.map(_.parse_errors).sum == 0L)
+    val stats = ExtractJob.newStats(spark)
+    ExtractJob.extract(TranscriptGen.turns(spark, 1000, seed = 42, partitions = 8),
+      stats = Some(stats)).count()
+    val recs = ExtractJob.records(stats)
+    assert(recs.map(_.partition_id) == (0 until 8))
+    assert(recs.map(_.rows).sum == 1000L)
+    assert(recs.map(_.parse_errors).sum == 0L)
   }
 
   test("resumable run: interrupted output completes idempotently") {
