@@ -1,7 +1,9 @@
 package graft
 
+import graft.ops.Commit
 import graft.pipeline.{ExtractJob, SpanLineage}
 import graft.sources.TranscriptSource
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Production launch entry for the extraction pipeline, run via
@@ -25,7 +27,8 @@ import org.apache.spark.sql.SparkSession
   * dir follows [[graft.ops.Commit]]'s marker protocol), optional
   * per-partition lineage table (the pass's
   * [[graft.pipeline.PartitionStat]] records, written from the driver: it
-  * sums to the line's `rows`) and span-lineage table. Flag parsing, the
+  * sums to the line's `rows`) and span-lineage table (written once: a
+  * committed `--spans` dir is not rewritten). Flag parsing, the
   * session and the JSON line come from [[Launch]]; the line's fields:
   * rows, parse errors, wall seconds, turns/sec, completed buckets, out.
   * Master/executors come from spark-submit — the job itself sets only
@@ -34,7 +37,8 @@ import org.apache.spark.sql.SparkSession
 object ExtractMain {
   /** `wallSec` times the extract phase: the bucket listing and repair, and
     * when a bucket is pending the input's schema resolution and the extract
-    * write. The optional span sink is a separate full pass, outside it.
+    * write. The optional span sink is a separate full pass, outside it; a
+    * relaunch over committed spans skips it.
     */
   final case class Stats(rows: Long, parseErrors: Long, wallSec: Double,
                          completedBuckets: Int, out: String)
@@ -92,8 +96,11 @@ object ExtractMain {
       spark.createDataset(records).coalesce(1).write.mode("overwrite").parquet(dir)
     }
     a.get("spans").foreach { dir =>
-      SpanLineage.spanTable(turns, markup = markup)
-        .write.mode("overwrite").parquet(dir)
+      val p = new Path(dir)
+      Commit.once(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p) {
+        SpanLineage.spanTable(turns, markup = markup)
+          .write.mode("overwrite").parquet(dir)
+      }
     }
     Stats(records.map(_.rows).sum, records.map(_.parse_errors).sum, sec, done.size, out)
   }

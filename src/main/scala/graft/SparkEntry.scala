@@ -1,6 +1,5 @@
 package graft
 
-import graft.core.{TagAttributes => CoreTagAttributes}
 import graft.functions.{ArrayDotExpr, ArrayNorm2Expr, BBCodeRenderExpr, BBCodeStripExpr, HtmlStripExpr}
 import graft.ops.{BloomOps, ClassifyOps, CurateOps, DedupOps, JoinOps, LmOps, MediaOps, PackOps, PdfOps, RetrievalOps, ShuffleOps, SimOps, TextOps, WebOps}
 import graft.pipeline.{ConvAssembly, ConvOps, ExtractJob, SpanLineage, TranscriptGen, Turn, Udfs}
@@ -115,19 +114,31 @@ object SparkEntry {
       lit("2024-01-01 00:00:00").cast("timestamp").as("ts")
     ).as[Turn](Encoders.product[Turn])
 
-  /** Fixed scratch dir for queries that exercise on-disk index round
-    * trips: one stable path per query name, deleted up front — repeated
-    * verify/bench ladder runs overwrite instead of accumulating a fresh
-    * corpus-sized index directory in the tmpdir per invocation.
+  private def purge(f: java.io.File): Unit = {
+    val kids = f.listFiles()
+    if (kids != null) kids.foreach(purge)
+    f.delete(): Unit
+  }
+
+  /** This JVM's own temp root for the on-disk index queries, made on
+    * first use and deleted by a shutdown hook: two JVMs on one host
+    * (e.g. two `graft.Verify` runs) never share a scratch path. A JVM that
+    * is killed without running its hooks (SIGKILL, an OOM kill) leaves its
+    * `graft_scratch_*` dir in the tmpdir; nothing reads it again.
+    */
+  private lazy val scratchRoot: java.io.File = {
+    val d = java.nio.file.Files.createTempDirectory("graft_scratch_").toFile
+    sys.addShutdownHook(purge(d))
+    d
+  }
+
+  /** Scratch dir for queries that exercise on-disk index round trips: one
+    * path per query name under [[scratchRoot]], deleted up front — a
+    * repeated build in one JVM (bench ladder runs) overwrites instead of
+    * accumulating a fresh corpus-sized index directory per invocation.
     */
   private def scratchDir(name: String): String = {
-    val d = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_scratch_$name")
-    def purge(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(purge)
-      f.delete(): Unit
-    }
+    val d = new java.io.File(scratchRoot, name)
     purge(d)
     d.getAbsolutePath
   }
@@ -793,12 +804,12 @@ object SparkEntry {
     Q("q_contamination_spans", (s, dir) => {
       // decontamination audit evidence: every (train doc, token position)
       // whose 5-gram appears in the benchmark slice — the per-hit review
-      // table behind q_contamination's counts (string-keyed so the oracle
-      // is exact; positions are integer-exact shingle-index math)
+      // table behind q_contamination's counts (positions are integer-exact
+      // shingle-index math)
       val d = docsHeavy(s, dir)
       DedupOps.contaminationSpans(
           d.filter(col("doc_id") % 5 =!= 0), d.filter(col("doc_id") % 5 === 0),
-          "doc_id", "text", k = 5, hashed = false)
+          "doc_id", "text", k = 5)
         .select(col("id").as("doc_id"), col("pos"), col("sh").as("shingle"))
         .orderBy("doc_id", "pos")
     }, Some(
@@ -823,10 +834,9 @@ object SparkEntry {
       // maximal contiguous regions whose every 5-gram window appears >= 2
       // times corpus-wide (the planted near-dup pairs make their shared
       // text light up end to end; organic word-soup collisions are flagged
-      // identically by both engines — no recall gap, same window algebra).
-      // String-keyed so the oracle is exact; hashed=true is the 100TB form
+      // identically by both engines — no recall gap, same window algebra)
       DedupOps.duplicateSpans(docsHeavy(s, dir), "doc_id", "text",
-          k = 5, minCount = 2, hashed = false)
+          k = 5, minCount = 2)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id", "span_start")
     }, Some(
@@ -860,7 +870,7 @@ object SparkEntry {
       // by contract); counts are integer-exact and the kept text is
       // string-exact, so the whole detect->strip composition oracles
       DedupOps.stripDuplicateSpans(docsHeavy(s, dir), "doc_id", "text",
-          k = 5, minCount = 2, hashed = false)
+          k = 5, minCount = 2)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id")
     }, Some(
@@ -904,13 +914,11 @@ object SparkEntry {
 
     Q("q_contamination", (s, dir) => {
       // train/benchmark decontamination: docs sharing a word 5-gram with
-      // the held-out "benchmark" slice (doc_id % 5 == 0). String-keyed
-      // variant so the oracle is exact; the hashed variant (8-byte keys,
-      // the 100 TB shape) is asserted equal in OpsSpec
+      // the held-out "benchmark" slice (doc_id % 5 == 0)
       val d = docsHeavy(s, dir)
       DedupOps.contamination(
           d.filter(col("doc_id") % 5 =!= 0), d.filter(col("doc_id") % 5 === 0),
-          "doc_id", "text", k = 5, hashed = false)
+          "doc_id", "text", k = 5)
         .select(col("id").as("doc_id"), col("n_hits"))
         .orderBy("doc_id")
     }, Some(contaminationOracle)),
@@ -957,7 +965,7 @@ object SparkEntry {
       val train = survivors.filter(col("doc_id") % 5 =!= 0)
       val contaminated = DedupOps.contamination(
           train, d.filter(col("doc_id") % 5 === 0),
-          "doc_id", "text", k = 5, hashed = false)
+          "doc_id", "text", k = 5)
         .select(col("id").as("doc_id"))
       train.join(contaminated, Seq("doc_id"), "left_anti")
         .select("doc_id")
@@ -1663,7 +1671,7 @@ object SparkEntry {
       val d = docsHeavy(s, dir)
       BloomOps.contaminationBloom(
           d.filter(col("doc_id") % 5 =!= 0), d.filter(col("doc_id") % 5 === 0),
-          "doc_id", "text", k = 5, hashed = false)
+          "doc_id", "text", k = 5)
         .select(col("id").as("doc_id"), col("n_hits"))
         .orderBy("doc_id")
     }, Some(contaminationOracle)),
@@ -1706,7 +1714,7 @@ object SparkEntry {
       val d = docsHeavy(s, dir)
       DedupOps.contaminationRatio(
           d.filter(col("doc_id") % 5 =!= 0), d.filter(col("doc_id") % 5 === 0),
-          "doc_id", "text", k = 5, thresholdPct = 20, hashed = false)
+          "doc_id", "text", k = 5, thresholdPct = 20)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id")
     }, Some(

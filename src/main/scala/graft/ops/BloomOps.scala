@@ -33,11 +33,8 @@ import org.apache.spark.sql.functions._
   *     result is EXACTLY [[DedupOps.contamination]]'s (bloom errors only
   *     ever ADD verify work, never change the answer).
   *
-  * With `hashed = true` (the 100 TB default) the verify join carries
-  * 8-byte xxhash64 keys; `hashed = false` keeps exact strings for the SQL
-  * oracle — the PROBE still keys on xxhash64 of the string (the bitset is
-  * always hash-indexed), so the pruning is identical and only the verify
-  * key differs.
+  * The verify join keys on the exact shingle strings; the PROBE keys on
+  * their xxhash64 (the bitset is hash-indexed).
   *
   * Probe positions use the Kirsch–Mitzenmacher double-hash family
   * `h_i = h1 + i·h2` (same construction as the MinHash kernel,
@@ -92,8 +89,7 @@ object BloomOps {
       s"numBits must be a positive multiple of 64: $numBits")
     require(numBits <= MaxBits,
       s"numBits $numBits exceeds MaxBits $MaxBits (~16 GiB bitset — the " +
-        "long-array word count must fit an Int); lower bitsPerKey or split " +
-        "the benchmark")
+        "long-array word count must fit an Int); split the benchmark")
     require(numHashes >= 1 && numHashes <= 32,
       s"numHashes must be in [1,32]: $numHashes")
     val schema = keys.schema
@@ -136,26 +132,26 @@ object BloomOps {
     udf((h: Long) => bc.value.contains(h)).apply(col("__bloomKey"))
   }
 
+  /** Bitset size per distinct bench key: 10 bits/key ≈ 1% FP with the
+    * derived optimal hash count.
+    */
+  private val BitsPerKey = 10L
+
   /** [[DedupOps.contamination]] semantics — (id, n_hits) of train docs
     * sharing ≥1 word k-gram with the bench corpus — through the
-    * build→probe→verify shape. `bitsPerKey` sets the FP budget
-    * (10 bits/key ≈ 1% FP with the derived optimal hash count);
+    * build→probe→verify shape, at [[BitsPerKey]] bits per bench key.
     * `numBitsOverride` pins the bitset size directly (tests use a
     * deliberately saturated 64-bit filter to prove verify exactness).
     */
   def contaminationBloom(train: DataFrame, bench: DataFrame,
                          idCol: String, textCol: String,
-                         k: Int = 13, hashed: Boolean = true,
-                         bitsPerKey: Int = 10,
+                         k: Int = 13,
                          numBitsOverride: Long = -1L): DataFrame = {
-    require(bitsPerKey >= 1 && bitsPerKey <= 64,
-      s"bitsPerKey must be in [1,64]: $bitsPerKey")
-    val key = if (hashed) (c: Column) => xxhash64(c) else (c: Column) => c
     // Bench distinct shingles via the builder SHARED with DedupOps'
     // decontamination family (same keying, same cache discipline — the
     // bloom build, the size count, and the verify join all read the same
     // blocks; persist not checkpoint, so lost executors recompute).
-    val benchSet = DedupOps.benchShingleSet(bench, textCol, k, hashed)
+    val benchSet = DedupOps.benchShingleSet(bench, textCol, k)
     val benchRows = benchSet.count()
     if (benchRows == 0) {
       // Empty benchmark: nothing can be contaminated; skip the build
@@ -168,15 +164,14 @@ object BloomOps {
         require(numBitsOverride % 64 == 0,
           s"numBitsOverride must be a multiple of 64: $numBitsOverride")
         numBitsOverride
-      } else ((benchRows * bitsPerKey + 63) / 64) * 64
+      } else ((benchRows * BitsPerKey + 63) / 64) * 64
     val numHashes = hashesFor(numBits, benchRows)
     val model = buildBloom(
       benchSet.select(xxhash64(col("sh")).as("h")), numBits, numHashes)
 
     val trainShingles = train
       .select(col(idCol).as("id"),
-        explode(array_distinct(TextOps.shingles(col(textCol), k))).as("s"))
-      .select(col("id"), key(col("s")).as("sh"))
+        explode(array_distinct(TextOps.shingles(col(textCol), k))).as("sh"))
       .withColumn("__bloomKey", xxhash64(col("sh")))
     val survivors = trainShingles
       .filter(probeCol(trainShingles, model))

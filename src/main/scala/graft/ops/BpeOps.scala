@@ -174,7 +174,7 @@ object BpeOps {
 
   private def trainDistributed(spark: SparkSession, wordFreq: DataFrame,
                                numMerges: Int, minFreq: Long,
-                               batchMerges: Int = 16): Seq[BpeMerge] = {
+                               batchMerges: Int): Seq[BpeMerge] = {
     import spark.implicits._
     require(batchMerges >= 1, s"batchMerges must be >= 1, got $batchMerges")
     var vocab: Dataset[(Seq[String], Long)] = wordFreq.as[(String, Long)]

@@ -787,9 +787,9 @@ object DedupOps {
     }
     org.slf4j.LoggerFactory.getLogger("graft.dedup")
       .info(s"dedupCorpus: dropping $nLosers near-duplicate documents")
-    // type-aware broadcast limit (same idiom as the contamination guard):
-    // 5e7 8-byte numeric ids ~ 0.4 GB, but STRING ids (URLs ~ 100 B) at
-    // that count would blow Spark's 8 GB broadcast ceiling / the driver —
+    // type-aware broadcast limit: 5e7 8-byte numeric ids ~ 0.4 GB, but
+    // STRING ids (URLs ~ 100 B) at that count would blow Spark's 8 GB
+    // broadcast ceiling / the driver —
     // a forced broadcast would kill a job the plain shuffle join completes
     val idIsNumeric = df.schema(idCol).dataType
       .isInstanceOf[org.apache.spark.sql.types.NumericType]
@@ -808,30 +808,25 @@ object DedupOps {
     * Scale shape: the benchmark side (small by nature) is reduced to its
     * distinct shingle set and BROADCAST; the training corpus streams once
     * map-side through the join — no all-pairs comparison, no corpus
-    * shuffle. With `hashed = true` (the 100 TB default) both sides carry
-    * 8-byte xxhash64 shingle keys instead of strings (collision odds
-    * ~n²/2⁶⁴ — a false hit flags a doc for manual review, the right
-    * failure direction for decontamination); `hashed = false` keeps exact
-    * strings (used by the SQL-oracled query).
+    * shuffle. Both sides key on the exact shingle strings.
     *
     * The broadcast is GUARDED, not assumed: the distinct bench shingle set
-    * is materialized once (checkpointed — the count and the join share one
+    * is materialized once (cached — the count and the join share one
     * computation) and the broadcast hint applies only below
-    * `benchBroadcastLimit` rows. The default limit is type-aware: 5×10⁷
-    * 8-byte keys (~0.4 GB) when `hashed`, but 5×10⁶ when the keys are
-    * k-word STRINGS (~100 B each — 5×10⁷ of them would blow Spark's 8 GB
-    * broadcast ceiling). Above the limit the join runs un-hinted — a
-    * shuffle hash/sort-merge join that is slower but completes, instead of
-    * a driver/broadcast OOM on a caller who passed a "benchmark" that is
-    * really a corpus. `benchBroadcastLimit`: `-1` (default) = the
-    * type-aware auto limit; `0` = never broadcast (always shuffle-join);
-    * positive = explicit row limit; other negatives are rejected.
+    * `benchBroadcastLimit` rows. The default limit is 5×10⁶ k-word strings
+    * (~100 B each — 5×10⁷ of them would blow Spark's 8 GB broadcast
+    * ceiling). Above the limit the join runs un-hinted — a shuffle
+    * hash/sort-merge join that is slower but completes, instead of a
+    * driver/broadcast OOM on a caller who passed a "benchmark" that is
+    * really a corpus. `benchBroadcastLimit`: `-1` (default) = that limit;
+    * `0` = never broadcast (always shuffle-join); positive = explicit row
+    * limit; other negatives are rejected.
     */
   def contamination(train: DataFrame, bench: DataFrame,
                     idCol: String, textCol: String,
-                    k: Int = 13, hashed: Boolean = true,
+                    k: Int = 13,
                     benchBroadcastLimit: Long = -1L): DataFrame =
-    contaminationJoined(train, bench, idCol, textCol, k, hashed, benchBroadcastLimit)
+    contaminationJoined(train, bench, idCol, textCol, k, benchBroadcastLimit)
       .groupBy("id")
       .agg(count(lit(1)).as("n_hits")) // shingles are distinct per doc
 
@@ -839,17 +834,17 @@ object DedupOps {
     * doc, shingle position) whose word `k`-gram appears in the benchmark
     * set — the evidence a flagged doc is reviewed against, not just the
     * count. `pos` is the 0-based token index where the matched k-gram
-    * starts; `sh` is the matched shingle (its xxhash64 key when `hashed`).
+    * starts; `sh` is the matched shingle.
     * Same guarded-broadcast scale shape as [[contamination]].
     */
   def contaminationSpans(train: DataFrame, bench: DataFrame,
                          idCol: String, textCol: String,
-                         k: Int = 13, hashed: Boolean = true,
+                         k: Int = 13,
                          benchBroadcastLimit: Long = -1L): DataFrame =
-    contaminationJoined(train, bench, idCol, textCol, k, hashed, benchBroadcastLimit,
+    contaminationJoined(train, bench, idCol, textCol, k, benchBroadcastLimit,
       withPos = true)
 
-  /** The distinct (possibly xxhash64-keyed) bench shingle set, computed
+  /** The distinct bench shingle set `sh`, computed
     * ONCE and cached (persist, NOT checkpoint: lineage stays intact, so a
     * lost executor recomputes the blocks instead of failing the job; the
     * cache is released by Spark's ContextCleaner when the frame is GC'd).
@@ -859,36 +854,28 @@ object DedupOps {
     * NO broadcast hint — that guard belongs to [[benchShingleSide]].
     */
   private[graft] def benchShingleSet(bench: DataFrame, textCol: String,
-                                     k: Int, hashed: Boolean): DataFrame = {
-    val key = if (hashed) (c: Column) => xxhash64(c) else (c: Column) => c
+                                     k: Int): DataFrame =
     bench
-      .select(explode(array_distinct(TextOps.shingles(col(textCol), k))).as("s"))
-      .select(key(col("s")).as("sh"))
+      .select(explode(array_distinct(TextOps.shingles(col(textCol), k))).as("sh"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-  }
 
   /** The guarded bench side shared by every batch decontamination
     * operator: [[benchShingleSet]] plus the broadcast decision. The
-    * broadcast hint applies only below `benchBroadcastLimit` rows, with a
-    * type-aware default (5×10⁷ 8-byte hashed keys ~0.4 GB; 5×10⁶ k-word
-    * strings — 5×10⁷ of them would blow Spark's 8 GB broadcast ceiling).
-    * `-1` = auto, `0` = never broadcast, positive = explicit row limit;
+    * broadcast hint applies only below `benchBroadcastLimit` rows.
+    * `-1` = 5×10⁶ k-word strings, `0` = never broadcast, positive =
+    * explicit row limit;
     * above the limit the set returns un-hinted (shuffle-join fallback —
     * the guard count and the join read the same cached blocks).
     */
   private def benchShingleSide(bench: DataFrame, textCol: String, k: Int,
-                               hashed: Boolean,
                                benchBroadcastLimit: Long,
                                caller: String): DataFrame = {
     require(benchBroadcastLimit >= -1,
       s"benchBroadcastLimit must be -1 (auto), 0 (never broadcast), or a " +
         s"positive row limit; got $benchBroadcastLimit")
-    val limit =
-      if (benchBroadcastLimit >= 0) benchBroadcastLimit
-      else if (hashed) 50000000L
-      else 5000000L
-    val benchSet = benchShingleSet(bench, textCol, k, hashed)
+    val limit = if (benchBroadcastLimit >= 0) benchBroadcastLimit else 5000000L
+    val benchSet = benchShingleSet(bench, textCol, k)
     val benchRows = benchSet.count()
     if (benchRows <= limit) broadcast(benchSet)
     else {
@@ -906,21 +893,17 @@ object DedupOps {
     */
   private def contaminationJoined(train: DataFrame, bench: DataFrame,
                                   idCol: String, textCol: String,
-                                  k: Int, hashed: Boolean,
+                                  k: Int,
                                   benchBroadcastLimit: Long,
                                   withPos: Boolean = false): DataFrame = {
-    def key(c: Column): Column = if (hashed) xxhash64(c) else c
     val benchJoinSide =
-      benchShingleSide(bench, textCol, k, hashed, benchBroadcastLimit,
-        "contamination")
+      benchShingleSide(bench, textCol, k, benchBroadcastLimit, "contamination")
     val trainRows =
       if (withPos)
-        keyedPositionedShingles(train, idCol, textCol, k, hashed)
-          .withColumnRenamed("w", "sh")
+        positionedShingles(train, idCol, textCol, k).withColumnRenamed("w", "sh")
       else
         train.select(col(idCol).as("id"),
-            explode(array_distinct(TextOps.shingles(col(textCol), k))).as("s"))
-          .select(col("id"), key(col("s")).as("sh"))
+          explode(array_distinct(TextOps.shingles(col(textCol), k))).as("sh"))
     trainRows.join(benchJoinSide, "sh")
   }
 
@@ -935,25 +918,22 @@ object DedupOps {
     * Scale shape: ONE map-side window explode; the per-window occurrence
     * count is a `count() OVER (PARTITION BY window)` on the single
     * exchange the flagged rows need anyway — one corpus explode, one
-    * exchange, no join (rows are (id, pos, 8-byte key) ≈ 24 B). The catch
+    * exchange, no join (rows are (id, pos, k-word string)). The catch
     * at scale: window functions get no AQE skew splitting, so an extremely
     * hot boilerplate window concentrates on one reducer, which spills and
     * completes but serializes the stage. Flagged windows merge into
     * maximal regions per doc (variable-gap islands: regions whose coverage
     * overlaps or abuts are ONE region; per-doc window partitions are
-    * bounded by the doc's own window count). With `hashed = true` (the
-    * 100 TB default) windows travel as 8-byte xxhash64 keys; a collision
-    * can only over-flag a span for review — the safe failure direction.
-    * Within-doc repeats count toward `minCount` (text repeated twice in one
-    * document is duplicated text).
+    * bounded by the doc's own window count). Within-doc repeats count
+    * toward `minCount` (text repeated twice in one document is duplicated
+    * text).
     */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
-                     k: Int = 50, minCount: Long = 2,
-                     hashed: Boolean = true): DataFrame = {
+                     k: Int = 50, minCount: Long = 2): DataFrame = {
     require(minCount >= 2,
       s"duplicateSpans: minCount must be >= 2 (a window trivially occurs " +
         s"once — minCount=$minCount would flag every document whole)")
-    val flagged = keyedPositionedShingles(df, idCol, textCol, k, hashed)
+    val flagged = positionedShingles(df, idCol, textCol, k)
       .withColumn("n", count(lit(1)).over(Window.partitionBy("w")))
       .filter(col("n") >= minCount)
     // merge flagged windows into MAXIMAL regions: windows p1 < p2 overlap
@@ -987,9 +967,8 @@ object DedupOps {
     * (small) span array — map-side, inside codegen.
     */
   def stripDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
-                          k: Int = 50, minCount: Long = 2,
-                          hashed: Boolean = true): DataFrame = {
-    val spans = duplicateSpans(df, idCol, textCol, k, minCount, hashed)
+                          k: Int = 50, minCount: Long = 2): DataFrame = {
+    val spans = duplicateSpans(df, idCol, textCol, k, minCount)
       .groupBy("id")
       .agg(collect_list(struct(col("span_start"), col("span_end"))).as("__spans"))
     df.select(col(idCol).as("id"), col(textCol).as("__text"))
@@ -1015,18 +994,15 @@ object DedupOps {
         col("__nrm").cast("int").as("n_removed"))
   }
 
-  /** One row per (doc, window position): the word `k`-gram starting at
-    * that 0-based token index, as a string key or its 8-byte xxhash64
-    * (shared by [[contaminationSpans]] and [[duplicateSpans]] so the two
-    * operators can never disagree on what a window is).
+  /** One row per (doc, window position): the word `k`-gram `w` starting
+    * at that 0-based token index (shared by [[contaminationSpans]] and
+    * [[duplicateSpans]] so the two operators can never disagree on what a
+    * window is).
     */
-  private def keyedPositionedShingles(df: DataFrame, idCol: String, textCol: String,
-                                      k: Int, hashed: Boolean): DataFrame = {
-    val key = if (hashed) (c: Column) => xxhash64(c) else (c: Column) => c
+  private def positionedShingles(df: DataFrame, idCol: String, textCol: String,
+                                 k: Int): DataFrame =
     df.select(col(idCol).as("id"),
-        posexplode(TextOps.shingles(col(textCol), k)).as(Seq("pos", "s")))
-      .select(col("id"), col("pos"), key(col("s")).as("w"))
-  }
+      posexplode(TextOps.shingles(col(textCol), k)).as(Seq("pos", "w")))
 
   /** 64-bit SimHash over token hashes: for each bit, sum ±1 weights over
     * tokens and take the sign. One-pass typed UDF: a Catalyst tree of 64
@@ -1194,16 +1170,15 @@ object DedupOps {
     * array of dropped line indices — bytes proportional to duplicated
     * lines, not to the corpus — under the same guarded-broadcast idiom as
     * [[contamination]] (explicit broadcast while the TOTAL lost-index
-    * count — the actual broadcast payload, ~4 B per index — is below
-    * `loserBroadcastLimit`; un-hinted shuffle join above it. Rows are the
+    * count — the actual broadcast payload, ~4 B per index — is at most
+    * 5×10⁷ (~0.2 GB); un-hinted shuffle join above it. Rows are the
     * wrong unit here: each doc row carries a variable-length index
     * array). Docs with no
     * duplicated line pass through map-side untouched, and the rebuild is a
     * codegen'd index filter against the doc's own split array.
     */
   def dedupLinesGlobal(df: DataFrame, idCol: String, textCol: String,
-                       sep: String = "\n",
-                       loserBroadcastLimit: Long = 50000000L): DataFrame = {
+                       sep: String = "\n"): DataFrame = {
     val sepLit = java.util.regex.Pattern.quote(sep)
     val lines = df.select(col(idCol).as("__id"),
         posexplode(split(col(textCol), sepLit)).as(Seq("__idx", "__line")))
@@ -1227,7 +1202,7 @@ object DedupOps {
       case null => 0L
       case v: Long => v
     }
-    val joinSide = if (totalLostIdx <= loserBroadcastLimit) broadcast(lost) else lost
+    val joinSide = if (totalLostIdx <= 50000000L) broadcast(lost) else lost
     val rebuilt = df.join(joinSide, df(idCol) === joinSide("__id"), "left")
       .withColumn("__lostArr", coalesce(col("__lost"), array().cast("array<int>")))
     rebuilt.select(col(idCol).as("id"),
@@ -1253,27 +1228,22 @@ object DedupOps {
     * than `k` tokens have no shingles and are never flagged.
     *
     * Scale shape: identical to [[contamination]] — the bench side reduces
-    * to its distinct shingle set under the same type-aware guarded
-    * broadcast (`hashed = true` carries 8-byte xxhash64 keys at 100 TB;
-    * exact strings remain the oracle-checked default here), and the train
-    * side streams map-side: explode distinct shingles, LEFT-join the bench
-    * set, one hash aggregate per doc. No corpus shuffle below the guard.
+    * to its distinct shingle set under the same guarded broadcast, and the
+    * train side streams map-side: explode distinct shingles, LEFT-join the
+    * bench set, one hash aggregate per doc. No corpus shuffle below the
+    * guard.
     */
   def contaminationRatio(train: DataFrame, bench: DataFrame,
                          idCol: String, textCol: String,
                          k: Int = 5, thresholdPct: Int = 20,
-                         hashed: Boolean = false,
                          benchBroadcastLimit: Long = -1L): DataFrame = {
     require(thresholdPct >= 0 && thresholdPct <= 100,
       s"thresholdPct must be in [0, 100], got $thresholdPct")
-    def key(c: Column): Column = if (hashed) xxhash64(c) else c
     val benchJoinSide =
-      benchShingleSide(bench, textCol, k, hashed, benchBroadcastLimit,
-        "contaminationRatio")
+      benchShingleSide(bench, textCol, k, benchBroadcastLimit, "contaminationRatio")
         .withColumn("__hit", lit(1))
     train.select(col(idCol).as("id"),
-        explode_outer(array_distinct(TextOps.shingles(col(textCol), k))).as("s"))
-      .select(col("id"), when(col("s").isNotNull, key(col("s"))).as("sh"))
+        explode_outer(array_distinct(TextOps.shingles(col(textCol), k))).as("sh"))
       .join(benchJoinSide, Seq("sh"), "left")
       .groupBy("id")
       .agg(count(col("sh")).cast("int").as("n_sh"),

@@ -104,9 +104,14 @@ object LmOps {
   }
 
   /** Tagged model elements for [[ngramLm]]'s single-pass build (see the
-    * kind encoding there). Context positions follow [[contextsOf]]'s
-    * convention (ALL (n-1)-gram occurrences, including the text-final
-    * one); n-gram positions follow [[ngramsOf]]'s.
+    * kind encoding there). Contexts are ALL (n-1)-gram occurrences —
+    * including the text-final one with no following word — matching
+    * [[bigramLm]]'s denominator convention (c1 is the TOTAL unigram
+    * count), so `ngramLm(ref, c, 2)` reproduces the bigram model's
+    * probabilities exactly (spec-pinned). Per-context probability mass can
+    * then sum below 1 at text boundaries; the add-one floor absorbs it,
+    * and the convention is shared with the oracle. N-gram positions
+    * follow [[ngramsOf]]'s.
     */
   private def taggedModelElems(toksExpr: Column, n: Int): Column =
     TextOps.bindOnce(toksExpr) { toks =>
@@ -141,21 +146,6 @@ object LmOps {
           i => struct(
             concat_ws(" ", slice(toks, i, lit(n - 1))).as("ctx"),
             element_at(toks, i + (n - 1)).as("w"))))
-    }
-
-  /** ALL (n-1)-gram occurrences — including the text-final one with no
-    * following word — matching [[bigramLm]]'s denominator convention
-    * (c1 is the TOTAL unigram count), so `ngramLm(ref, c, 2)` reproduces
-    * the bigram model's probabilities exactly (spec-pinned). Per-context
-    * probability mass can then sum below 1 at text boundaries; the
-    * add-one floor absorbs it, and the convention is shared with the
-    * oracle.
-    */
-  private def contextsOf(toksExpr: Column, n: Int): Column =
-    TextOps.bindOnce(toksExpr) { toks =>
-      when(size(toks) < n - 1, array().cast("array<string>"))
-        .otherwise(transform(sequence(lit(1), size(toks) - (n - 2)),
-          i => concat_ws(" ", slice(toks, i, lit(n - 1)))))
     }
 
   /** Order-n [[perplexityBits]]: `(id, n_ngrams, bits)`, same decimal

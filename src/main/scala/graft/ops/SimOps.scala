@@ -169,7 +169,7 @@ object SimOps {
     * shuffle (asserted in PlanSpec).
     */
   def assignCells(corpus: DataFrame, centroids: Array[Array[Double]],
-                  idCol: String = "neighbor_id", vecCol: String = "cv"): DataFrame = {
+                  vecCol: String = "cv"): DataFrame = {
     val bc = corpus.sparkSession.sparkContext.broadcast(centroids)
     val cellUdf = udf { (v: Seq[Float]) => bestCell(bc.value, v) }
     corpus.withColumn("cell", cellUdf(col(vecCol)))

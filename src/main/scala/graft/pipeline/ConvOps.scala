@@ -63,14 +63,6 @@ object ConvOps {
         col("n_violations") <= maxViolations &&
         col("n_empty") * 100 <= col("n_turns") * maxEmptyPct)
 
-  /** Render each conversation into one role-tagged training document:
-    * turns in stable (conv_id, turn_idx) order, each prefixed
-    * `<|role|>`, joined with newlines. Sorting happens inside the
-    * collected array (never by partition luck); the one-row-per-conv
-    * output bound is inherent to the contract, as with
-    * [[ConvAssembly.assemble]] — use [[ConvAssembly.assembleSalted]]'s
-    * two-phase shape when turn-count skew is heavy.
-    */
   /** Content fingerprint of every conversation: md5 over the md5s of its
     * turns in stable order — `(conv_id, n_turns, conv_fp)`. Two
     * conversations match iff their ordered turn-content sequences match;
@@ -152,6 +144,14 @@ object ConvOps {
       .select("id_a", "id_b", "inter", "union")
   }
 
+  /** Render each conversation into one role-tagged training document:
+    * turns in stable (conv_id, turn_idx) order, each prefixed
+    * `<|role|>`, joined with newlines. Sorting happens inside the
+    * collected array (never by partition luck); the one-row-per-conv
+    * output bound is inherent to the contract, as with
+    * [[ConvAssembly.assemble]] — use [[ConvAssembly.assembleSalted]]'s
+    * two-phase shape when turn-count skew is heavy.
+    */
   def renderChatTemplate(turns: DataFrame, textCol: String = "text"): DataFrame =
     turns.groupBy("conv_id").agg(
       count(lit(1)).as("n_turns"),

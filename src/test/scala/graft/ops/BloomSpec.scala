@@ -2,6 +2,9 @@ package graft.ops
 
 import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,10 +40,8 @@ class BloomSpec extends AnyFunSuite with SparkSuite {
     val d = corpus
     val train = d.filter(col("doc_id") % 5 =!= 0)
     val bench = d.filter(col("doc_id") % 5 === 0)
-    val exact = asMap(DedupOps.contamination(train, bench, "doc_id", "text",
-      k = 5, hashed = false))
-    val bloomed = asMap(BloomOps.contaminationBloom(train, bench, "doc_id", "text",
-      k = 5, hashed = false))
+    val exact = asMap(DedupOps.contamination(train, bench, "doc_id", "text", k = 5))
+    val bloomed = asMap(BloomOps.contaminationBloom(train, bench, "doc_id", "text", k = 5))
     assert(exact.nonEmpty, "planted contamination must be detected")
     assert(bloomed == exact)
   }
@@ -49,22 +50,10 @@ class BloomSpec extends AnyFunSuite with SparkSuite {
     val d = corpus
     val train = d.filter(col("doc_id") % 5 =!= 0)
     val bench = d.filter(col("doc_id") % 5 === 0)
-    val exact = asMap(DedupOps.contamination(train, bench, "doc_id", "text",
-      k = 5, hashed = true))
+    val exact = asMap(DedupOps.contamination(train, bench, "doc_id", "text", k = 5))
     val bloomed = asMap(BloomOps.contaminationBloom(train, bench, "doc_id", "text",
-      k = 5, hashed = true, numBitsOverride = 64))
+      k = 5, numBitsOverride = 64))
     assert(bloomed == exact)
-  }
-
-  test("hashed and string-keyed paths agree") {
-    val d = corpus
-    val train = d.filter(col("doc_id") % 5 =!= 0)
-    val bench = d.filter(col("doc_id") % 5 === 0)
-    val s = asMap(BloomOps.contaminationBloom(train, bench, "doc_id", "text",
-      k = 5, hashed = false))
-    val h = asMap(BloomOps.contaminationBloom(train, bench, "doc_id", "text",
-      k = 5, hashed = true))
-    assert(s == h)
   }
 
   test("build is deterministic across partitionings and has no false negatives") {
@@ -95,8 +84,7 @@ class BloomSpec extends AnyFunSuite with SparkSuite {
     val bench = spark.createDataFrame((0 until 50).map { i =>
       (i.toLong, (0 until 30).map(_ => "b" + rnd.nextInt(100000)).mkString(" "))
     }).toDF("doc_id", "text")
-    val hits = BloomOps.contaminationBloom(train, bench, "doc_id", "text",
-      k = 5, hashed = true, bitsPerKey = 10).count()
+    val hits = BloomOps.contaminationBloom(train, bench, "doc_id", "text", k = 5).count()
     assert(hits == 0, "disjoint vocabularies cannot be contaminated")
     // The exactness tests above prove survivors collapse to the true
     // answer; here the end result of a clean corpus stays clean even
@@ -107,11 +95,21 @@ class BloomSpec extends AnyFunSuite with SparkSuite {
     val d = corpus
     val out = BloomOps.contaminationBloom(
       d.filter(col("doc_id") % 5 =!= 0), d.filter(col("doc_id") % 5 === 0),
-      "doc_id", "text", k = 5, hashed = true)
-    val phys = out.queryExecution.executedPlan.toString
-    assert(phys.contains("Filter UDF("),
-      "the map-side bloom probe must prune the train stream before the verify join")
-    assert(!phys.contains("Window"), "no window anywhere in the decontamination plan")
+      "doc_id", "text", k = 5)
+    val plan = out.queryExecution.sparkPlan
+    // the train side of the verify join is the one that explodes train
+    // text (the bench side is the cached shingle set); some filter there,
+    // above the explode, must call the probe UDF
+    val trainSides = plan.collect { case j: BaseJoinExec => j.children }.flatten
+      .filter(_.exists(_.isInstanceOf[GenerateExec]))
+    assert(trainSides.nonEmpty, plan.treeString)
+    assert(trainSides.exists(_.exists {
+      case f: FilterExec =>
+        f.condition.exists(_.isInstanceOf[ScalaUDF]) && f.child.exists(_.isInstanceOf[GenerateExec])
+      case _ => false
+    }), s"the map-side bloom probe must prune the train stream before the verify join:\n${plan.treeString}")
+    assert(!out.queryExecution.executedPlan.toString.contains("Window"),
+      "no window anywhere in the decontamination plan")
   }
 
   test("hashesFor rejects an empty key set; empty bench short-circuits") {

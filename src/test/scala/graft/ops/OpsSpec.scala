@@ -500,16 +500,10 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val bench = spark.createDataFrame(Seq(
       (10L, "aa bb cc qq dd ee ff")
     )).toDF("doc_id", "text")
-    val spans = DedupOps.contaminationSpans(train, bench, "doc_id", "text",
-        k = 3, hashed = false)
+    val spans = DedupOps.contaminationSpans(train, bench, "doc_id", "text", k = 3)
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("pos"), r.getAs[String]("sh")))
       .toSet
     assert(spans == Set((1L, 0, "aa bb cc"), (1L, 3, "dd ee ff")))
-    // hashed variant flags the same (doc, pos) hits
-    val hashedSpans = DedupOps.contaminationSpans(train, bench, "doc_id", "text",
-        k = 3, hashed = true)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("pos"))).toSet
-    assert(hashedSpans == Set((1L, 0), (1L, 3)))
   }
 
   test("exactDupReps: linear form agrees with the windowed ranks, plans no window") {
@@ -544,23 +538,19 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(nr == Map(1L -> ((1L, 1L, true)), 7L -> ((7L, 2L, true)), 8L -> ((7L, 2L, false))))
   }
 
-  test("contaminationSpans: hashed (the 100 TB default) == string-keyed on the planted corpus") {
-    // the counting operator has this equality pinned; the spans operator's
-    // hashed path must agree with the string-keyed oracle form on exact
-    // (id, pos) hit sets too — planted copies guarantee dense hits
+  test("contaminationSpans: planted corpus hits match contamination's counts") {
+    // planted copies guarantee dense hits; each doc's distinct matched
+    // shingles are exactly what the counting operator counts
     val bench = docsDf.filter(col("doc_id") < 30)
     val train = docsDf.filter(col("doc_id") >= 1000)
-    val exact = DedupOps.contaminationSpans(train, bench, "doc_id", "text",
-        k = 5, hashed = false)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("pos"))).toSet
-    val hashed = DedupOps.contaminationSpans(train, bench, "doc_id", "text",
-        k = 5, hashed = true)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("pos"))).toSet
-    assert(exact == hashed,
-      s"only-exact=${(exact -- hashed).take(5)} only-hashed=${(hashed -- exact).take(5)}")
+    val spans = DedupOps.contaminationSpans(train, bench, "doc_id", "text", k = 5)
+      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("pos"), r.getAs[String]("sh")))
+    val counts = DedupOps.contamination(train, bench, "doc_id", "text", k = 5)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(spans.groupBy(_._1).view.mapValues(_.map(_._3).distinct.length.toLong).toMap == counts)
     // every planted copy hits at many positions (its source is in bench)
     (0 until 30).foreach { i =>
-      assert(exact.count(_._1 == 1000L + i) > 20, s"planted ${1000 + i} under-flagged")
+      assert(spans.count(_._1 == 1000L + i) > 20, s"planted ${1000 + i} under-flagged")
     }
   }
 
@@ -637,7 +627,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(dup.size == 1)
   }
 
-  test("duplicateSpans: maximal merged regions, within-doc repeats, true gaps, hashed==string") {
+  test("duplicateSpans: maximal merged regions, within-doc repeats, true gaps") {
     // docs 1 and 2 share "p q r s t u v" (7 tokens -> five 3-gram windows
     // at pos 2..6 of doc 1 -> span [2, 8]); doc 3 repeats its own phrase
     // back to back (abutting coverage merges into ONE region); doc 4
@@ -650,8 +640,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       (4L, "one two three four five six seven eight"),
       (5L, "s1 s2 s3 gapa gapb gapc gapd gape t1 t2 t3"),
       (6L, "s1 s2 s3 xgapa xgapb xgapc xgapd xgape t1 t2 t3"))).toDF("doc_id", "text")
-    val spans = DedupOps.duplicateSpans(df, "doc_id", "text", k = 3, minCount = 2,
-        hashed = false)
+    val spans = DedupOps.duplicateSpans(df, "doc_id", "text", k = 3, minCount = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
     assert(spans.contains((1L, 2, 8)), spans.toString)
     assert(spans.contains((2L, 1, 7)), spans.toString)
@@ -672,11 +661,6 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
         case _ =>
       }
     }
-    // hashed variant flags identical spans on this corpus
-    val hashed = DedupOps.duplicateSpans(df, "doc_id", "text", k = 3, minCount = 2,
-        hashed = true)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    assert(hashed == spans)
     intercept[IllegalArgumentException] {
       DedupOps.duplicateSpans(df, "doc_id", "text", k = 3, minCount = 1)
     }
@@ -688,8 +672,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       (2L, "x p q r s t u v y z w"),
       (3L, "m n o e f m n o e f g"),
       (4L, "one two three four five six seven eight"))).toDF("doc_id", "text")
-    val r = DedupOps.stripDuplicateSpans(df, "doc_id", "text", k = 3, minCount = 2,
-        hashed = false)
+    val r = DedupOps.stripDuplicateSpans(df, "doc_id", "text", k = 3, minCount = 2)
       .collect().map(row => row.getLong(0) ->
         ((row.getString(1), row.getInt(2), row.getInt(3)))).toMap
     assert(r(1L) == (("a b c d", 11, 7)))       // span [2,8] removed
@@ -844,16 +827,13 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       s"expected a non-empty cell partition filter in the index scan:\n$plan")
   }
 
-  test("contamination: hashed and string-keyed variants agree; planted overlap found") {
+  test("contamination: planted overlap found") {
     // planted docs (1000+i copies of i with one word appended) share
     // nearly all 5-grams with their originals: put originals in "bench"
     val bench = docsDf.filter(col("doc_id") < 30)
     val train = docsDf.filter(col("doc_id") >= 1000)
-    val exact = DedupOps.contamination(train, bench, "doc_id", "text", k = 5, hashed = false)
+    val exact = DedupOps.contamination(train, bench, "doc_id", "text", k = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hashed = DedupOps.contamination(train, bench, "doc_id", "text", k = 5, hashed = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(exact == hashed)
     // every planted copy of a bench doc must be flagged with many hits
     (0 until 30).foreach { i =>
       assert(exact.getOrElse(1000L + i, 0L) > 20, s"planted ${1000 + i} not flagged")

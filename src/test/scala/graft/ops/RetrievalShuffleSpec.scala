@@ -229,17 +229,6 @@ class RetrievalShuffleSpec extends AnyFunSuite with SparkSuite {
       (1L, 3, 1, 1), (2L, 5, 0, 0), (3L, 5, 2, 1), (4L, 5, 1, 1), (5L, 0, 0, 0)))
   }
 
-  test("contaminationRatio: hashed and string keys agree") {
-    val bench = df(Seq((100L, "a b c d e")))
-    val train = df((0L until 40L).map(i =>
-      (i, if (i % 3 == 0) s"a b c d e tail$i" else s"u$i v$i w$i x$i y$i z$i")))
-    val s = DedupOps.contaminationRatio(train, bench, "doc_id", "text", k = 5, hashed = false)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))).sortBy(_._1)
-    val h = DedupOps.contaminationRatio(train, bench, "doc_id", "text", k = 5, hashed = true)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))).sortBy(_._1)
-    assert(s.toSeq == h.toSeq)
-  }
-
   // ---- bpeEncodeDocs ------------------------------------------------------
 
   test("bpeEncodeDocs matches per-word bpeSegment composition (incl. whitespace edges)") {
